@@ -17,17 +17,43 @@ docid_min long, docid_max long, max_tf double, docids binary, tfs binary)``
   range — a term's postings never have to fit in one task's memory.
 
 Pure-python codec kept allocation-light; executed inside Arrow-batched
-``applyInPandas`` (per (term, range) groups), never per-row Python.
+``applyInPandas`` / ``mapInPandas`` (per (term, range) groups, or per
+batch of block rows), never per-row Python.
+
+Python tasks on the request path. Every PySpark task pays a fixed CPU
+cost to start (about 200 ms on a 4-core x86 host, most of it the
+worker's per-task import-cache reset), whether it gets 0 rows or 10k.
+So a request that serves from the block store follows two rules:
+
+* **Decode sizing.** A decode sized by a posting-count estimate runs in
+  ``ceil(est / POSTINGS_PER_DECODE_TASK)`` tasks (never more than the
+  block scan has splits): the term-filtered scan is coalesced before
+  ``mapInPandas``, so empty file splits never start a Python worker and
+  a hot term still decodes in parallel. Decodes without an estimate
+  keep the scan's own partitioning.
+* **No Python-RDD relations.** Small driver-side relations (term
+  weights, top-k heaps, tombstone sets, empty results) are built with
+  ``relations.local_relation`` — a JVM ``LocalTableScan`` — never with
+  ``spark.createDataFrame(<python list>)``, whose ``Scan ExistingRDD``
+  starts ``defaultParallelism`` Python tasks every time it is read.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+import math
+from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+DEFAULT_BLOCK_SIZE = 1 << 14  # postings per block
+
+# postings one sized decode task handles: 64 full blocks. The varint
+# decode costs ~3 ms per full block on a 4-core x86 host, so one task's
+# decode work is about its ~200 ms fixed start-up cost
+POSTINGS_PER_DECODE_TASK = 64 * DEFAULT_BLOCK_SIZE
 
 BLOCK_SCHEMA = (
     "term string, range_id int, block_id int, n int, docid_min long, "
@@ -78,7 +104,7 @@ def decode_varint_deltas(blob: bytes, n: int) -> np.ndarray:
 def build_posting_blocks(
     postings: DataFrame,
     range_size: int = 1 << 20,
-    block_size: int = 1 << 14,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> DataFrame:
     """postings(term, _docid, tf) -> compressed block table.
 
@@ -135,7 +161,9 @@ def decode_block(row) -> Tuple[np.ndarray, np.ndarray]:
     return docids, tfs
 
 
-def postings_from_blocks(blocks: DataFrame) -> DataFrame:
+def postings_from_blocks(
+    blocks: DataFrame, est: Optional[int] = None
+) -> DataFrame:
     """Decode a (filtered) block table back to row-level postings
     (term, _docid, tf) — Arrow-batched, one pass, no shuffle.
 
@@ -143,8 +171,21 @@ def postings_from_blocks(blocks: DataFrame) -> DataFrame:
     is then a parquet-scan predicate on the compressed table; row-group
     min/max on the term-sorted layout prunes IO). A filter applied to
     the returned frame would instead decode everything first — Catalyst
-    cannot push predicates through mapInPandas."""
+    cannot push predicates through mapInPandas.
+
+    ``est`` is the caller's estimate of the postings the filter keeps,
+    from counts the driver already holds (a facet value's global doc
+    count, a term's df). When given, the filtered scan is coalesced to
+    ``ceil(est / POSTINGS_PER_DECODE_TASK)`` partitions before the
+    decode, so a selective decode starts one Python task instead of one
+    per file split. Without it the scan's own partitioning stays (the
+    right shape for whole-store decodes: compaction, checkpoints)."""
     from .indexer import DOCID
+
+    if est is not None:
+        blocks = blocks.coalesce(
+            max(1, math.ceil(est / POSTINGS_PER_DECODE_TASK))
+        )
 
     def decode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
@@ -153,10 +194,12 @@ def postings_from_blocks(blocks: DataFrame) -> DataFrame:
             terms: List[np.ndarray] = []
             ids: List[np.ndarray] = []
             tfs: List[np.ndarray] = []
-            for _, row in pdf.iterrows():
-                d = decode_varint_deltas(bytes(row["docids"]), int(row["n"]))
-                t = np.frombuffer(bytes(row["tfs"]), dtype=np.float64)
-                terms.append(np.repeat(row["term"], len(d)))
+            for term, n, blob, tf_blob in zip(
+                pdf["term"], pdf["n"], pdf["docids"], pdf["tfs"]
+            ):
+                d = decode_varint_deltas(bytes(blob), int(n))
+                t = np.frombuffer(bytes(tf_blob), dtype=np.float64)
+                terms.append(np.repeat(term, len(d)))
                 ids.append(d)
                 tfs.append(t)
             yield pd.DataFrame(

@@ -39,7 +39,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import build_posting_blocks
+from .blocks import DEFAULT_BLOCK_SIZE, build_posting_blocks
 
 # underscore prefix: invisible to Spark's file index (like _SUCCESS),
 # so the manifest can live next to the data it describes
@@ -187,7 +187,7 @@ def build_blocks_checkpointed(
     out_path: str,
     n_buckets: int = 32,
     range_size: int = 1 << 20,
-    block_size: int = 1 << 14,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> Dict[str, object]:
     """Build the compressed posting-block table under ``out_path``,
     bucket by bucket, skipping buckets whose checkpoint already exists.
@@ -246,7 +246,7 @@ def append_blocks_checkpointed(
     snapshot: str,
     n_buckets: int = 32,
     range_size: int = 1 << 20,
-    block_size: int = 1 << 14,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> Dict[str, object]:
     """Per-bucket snapshot APPEND to an existing block store: encode the
     delta's blocks and move them into each bucket directory under
@@ -346,7 +346,7 @@ def compact_blocks(
     out_path: str,
     n_buckets: int,
     range_size: int = 1 << 20,
-    block_size: int = 1 << 14,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> Dict[str, object]:
     """Offline maintenance: fold every snapshot's ``snap-*`` delta files
     back into one optimally-packed block set per bucket (many small

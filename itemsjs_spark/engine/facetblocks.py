@@ -31,13 +31,18 @@ scan):
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence
+from typing import Dict, Iterable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocks import build_posting_blocks, postings_from_blocks
+from .blocks import (
+    DEFAULT_BLOCK_SIZE,
+    build_posting_blocks,
+    postings_from_blocks,
+)
 from .indexer import DOCID, FK_PREFIX, Index
+from .relations import local_relation
 
 SEP = "\x1f"  # unit separator: cannot appear in JS-coerced facet keys
 
@@ -62,8 +67,8 @@ def facet_postings_for_docs(
             )
         )
     if not parts:
-        return docs.sparkSession.createDataFrame(
-            [], f"term string, {DOCID} long, tf double"
+        return local_relation(
+            docs.sparkSession, [], f"term string, {DOCID} long, tf double"
         )
     out = parts[0]
     for p in parts[1:]:
@@ -77,7 +82,9 @@ def facet_postings(index: Index) -> DataFrame:
 
 
 def build_facet_blocks(
-    index: Index, range_size: int = 1 << 20, block_size: int = 1 << 14
+    index: Index,
+    range_size: int = 1 << 20,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> DataFrame:
     """Compressed facet-posting blocks (blocks.py layout; same docid
     ranges as the fulltext blocks so future combined ops co-locate)."""
@@ -86,10 +93,14 @@ def build_facet_blocks(
     )
 
 
-def _subset(fblocks: DataFrame, terms: Sequence[str]) -> DataFrame:
+def _subset(
+    fblocks: DataFrame, terms: Sequence[str], est: Optional[int] = None
+) -> DataFrame:
     """Decode only the requested values' blocks (term predicate lands on
-    the compressed scan)."""
-    return postings_from_blocks(fblocks.filter(F.col("term").isin(list(terms))))
+    the compressed scan); ``est`` sizes the decode (postings_from_blocks)."""
+    return postings_from_blocks(
+        fblocks.filter(F.col("term").isin(list(terms))), est=est
+    )
 
 
 def _dedup(preds):
@@ -136,11 +147,22 @@ class BlockSetAlgebra:
     Results are memoized per instance by IR shape, so the shared
     conjunctive+negative core of per-field bucket predicates
     (helpers.ts:147-253) is planned once per request.
+
+    ``value_counts`` (field → key → global doc count, the engine's
+    cached facet dimension) sizes each contains leaf's decode: a value's
+    doc count is its posting count. Leaves of values it lacks decode
+    with the scan's own partitioning.
     """
 
-    def __init__(self, index: Index, fblocks: DataFrame):
+    def __init__(
+        self,
+        index: Index,
+        fblocks: DataFrame,
+        value_counts: Optional[Dict[str, Dict[str, int]]] = None,
+    ):
         self.index = index
         self.fblocks = fblocks
+        self.value_counts = value_counts or {}
         self._memo: dict = {}
 
     def universe(self) -> DataFrame:
@@ -159,6 +181,21 @@ class BlockSetAlgebra:
             self._memo[key] = self._eval(pred)
         return self._memo[key]
 
+    def persist(self, preds: Iterable[tuple]) -> List[DataFrame]:
+        """Persist the docid sets of ``preds``, inner sets first, and
+        return them (the caller unpersists). A cached set's plan reads
+        only the caches that exist when it is persisted; with the inner
+        sets persisted first, the first action through an outer set
+        fills every inner cache too, so no posting list decodes twice."""
+        uniq = {_freeze(p): p for p in preds}
+        out: List[DataFrame] = []
+        # an inner set's canonical key is part of its outer sets' keys
+        for key in sorted(uniq, key=lambda k: len(repr(k))):
+            s = self.docids(uniq[key])
+            if not isinstance(s, bool):
+                out.append(s.persist())
+        return out
+
     def _eval(self, pred: tuple):
         op = pred[0]
         if op == "true":
@@ -166,7 +203,10 @@ class BlockSetAlgebra:
         if op == "false":
             return False
         if op == "contains":
-            return _subset(self.fblocks, [pred[1] + SEP + pred[2]]).select(DOCID)
+            est = self.value_counts.get(pred[1], {}).get(pred[2])
+            return _subset(
+                self.fblocks, [pred[1] + SEP + pred[2]], est=est
+            ).select(DOCID)
         if op == "hasvalue":
             return (
                 postings_from_blocks(

@@ -45,6 +45,8 @@ from pyspark.sql import types as T
 
 from ..analysis.lunr_analysis import build_pipeline, tokenize
 from ..core import scoring
+from .blocks import DEFAULT_BLOCK_SIZE
+from .relations import local_relation
 
 FK_PREFIX = "__fk_"
 DOCID = "_docid"
@@ -251,7 +253,7 @@ def assign_docids(
         all_dense = all_dense and bool(r["__dense"])
     if not bases:
         bases = [(0, 0)]
-    base_df = spark.createDataFrame(bases, "__rid int, __base long")
+    base_df = local_relation(spark, bases, "__rid int, __base long")
 
     w_range = (
         Window.partitionBy("__rid")
@@ -368,12 +370,16 @@ class Index:
         """Offset base for appends/merges: past every assigned docid."""
         return self.docid_ceiling if self.docid_ceiling is not None else self.n_docs
 
-    def postings_subset(self, terms: Sequence[str]) -> DataFrame:
+    def postings_subset(
+        self, terms: Sequence[str], est: Optional[int] = None
+    ) -> DataFrame:
         """Row-level postings restricted to ``terms`` — THE read API for
         scorers. On a block-backed index the term predicate lands on the
         compressed parquet scan (PushedFilters + row-group pruning on
-        the term-sorted layout) and only matching blocks are decoded; on
-        a row-level index it narrows the postings scan the same way."""
+        the term-sorted layout) and only matching blocks are decoded,
+        the decode sized by ``est`` (the terms' summed df, see
+        blocks.postings_from_blocks); on a row-level index it narrows
+        the postings scan the same way."""
         term_list = list(terms)
         if self.postings is not None:
             return self.postings.filter(F.col("term").isin(term_list))
@@ -382,7 +388,7 @@ class Index:
         from .blocks import postings_from_blocks
 
         return postings_from_blocks(
-            self.posting_blocks.filter(F.col("term").isin(term_list))
+            self.posting_blocks.filter(F.col("term").isin(term_list)), est=est
         )
 
     @property
@@ -492,7 +498,7 @@ class Index:
         path: str,
         n_buckets: int = 32,
         range_size: int = 1 << 20,
-        block_size: int = 1 << 14,
+        block_size: int = DEFAULT_BLOCK_SIZE,
     ) -> Dict[str, Any]:
         """Persist with postings as the CHECKPOINTED compressed block
         store (delta+varint, per-bucket manifests with lineage/metrics —
@@ -709,7 +715,7 @@ def _rank_facet_dim(fv: DataFrame, old_rank_col: Optional[str] = None) -> DataFr
         base = run.get(r["field"], 0)
         rows.append((int(r["__rid"]), r["field"], base))
         run[r["field"]] = base + int(r["__c"])
-    odf = spark.createDataFrame(rows, "__rid int, field string, __base long")
+    odf = local_relation(spark, rows, "__rid int, field string, __base long")
     w = Window.partitionBy("__rid", "field").orderBy(*order)
     return (
         rep.join(F.broadcast(odf), ["__rid", "field"])
@@ -1008,8 +1014,8 @@ def build_index(
     if fv is not None:
         facet_values = _rank_facet_dim(fv).persist()  # small dimension
     else:
-        facet_values = spark.createDataFrame(
-            [], "field string, key string, doc_count long, enum_rank int"
+        facet_values = local_relation(
+            spark, [], "field string, key string, doc_count long, enum_rank int"
         )
 
     # fulltext postings

@@ -21,7 +21,17 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import (
+    Any,
+    Callable,
+    Dict,
+    Iterable,
+    Iterator,
+    List,
+    Optional,
+    Sequence,
+    Tuple,
+)
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -32,6 +42,7 @@ from ..analysis.lunr_analysis import build_pipeline, tokenize
 from ..core import facetir, scoring
 from ..jsutil import humanize, js_key
 from .indexer import DOCID, FK_PREFIX, RAW_PREFIX, Index
+from .relations import local_relation
 
 IN_QUERY = "__in_query"
 SCORE = "__score"
@@ -320,7 +331,9 @@ class SearchEngine:
         # materialized — see release_expansion_caches
         self._expansion_caches: List[DataFrame] = []
         # driver-side sorted terms dictionary (see _term_dictionary)
-        self._term_dict_data: Optional[Tuple[List[str], List[float]]] = None
+        self._term_dict_data: Optional[
+            Tuple[List[str], List[float], Optional[List[int]]]
+        ] = None
         self._term_dict_checked = False
         # opt-in positional postings (enable_positions): field ->
         # DataFrame(term, _docid, positions) cached hash-partitioned by
@@ -545,8 +558,10 @@ class SearchEngine:
                     self._tombstone_setdf is None
                     or self._tombstone_setdf_n != len(t)
                 ):
-                    self._tombstone_setdf = self.spark.createDataFrame(
-                        [(int(d),) for d in sorted(t)], f"{DOCID} long"
+                    self._tombstone_setdf = local_relation(
+                        self.spark,
+                        [(int(d),) for d in sorted(t)],
+                        f"{DOCID} long",
                     )
                     self._tombstone_setdf_n = len(t)
                 df = df.join(
@@ -668,7 +683,8 @@ class SearchEngine:
             fs.delete(final)
             fs.delete(tmp)
             return
-        tomb = self.spark.createDataFrame(
+        tomb = local_relation(
+            self.spark,
             [(int(d),) for d in sorted(self._tombstone_docids)],
             f"{DOCID} long",
         )
@@ -829,9 +845,12 @@ class SearchEngine:
     # dictionary-scan job
     MAX_DRIVER_TERM_DICT = 1_000_000
 
-    def _term_dictionary(self) -> Optional[Tuple[List[str], List[float]]]:
-        """(sorted term list, aligned idf list), collected ONCE and
-        cached on the driver — or None for vocabularies over
+    def _term_dictionary(
+        self,
+    ) -> Optional[Tuple[List[str], List[float], Optional[List[int]]]]:
+        """(sorted term list, aligned idf list, aligned df list or None
+        when the terms table has no df), collected ONCE and cached on
+        the driver — or None for vocabularies over
         ``MAX_DRIVER_TERM_DICT``. This is the reference's own structure
         (its index is a driver-resident trie, src/fulltext.ts); holding
         the ≤~50 MB dictionary removes one Spark job from EVERY query's
@@ -848,16 +867,40 @@ class SearchEngine:
         # ONE bounded job: collect cap+1 rows via Arrow and decide
         # over/under from the row count (a separate limit().count() probe
         # would scan the terms table twice).
+        has_df = "df" in idx.terms.columns
         pdf = (
-            idx.terms.select("term", "idf")
+            idx.terms.select("term", "idf", *(["df"] if has_df else []))
             .limit(self.MAX_DRIVER_TERM_DICT + 1)
             .toPandas()
         )
         if len(pdf) > self.MAX_DRIVER_TERM_DICT:
             return None
         pdf = pdf.sort_values("term", kind="mergesort")  # Python ordering
-        self._term_dict_data = (pdf["term"].tolist(), pdf["idf"].tolist())
+        self._term_dict_data = (
+            pdf["term"].tolist(),
+            pdf["idf"].tolist(),
+            pdf["df"].tolist() if has_df else None,
+        )
         return self._term_dict_data
+
+    def _postings_estimate(self, terms: Iterable[str]) -> Optional[int]:
+        """Summed df of ``terms`` from the cached dictionary — the
+        posting count a decode of their blocks yields, sizing it
+        (blocks.postings_from_blocks). None when the dictionary is not
+        held or lacks df; never runs a job."""
+        if not self._term_dict_checked or self._term_dict_data is None:
+            return None
+        import bisect
+
+        keys, _, dfs = self._term_dict_data
+        if dfs is None:
+            return None
+        est = 0
+        for t in terms:
+            i = bisect.bisect_left(keys, t)
+            if i < len(keys) and keys[i] == t:
+                est += int(dfs[i])
+        return est
 
     def _expand_tokens_driver(
         self, distinct_tokens: Sequence[str]
@@ -872,7 +915,7 @@ class SearchEngine:
             return None
         import bisect
 
-        terms, idfs = d
+        terms, idfs, _ = d
         idf_map: Dict[str, float] = {}
         by_token: Dict[str, List[str]] = {}
         cap = self.MAX_DRIVER_EXPANSION
@@ -998,7 +1041,7 @@ class SearchEngine:
                 "driver-side query vector — use fulltext_hits, whose "
                 "distributed-expansion path handles this query"
             )
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if analyzed is None:
             return empty
         qv, idf_map = analyzed
@@ -1071,7 +1114,7 @@ class SearchEngine:
             raise EngineError(
                 "prefix expansion exceeds driver capacity; use fulltext_hits"
             )
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if analyzed is None:
             return empty
         qv, idf_map = analyzed
@@ -1119,8 +1162,8 @@ class SearchEngine:
         identical to ``fulltext_hits`` (same weights, same sorted-term
         reduction order)."""
         idx = self.index
-        empty = self.spark.createDataFrame(
-            [], f"qid long, {DOCID} long, {SCORE} double"
+        empty = local_relation(
+            self.spark, [], f"qid long, {DOCID} long, {SCORE} double"
         )
         if idx.terms is None or not queries:
             return empty
@@ -1222,7 +1265,8 @@ class SearchEngine:
         fmasks = {qid: qrows[0][5] for qid, qrows in by_qid.items()}
 
         if width <= self.WIDE_SUM_MAX_TERMS and len(by_qid) <= 2048:
-            qdf = self.spark.createDataFrame(
+            qdf = local_relation(
+                self.spark,
                 [
                     (qid, t, w, m, tid_of[(qid, t)])
                     for qid, t, w, m, _mag, _fm in rows
@@ -1256,8 +1300,10 @@ class SearchEngine:
 
         # oversized expansions / huge batches: sorted-struct fold (exact
         # same reduction order, heavier shuffle)
-        qdf = self.spark.createDataFrame(
-            rows, "qid long, term string, w double, mask long, mag double, fmask long"
+        qdf = local_relation(
+            self.spark,
+            rows,
+            "qid long, term string, w double, mask long, mag double, fmask long",
         )
         joined = idx.postings_subset(all_terms).join(F.broadcast(qdf), "term")
         per = joined.groupBy("qid", DOCID).agg(
@@ -1306,7 +1352,7 @@ class SearchEngine:
         the admission mask is already aggregated per doc, so the switch
         is one popcount predicate on the same plan (no extra shuffle)."""
         idx = self.index
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         try:
             analyzed = self._query_vector(
                 query,
@@ -1358,7 +1404,9 @@ class SearchEngine:
         # parquet scan (row-group min/max pruning); on a block-backed
         # index only the matching compressed blocks are decoded; on the
         # cached path it just narrows the join input
-        subset = idx.postings_subset(list(qv.weights))
+        subset = idx.postings_subset(
+            list(qv.weights), est=self._postings_estimate(qv.weights)
+        )
         sorted_terms = sorted(qv.weights)
         if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
             # small expansions (the common case): weights/masks as MAP
@@ -1383,8 +1431,8 @@ class SearchEngine:
                 )
                 joined = joined.withColumn("tid", tidmap[F.col("term")])
         else:
-            expanded_df = self.spark.createDataFrame(
-                rows, "term string, w double, mask long"
+            expanded_df = local_relation(
+                self.spark, rows, "term string, w double, mask long"
             )
             joined = subset.join(F.broadcast(expanded_df), "term")
 
@@ -1487,7 +1535,7 @@ class SearchEngine:
             query, facet_fields=idx.facet_fields,
             default_operator=default_operator,
         )
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if not spec.units:
             raise EngineError(
                 "query_string needs at least one scoring term; filter-only "
@@ -1705,8 +1753,10 @@ class SearchEngine:
         idx = self.index
         field = self._phrase_field(field)
         if field is None:
-            return self.spark.createDataFrame(
-                [], T.StructType([
+            return local_relation(
+                self.spark,
+                [],
+                T.StructType([
                     T.StructField(DOCID, T.LongType()),
                     T.StructField("n_occurrences", T.IntegerType()),
                 ])
@@ -1749,8 +1799,10 @@ class SearchEngine:
         )
         rows = self._fetch_candidate_text(cand, field)
         if rows is None:
-            return self.spark.createDataFrame(
-                [], T.StructType([
+            return local_relation(
+                self.spark,
+                [],
+                T.StructType([
                     T.StructField(DOCID, T.LongType()),
                     T.StructField("n_occurrences", T.IntegerType()),
                 ])
@@ -1873,8 +1925,8 @@ class SearchEngine:
         each count.
         """
         idx = self.index
-        empty = self.spark.createDataFrame(
-            [], _phrase_out_schema(bool(with_positions))
+        empty = local_relation(
+            self.spark, [], _phrase_out_schema(bool(with_positions))
         )
         terms = self.pipeline(tokenize(phrase))
         if not terms:
@@ -2050,7 +2102,7 @@ class SearchEngine:
         them; cost at 10^12 turns is bounded by the PHRASE's document
         frequency, not the corpus (point lookups for rare phrases). No
         second pass, no driver-side text."""
-        empty = self.spark.createDataFrame([], _SNIPPET_SCHEMA)
+        empty = local_relation(self.spark, [], _SNIPPET_SCHEMA)
         terms = self.pipeline(tokenize(phrase))
         if not terms:
             return empty
@@ -2194,7 +2246,7 @@ class SearchEngine:
             ]
             + [T.StructField(c, by_name[c]) for c in cols]
         )
-        empty = self.spark.createDataFrame([], out_schema)
+        empty = local_relation(self.spark, [], out_schema)
 
         hits = self.fulltext_hits(query)
         s = F.round(F.col(SCORE), 6)
@@ -2607,9 +2659,7 @@ class SearchEngine:
 
         idx = self.index
         self._ensure_fulltext_materialized()
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, {SCORE} double"
-        )
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         src_rows = tokenize_postings(
             self._live(idx.docs).filter(F.col(DOCID) == id),
             idx.text_fields,
@@ -2804,15 +2854,13 @@ class SearchEngine:
             if units:
                 n_units[qid] = units
         spark = self.spark
-        empty = spark.createDataFrame(
-            [], f"query_id string, {DOCID} long"
-        )
+        empty = local_relation(spark, [], f"query_id string, {DOCID} long")
         if not n_units:
             return empty
         sats: List[DataFrame] = []
         if term_rows:
-            tr = spark.createDataFrame(
-                term_rows, "query_id string, term string, unit int"
+            tr = local_relation(
+                spark, term_rows, "query_id string, term string, unit int"
             )
             subset = idx.postings_subset(sorted({t for _, t, _ in term_rows}))
             sats.append(
@@ -2821,8 +2869,10 @@ class SearchEngine:
                 )
             )
         if facet_rows:
-            fr = spark.createDataFrame(
-                facet_rows, "query_id string, field string, key string, unit int"
+            fr = local_relation(
+                spark,
+                facet_rows,
+                "query_id string, field string, key string, unit int",
             )
             fields = sorted({f for _, f, _, _ in facet_rows})
             pairs = [
@@ -3030,9 +3080,7 @@ class SearchEngine:
         the match set is driver-bounded by ``max_expansion`` (a pattern
         like ``*`` is refused, not silently truncated), then the usual
         pruned postings-subset join + one aggregation."""
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, {SCORE} double"
-        )
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if self.index.terms is None:
             return empty
         self._ensure_fulltext_materialized()
@@ -3069,9 +3117,7 @@ class SearchEngine:
         over only that range; the match set is driver-bounded by
         ``max_expansion`` (``.*`` is refused, not truncated); then the
         shared pruned postings-subset union scorer."""
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, {SCORE} double"
-        )
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if self.index.terms is None:
             return empty
         self._ensure_fulltext_materialized()
@@ -3119,9 +3165,7 @@ class SearchEngine:
         score(doc) = Σ tf·idf over the doc's terms in the set, via a
         term-pruned postings subset + ONE aggregation (fixed-term-order
         fold when narrow, sorted-struct fold when wide)."""
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, {SCORE} double"
-        )
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if not rows:
             return empty
         subset = self.index.postings_subset([t for t, _ in rows])
@@ -3138,7 +3182,7 @@ class SearchEngine:
             )
             joined = subset.withColumn("w", wmap[F.col("term")])
         else:
-            wdf = self.spark.createDataFrame(rows, "term string, w double")
+            wdf = local_relation(self.spark, rows, "term string, w double")
             joined = subset.join(F.broadcast(wdf), "term")
             tidmap = None
         c = F.col("w") * F.col("tf")
@@ -3177,8 +3221,8 @@ class SearchEngine:
         top-k docids, then one more term-pruned postings-subset scan
         joins that k-row broadcast — cost ∝ k × expanded terms, never
         the hit set."""
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, term string, contribution double"
+        empty = local_relation(
+            self.spark, [], f"{DOCID} long, term string, contribution double"
         )
         try:
             analyzed = self._query_vector(query)
@@ -3209,7 +3253,7 @@ class SearchEngine:
             )
             joined = subset.withColumn("w", wmap[F.col("term")])
         else:
-            wdf = self.spark.createDataFrame(rows, "term string, w double")
+            wdf = local_relation(self.spark, rows, "term string, w double")
             joined = subset.join(F.broadcast(wdf), "term")
         contribution = F.round(
             F.col("w") * F.col("tf") / F.lit(qv.magnitude), 6
@@ -3279,9 +3323,7 @@ class SearchEngine:
         raw-count postings, map-literal weights, ONE aggregation with
         the deterministic fixed-term-order fold. Returns
         (_docid, __score) like the lunr scorer."""
-        empty = self.spark.createDataFrame(
-            [], f"{DOCID} long, {SCORE} double"
-        )
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         tokens = sorted(set(self.pipeline(tokenize(query))))
         if not tokens:
             return empty
@@ -3484,7 +3526,7 @@ class SearchEngine:
         table; on a term-sorted persisted store the StartsWith predicate
         prunes row groups. Never touches postings or the corpus."""
         idx = self.index
-        empty = self.spark.createDataFrame([], "term string, df long")
+        empty = local_relation(self.spark, [], "term string, df long")
         if idx.terms is None:
             return empty
         toks = self.pipeline(tokenize(prefix))
@@ -3517,9 +3559,7 @@ class SearchEngine:
         corpus; at a 10^12-turn vocabulary this stays bounded by
         distinct-term count, not corpus size."""
         idx = self.index
-        empty = self.spark.createDataFrame(
-            [], "term string, df long, dist int"
-        )
+        empty = local_relation(self.spark, [], "term string, df long, dist int")
         if idx.terms is None:
             return empty
         toks = self.pipeline(tokenize(word))
@@ -3559,7 +3599,7 @@ class SearchEngine:
         if d is not None:
             import bisect
 
-            terms, _ = d
+            terms = d[0]
             i = bisect.bisect_left(terms, tok)
             return i < len(terms) and terms[i].startswith(tok)
         self._ensure_fulltext_materialized()
@@ -3641,8 +3681,8 @@ class SearchEngine:
         the seed term's documents — never all-pairs, never corpus-
         squared."""
         idx = self.index
-        empty = self.spark.createDataFrame(
-            [], "term string, co_df long, pmi double"
+        empty = local_relation(
+            self.spark, [], "term string, co_df long, pmi double"
         )
         if idx.terms is None:
             return empty
@@ -3768,8 +3808,8 @@ class SearchEngine:
         ).select(DOCID)
         fg_total = fg_docs.count()
         if fg_total == 0:
-            return self.spark.createDataFrame(
-                [], "term string, fg_df long, bg_df long, lift double"
+            return local_relation(
+                self.spark, [], "term string, fg_df long, bg_df long, lift double"
             )
         self._ensure_fulltext_materialized()
         fg = (
@@ -3999,7 +4039,7 @@ class SearchEngine:
         a singleton), so float addition order is engine-deterministic
         and the oracle matches bit-for-bit."""
         qs = list(queries)
-        empty = self.spark.createDataFrame([], "_id long, score double")
+        empty = local_relation(self.spark, [], "_id long, score double")
         if not qs:
             return empty
         b = self.fulltext_hits_batch(qs)
@@ -4154,9 +4194,7 @@ class SearchEngine:
                 F.sum("df").cast("long").alias("n_postings"),
             )
         else:
-            p = self.spark.createDataFrame(
-                [(0, 0)], "n_terms long, n_postings long"
-            )
+            p = local_relation(self.spark, [(0, 0)], "n_terms long, n_postings long")
         return d.crossJoin(p).select("n_docs", "n_terms", "n_postings")
 
     def _fulltext_hits_distributed_expansion(
@@ -4173,7 +4211,7 @@ class SearchEngine:
         differ — the driver path, which covers every expansion a human
         query produces, stays bit-exact to the oracle)."""
         idx = self.index
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         tokens = self.pipeline(tokenize(query))
         if not tokens or idx.terms is None:
             return empty
@@ -4182,8 +4220,8 @@ class SearchEngine:
         boosts_sum = sum(b for _, b in idx.text_fields)
         qtf = (1.0 / len(tokens)) * n_fields * boosts_sum
 
-        tokdf = self.spark.createDataFrame(
-            list(enumerate(tokens)), "tok_idx int, tok string"
+        tokdf = local_relation(
+            self.spark, list(enumerate(tokens)), "tok_idx int, tok string"
         )
         # broadcast theta-join: every (token position, expanded term) pair
         exp = idx.terms.join(
@@ -4271,7 +4309,7 @@ class SearchEngine:
         if input.get("_ids") is not None:
             ids = list(input["_ids"])
             rows = [(int(v), i) for i, v in enumerate(ids)]
-            hits = self.spark.createDataFrame(rows, f"{DOCID} long, {QRANK} long")
+            hits = local_relation(self.spark, rows, f"{DOCID} long, {QRANK} long")
             return hits, True
         if input.get("ids") is not None:
             id_field = self.configuration.get("custom_id_field", "id")
@@ -4288,7 +4326,7 @@ class SearchEngine:
             for i, k in enumerate(wanted):
                 if k in found:
                     rows.append((int(found[k]), i))
-            hits = self.spark.createDataFrame(rows, f"{DOCID} long, {QRANK} long")
+            hits = local_relation(self.spark, rows, f"{DOCID} long, {QRANK} long")
             return hits, True
         if self.configuration.get("native_search_enabled") is False and (
             input.get("query") or input.get("filter")
@@ -4955,14 +4993,16 @@ class SearchEngine:
         mrows = [
             (t, sum(1 << i for i in qv.term_tokens[t])) for t in qv.weights
         ]
-        subset = self.index.postings_subset(list(qv.weights))
+        subset = self.index.postings_subset(
+            list(qv.weights), est=self._postings_estimate(qv.weights)
+        )
         if len(mrows) <= self.MAX_MAP_LITERAL_TERMS:
             mmap = F.create_map(
                 *[x for t, m_ in mrows for x in (F.lit(t), F.lit(m_))]
             )
             masked = subset.withColumn("mask", mmap[F.col("term")])
         else:  # big prefix expansion: broadcast join, not a giant literal
-            mdf = self.spark.createDataFrame(mrows, "term string, mask long")
+            mdf = local_relation(self.spark, mrows, "term string, mask long")
             masked = subset.join(F.broadcast(mdf), "term")
         return (
             masked.groupBy(DOCID)
@@ -5120,7 +5160,7 @@ class SearchEngine:
         persisted: List[DataFrame] = []
         try:
             if analyzed is None:
-                membership = self.spark.createDataFrame([], f"{DOCID} long")
+                membership = local_relation(self.spark, [], f"{DOCID} long")
             else:
                 membership = self._query_membership(analyzed)
             membership = membership.persist()
@@ -5320,13 +5360,9 @@ class SearchEngine:
         t0 = time.time()
         per_page, page = _parse_paging(input)
         compiled = self.compile(input, has_query=False)
-        alg = BlockSetAlgebra(self.index, self.index.facet_posting_blocks)
-
-        def persist_if_df(res):
-            if not isinstance(res, bool):
-                res.persist()
-                persisted.append(res)
-            return res
+        alg = BlockSetAlgebra(
+            self.index, self.index.facet_posting_blocks, self._facet_global
+        )
 
         # group fields by bucket-predicate shape (they differ only by
         # disjunctive self-exclusion) and evaluate each shape ONCE:
@@ -5344,7 +5380,7 @@ class SearchEngine:
             key = _freeze(compiled.bucket_pred[fld])
             if key not in groups:
                 groups[key] = []
-                gset[key] = persist_if_df(alg.docids(compiled.bucket_pred[fld]))
+                gset[key] = alg.docids(compiled.bucket_pred[fld])
             groups[key].append(fld)
 
         # the bucket sets are marked persisted BEFORE the first action, so
@@ -5352,7 +5388,13 @@ class SearchEngine:
         # through them (result_pred is built from the same conjuncts) and
         # the count jobs reuse instead of re-deriving
         t_s = time.time()
-        final = persist_if_df(alg.docids(compiled.final_pred))
+        final = alg.docids(compiled.final_pred)
+        persisted.extend(
+            alg.persist(
+                [compiled.bucket_pred[f] for f in self.index.facet_fields]
+                + [compiled.final_pred]
+            )
+        )
         if final is True:
             total = self.index.docs.count()
         elif final is False:
@@ -5586,7 +5628,9 @@ class SearchEngine:
         from .facetblocks import BlockSetAlgebra, _freeze
 
         compiled = self.compile(input, has_query=False)
-        alg = BlockSetAlgebra(self.index, self.index.facet_posting_blocks)
+        alg = BlockSetAlgebra(
+            self.index, self.index.facet_posting_blocks, self._facet_global
+        )
         persisted: List[DataFrame] = []
         try:
             groups: Dict[tuple, List[str]] = {}
@@ -5595,12 +5639,13 @@ class SearchEngine:
                 key = _freeze(compiled.bucket_pred[fld])
                 if key not in groups:
                     groups[key] = []
-                    s = alg.docids(compiled.bucket_pred[fld])
-                    if not isinstance(s, bool):
-                        s.persist()
-                        persisted.append(s)
-                    gset[key] = s
+                    gset[key] = alg.docids(compiled.bucket_pred[fld])
                 groups[key].append(fld)
+            persisted.extend(
+                alg.persist(
+                    [compiled.bucket_pred[f] for f in self.index.facet_fields]
+                )
+            )
             counts: Dict[str, Dict[str, int]] = {}
             for key, flds in groups.items():
                 s = gset[key]

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocks import decode_varint_deltas
+from .relations import local_relation
 
 
 def wand_topk(
@@ -68,7 +69,7 @@ def wand_topk(
     pruning bounds stay admissible (filtering only removes candidates)."""
     terms = sorted(term_weights)
     if not terms or magnitude == 0.0:
-        return spark.createDataFrame([], "_docid long, __score double")
+        return local_relation(spark, [], "_docid long, __score double")
 
     if filter_groups is None and filter_fields:
         from .facetblocks import SEP
@@ -103,7 +104,7 @@ def wand_topk(
 
     # ---- phase 1: per-range upper bounds from metadata only ----------
     w_rows = [(t, float(term_weights[t])) for t in terms]
-    wdf = spark.createDataFrame(w_rows, "term string, w double")
+    wdf = local_relation(spark, w_rows, "term string, w double")
     ub_rows = (
         tblocks.groupBy("range_id", "term")
         .agg(F.max("max_tf").alias("mtf"))
@@ -122,15 +123,17 @@ def wand_topk(
         # (score, token-mask); conjunctive + facet filter; local top-k
         per_term: Dict[str, List[Tuple[np.ndarray, np.ndarray]]] = {}
         per_group: Dict[int, List[np.ndarray]] = {}
-        for _, row in pdf.iterrows():
-            d = decode_varint_deltas(bytes(row["docids"]), int(row["n"]))
-            gids = group_of.get(row["term"])
+        for term, n, blob, tf_blob in zip(
+            pdf["term"], pdf["n"], pdf["docids"], pdf["tfs"]
+        ):
+            d = decode_varint_deltas(bytes(blob), int(n))
+            gids = group_of.get(term)
             if gids is not None:  # facet-posting block: filter side
                 for gid in gids:
                     per_group.setdefault(gid, []).append(d)
                 continue
-            t = np.frombuffer(bytes(row["tfs"]), dtype=np.float64)
-            per_term.setdefault(row["term"], []).append((d, t))
+            t = np.frombuffer(bytes(tf_blob), dtype=np.float64)
+            per_term.setdefault(term, []).append((d, t))
         if not per_term:
             return pd.DataFrame({"_docid": [], "__score": []}).astype(
                 {"_docid": "int64", "__score": "float64"}
@@ -197,6 +200,6 @@ def wand_topk(
         heap.sort(key=lambda x: (-x[0], x[1]))
         heap = heap[:k]
 
-    return spark.createDataFrame(
-        [(h[2], h[0]) for h in heap], "_docid long, __score double"
+    return local_relation(
+        spark, [(h[2], h[0]) for h in heap], "_docid long, __score double"
     )

@@ -439,6 +439,8 @@ def sample_avi_mjpeg_frames(
     every frame is an independent keyframe, so frame selection costs a
     chunk-walk seek, not a decode (the property that makes MJPEG the
     cheap-scrubbing format)."""
+    if every_n < 1:
+        raise ValueError("every_n must be >= 1")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -84,6 +84,18 @@ def test_spark_sample_avi_frames_decodes_every_second(spark):
     assert out[1].luma_mean == round(vals[2] / 255.0, 6)
 
 
+@pytest.mark.parametrize("every_n", [0, -1])
+def test_sample_avi_frames_rejects_nonpositive_every_n(spark, every_n):
+    from itemsjs_spark.ops import multimodal
+
+    df = spark.range(0).selectExpr(
+        "id AS doc_id", "CAST(NULL AS binary) AS payload"
+    )
+    # raised while planning, at the driver: no job runs
+    with pytest.raises(ValueError, match="every_n must be >= 1"):
+        multimodal.sample_avi_mjpeg_frames(df, every_n=every_n)
+
+
 def test_avi_rejects_nonpositive_fps():
     with pytest.raises(ValueError, match="fps"):
         encode_avi_mjpeg(8, 8, [_solid_jpeg(8, 8, 1)], fps=0)
