@@ -565,7 +565,11 @@ class Index:
         """Open a persisted index — either layout: row-level postings
         (``write``) or the checkpointed block store (``write_blocks``)."""
         from .checkpoint import _HadoopFS, read_blocks
+        from .packaging import ensure_shipped
 
+        # block decodes run Python closures that import this package on
+        # executors: a store reopened in a fresh process must ship it too
+        ensure_shipped(spark)
         fs = _HadoopFS(spark, path)
         meta = json.loads(fs.read_text(os.path.join(path, "meta.json")))
         postings = terms = blocks = fblocks = None

@@ -19,8 +19,11 @@ Plan shapes (scale rationale):
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import math
 import re
+import time
 from typing import (
     Any,
     Callable,
@@ -47,6 +50,24 @@ from .relations import local_relation
 IN_QUERY = "__in_query"
 SCORE = "__score"
 QRANK = "__qrank"
+
+# explain_search's account of each physical route
+_ROUTE_WHY = {
+    "wand_topk": (
+        "relevance-ordered query page: block-max WAND top-k over "
+        "the compressed posting store"
+    ),
+    "wand_filtered": (
+        "query + facet filters: filtered block-max WAND page, "
+        "buckets from one mask-only corpus pass (falls back to "
+        "the standard path if the request declines mid-flight)"
+    ),
+    "facet_blocks": (
+        "filter-only search: per-value posting-block set algebra "
+        "predicted cheaper than the corpus scan"
+    ),
+    "standard_scan": "corpus-scan plan (every faster route declined — see trace)",
+}
 
 
 class EngineError(ValueError):
@@ -203,6 +224,62 @@ def _parse_paging(input: Dict[str, Any]) -> Tuple[int, int]:
     return per_page, page
 
 
+def _timed(fn: Callable, *args) -> Tuple[Any, float]:
+    """``fn(*args)`` and the seconds it took."""
+    t = time.time()
+    return fn(*args), time.time() - t
+
+
+def _collect_items(df: DataFrame, keep: Sequence[str]) -> List[Dict[str, Any]]:
+    """Collect ``df``'s ``keep`` columns as response items (``_id`` =
+    the docid)."""
+    return [
+        _row_to_item(r)
+        for r in df.select(*keep).withColumnRenamed(DOCID, "_id").collect()
+    ]
+
+
+def _response(
+    per_page: int,
+    page: int,
+    total: int,
+    t0: float,
+    search_s: float,
+    facets_s: float,
+    sorting_s: float,
+    items: List[Dict[str, Any]],
+    all_items: Optional[List[Dict[str, Any]]] = None,
+    aggregations: Optional[Dict[str, Any]] = None,
+) -> Dict[str, Any]:
+    """The search response (lib.ts:145-168) every route answers with:
+    phase seconds become whole-millisecond timings, ``total`` timed
+    from ``t0``."""
+    return {
+        "pagination": {"per_page": per_page, "page": page, "total": total},
+        "timings": {
+            "total": int((time.time() - t0) * 1000),
+            "facets": int(facets_s * 1000),
+            "search": int(search_s * 1000),
+            "sorting": int(sorting_s * 1000),
+        },
+        "data": {
+            "items": items,
+            "allFilteredItems": all_items,
+            "aggregations": {} if aggregations is None else aggregations,
+        },
+    }
+
+
+def _tagged_keys(fld: str) -> Column:
+    """``fld``'s distinct facet keys as (field, key) structs: stacked
+    for several fields, one groupBy counts them all."""
+    # NB: a 2-arg lambda would make F.transform pass (elem, index)
+    return F.transform(
+        F.array_distinct(F.col(FK_PREFIX + fld)),
+        lambda k: F.struct(F.lit(fld).alias("field"), k.alias("key")),
+    )
+
+
 def ir_to_column(pred: tuple, has_query_col: bool) -> Column:
     op = pred[0]
     if op == "true":
@@ -241,18 +318,12 @@ class SearchEngine:
     # scoring projection (no per-query BroadcastExchange); larger prefix
     # expansions fall back to a broadcast join
     MAX_MAP_LITERAL_TERMS = 256
-    # score aggregation pivots per-doc contributions onto sorted-term-rank
-    # columns (one conditional sum each, folded in rank order — no struct
-    # array, no term strings in the shuffle) up to this many ranks; wider
-    # expansions keep the sorted-struct-array fold (same reduction order,
-    # bit-identical scores either way).  Cap = 2, set by measurement: an
-    # interleaved A/B at 60k turns found the conditional-sum plan at
-    # parity with the fold for 1-2 term queries (the dominant case, and
-    # where dropping term strings from the shuffle matters) but 25-60%
-    # SLOWER from 3 terms up (n=3 0.257 vs 0.201 s, n=6 0.295 vs 0.200,
-    # n=12 0.349 vs 0.220 — the per-row WHEN-chain scales with rank
-    # count while the fold's per-row cost is flat), which was the
-    # round-4 ft_prefix regression.
+    # score aggregation sums the w·tf contributions with a plain SUM up
+    # to this many query terms; wider expansions fold a sorted (term,
+    # contribution) struct array so the reduction order is fixed (see
+    # _dot_fold). Must stay <= 2 for exactness: a doc then gets at most
+    # two non-negative addends, and IEEE-754 addition of two values is
+    # commutative; a third addend makes the sum order-dependent.
     WIDE_SUM_MAX_TERMS = 2
     # reference-mandated allFilteredItems collect refuses above this
     # many rows (the driver is not a sink for a corpus-sized result)
@@ -1241,87 +1312,44 @@ class SearchEngine:
             return empty
         all_terms = sorted({r[1] for r in rows})
 
-        # per-query sorted-term rank: the deterministic reduction order.
-        # Wide path (the common case): pivot each (qid, doc) group's
-        # contributions onto rank columns with one conditional sum per
-        # rank — (term, _docid) is unique in postings, so each cell is a
-        # singleton — then fold the columns in rank order. Bit-identical
-        # to the sorted-struct-array fold (same order; absent ranks add
-        # +0.0, and every contribution is ≥ +0.0 since lunr idf ≥ 1), but
-        # shuffles W nullable doubles instead of materializing per-doc
-        # struct arrays carrying term strings. Per-qid constants (mag,
-        # fmask) stay out of the aggregation entirely — applied after it
-        # from driver-side literal maps.
+        # per-qid constants (mag, fmask) stay out of the aggregation when
+        # the batch is small enough for driver-side literal maps (applied
+        # after it); huge batches carry them through first()
         by_qid: Dict[int, List[tuple]] = {}
         for r in rows:
             by_qid.setdefault(r[0], []).append(r)
-        tid_of = {
-            (qid, t): i
-            for qid, qrows in by_qid.items()
-            for i, t in enumerate(sorted(r[1] for r in qrows))
-        }
         width = max(len(qrows) for qrows in by_qid.values())
-        mags = {qid: qrows[0][4] for qid, qrows in by_qid.items()}
-        fmasks = {qid: qrows[0][5] for qid, qrows in by_qid.items()}
-
-        if width <= self.WIDE_SUM_MAX_TERMS and len(by_qid) <= 2048:
-            qdf = local_relation(
-                self.spark,
-                [
-                    (qid, t, w, m, tid_of[(qid, t)])
-                    for qid, t, w, m, _mag, _fm in rows
-                ],
-                "qid long, term string, w double, mask long, tid int",
-            )
-            joined = idx.postings_subset(all_terms).join(F.broadcast(qdf), "term")
-            c = F.col("w") * F.col("tf")
-            per = joined.groupBy("qid", DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(width)
-                ],
-            )
-            magmap = F.create_map(
-                *[x for q, m in mags.items() for x in (F.lit(q), F.lit(m))]
-            )
-            fmaskmap = F.create_map(
-                *[x for q, m in fmasks.items() for x in (F.lit(q), F.lit(m))]
-            )
-            score = F.lit(0.0)
-            for i in range(width):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-            score = score / magmap[F.col("qid")]
-            return (
-                per.filter(F.col("mask") == fmaskmap[F.col("qid")])
-                .withColumn(SCORE, score)
-                .select("qid", DOCID, SCORE)
-            )
-
-        # oversized expansions / huge batches: sorted-struct fold (exact
-        # same reduction order, heavier shuffle)
         qdf = local_relation(
             self.spark,
             rows,
             "qid long, term string, w double, mask long, mag double, fmask long",
         )
         joined = idx.postings_subset(all_terms).join(F.broadcast(qdf), "term")
-        per = joined.groupBy("qid", DOCID).agg(
-            F.bit_or("mask").alias("mask"),
-            F.first("mag").alias("mag"),
-            F.first("fmask").alias("fmask"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c"))
-                )
-            ).alias("contribs"),
-        )
-        score = F.aggregate(
-            "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-        ) / F.col("mag")
+        keys = ["qid", DOCID]
+        mask = F.bit_or("mask").alias("mask")
+        if len(by_qid) <= 2048:
+            per, dot = self._dot_fold(joined, keys, width, mask)
+            mags = {q: qrows[0][4] for q, qrows in by_qid.items()}
+            fmasks = {q: qrows[0][5] for q, qrows in by_qid.items()}
+            qmag = F.create_map(
+                *[x for q, m in mags.items() for x in (F.lit(q), F.lit(m))]
+            )[F.col("qid")]
+            qfmask = F.create_map(
+                *[x for q, m in fmasks.items() for x in (F.lit(q), F.lit(m))]
+            )[F.col("qid")]
+        else:
+            per, dot = self._dot_fold(
+                joined,
+                keys,
+                width,
+                mask,
+                F.first("mag").alias("mag"),
+                F.first("fmask").alias("fmask"),
+            )
+            qmag, qfmask = F.col("mag"), F.col("fmask")
         return self._live(
-            per.filter(F.col("mask") == F.col("fmask"))
-            .withColumn(SCORE, score)
+            per.filter(F.col("mask") == qfmask)
+            .withColumn(SCORE, dot / qmag)
             .select("qid", DOCID, SCORE)
         )
 
@@ -1407,7 +1435,6 @@ class SearchEngine:
         subset = idx.postings_subset(
             list(qv.weights), est=self._postings_estimate(qv.weights)
         )
-        sorted_terms = sorted(qv.weights)
         if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
             # small expansions (the common case): weights/masks as MAP
             # literals — a pure projection, no BroadcastExchange job per
@@ -1421,56 +1448,46 @@ class SearchEngine:
             joined = subset.withColumn("w", wmap[F.col("term")]).withColumn(
                 "mask", mmap[F.col("term")]
             )
-            if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-                tidmap = F.create_map(
-                    *[
-                        x
-                        for i, t in enumerate(sorted_terms)
-                        for x in (F.lit(t), F.lit(i))
-                    ]
-                )
-                joined = joined.withColumn("tid", tidmap[F.col("term")])
         else:
             expanded_df = local_relation(
                 self.spark, rows, "term string, w double, mask long"
             )
             joined = subset.join(F.broadcast(expanded_df), "term")
+        per_doc, dot = self._dot_fold(
+            joined, [DOCID], len(rows), F.bit_or("mask").alias("mask")
+        )
+        return per_doc, dot / F.lit(qv.magnitude)
 
-        if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-            # deterministic reduction in sorted-term order WITHOUT the
-            # struct array: (term, _docid) is unique, so each rank's
-            # conditional sum is a singleton; the column fold runs in
-            # rank order and absent ranks add +0.0 (every contribution
-            # is ≥ +0.0 — lunr idf ≥ 1), bit-identical to the old
-            # sort_array(collect_list(struct)) fold at a fraction of the
-            # shuffle/aggregation-buffer bandwidth.
-            c = F.col("w") * F.col("tf")
-            per_doc = joined.groupBy(DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(len(sorted_terms))
-                ],
-            )
-            score = F.lit(0.0)
-            for i in range(len(sorted_terms)):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-            score = score / F.lit(qv.magnitude)
-        else:
-            per_doc = joined.groupBy(DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                # deterministic reduction order: sort contributions by term
-                # before summing, so scores equal the oracle bit-for-bit
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c")))
-                ).alias("contribs"),
-            )
-            score = F.aggregate(
-                "contribs",
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ) / F.lit(qv.magnitude)
-        return per_doc, score
+    def _dot_fold(
+        self,
+        joined: DataFrame,
+        keys: Sequence[str],
+        n_terms: int,
+        *aggs: Column,
+    ) -> Tuple[DataFrame, Column]:
+        """Group weighted postings (``term``, ``w``, ``tf``, ...) by
+        ``keys`` next to ``aggs``; returns the grouped rows and the
+        column Σ w·tf over each group's ``n_terms`` (at most) query
+        terms. Scores must equal the oracle bit for bit, so the sum runs
+        in sorted-term order: the wide fold sorts each group's (term,
+        contribution) structs before adding them up. Up to
+        ``WIDE_SUM_MAX_TERMS`` terms a plain SUM is the same value with
+        no per-doc struct array in the shuffle: a group then has at most
+        two addends, each >= +0.0 (lunr idf >= 1), and IEEE-754 addition
+        of two values is commutative."""
+        c = F.col("w") * F.col("tf")
+        if n_terms <= self.WIDE_SUM_MAX_TERMS:
+            per = joined.groupBy(*keys).agg(*aggs, F.sum(c).alias("_dot"))
+            return per, F.col("_dot")
+        per = joined.groupBy(*keys).agg(
+            *aggs,
+            F.sort_array(
+                F.collect_list(F.struct(F.col("term"), c.alias("c")))
+            ).alias("contribs"),
+        )
+        return per, F.aggregate(
+            "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
+        )
 
     @staticmethod
     def _admission_pred(
@@ -3163,8 +3180,7 @@ class SearchEngine:
     ) -> DataFrame:
         """Shared union scorer for term-set queries (wildcard/regexp):
         score(doc) = Σ tf·idf over the doc's terms in the set, via a
-        term-pruned postings subset + ONE aggregation (fixed-term-order
-        fold when narrow, sorted-struct fold when wide)."""
+        term-pruned postings subset + ONE aggregation (``_dot_fold``)."""
         empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if not rows:
             return empty
@@ -3173,44 +3189,12 @@ class SearchEngine:
             wmap = F.create_map(
                 *[x for t, w in rows for x in (F.lit(t), F.lit(w))]
             )
-            tidmap = F.create_map(
-                *[
-                    x
-                    for i, (t, _) in enumerate(rows)
-                    for x in (F.lit(t), F.lit(i))
-                ]
-            )
             joined = subset.withColumn("w", wmap[F.col("term")])
         else:
             wdf = local_relation(self.spark, rows, "term string, w double")
             joined = subset.join(F.broadcast(wdf), "term")
-            tidmap = None
-        c = F.col("w") * F.col("tf")
-        if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-            # deterministic fixed-term-order fold (same trick as the
-            # lunr scorer's wide-sum path)
-            joined = joined.withColumn("tid", tidmap[F.col("term")])
-            per_doc = joined.groupBy(DOCID).agg(
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(len(rows))
-                ]
-            )
-            score = F.lit(0.0)
-            for i in range(len(rows)):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        else:
-            per_doc = joined.groupBy(DOCID).agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("term"), c.alias("c")))
-                ).alias("contribs")
-            )
-            score = F.aggregate(
-                "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-            )
-        return self._live(
-            per_doc.withColumn(SCORE, score).select(DOCID, SCORE)
-        )
+        per_doc, dot = self._dot_fold(joined, [DOCID], len(rows))
+        return self._live(per_doc.withColumn(SCORE, dot).select(DOCID, SCORE))
 
     def explain_hits(self, query: str, k_docs: int = 10) -> DataFrame:
         """Per-(doc, term) relevance breakdown for a query's top-k docs
@@ -4675,13 +4659,13 @@ class SearchEngine:
     def explain_search(
         self, input: Optional[Dict[str, Any]] = None
     ) -> Dict[str, Any]:
-        """Route introspection: which physical route ``search()`` would
-        take for this input, with the cost model's predicted seconds and
-        the reason each faster route declined — no Spark jobs run. The
-        checks mirror ``_search_dispatch``'s order exactly, so the
-        answer is the dispatcher's answer (production observability for
-        the r2 mis-route class of surprises: ask the engine, don't guess
-        from timings)."""
+        """Route introspection: which physical route ``search()`` takes
+        for this input, with the cost model's predicted seconds and the
+        reason each faster route declined — no Spark jobs run. The route
+        comes from ``_select_route``, the selector ``_search_dispatch``
+        calls, so the answer is the dispatcher's answer (production
+        observability for the r2 mis-route class of surprises: ask the
+        engine, don't guess from timings)."""
         input = input or {}
         trace: List[str] = []
         exp: Dict[str, Any] = {
@@ -4690,76 +4674,79 @@ class SearchEngine:
             "has_facet_blocks": self.index.facet_posting_blocks is not None,
             "trace": trace,
         }
-        if self._wand_search_applies(input):
-            exp["route"] = "wand_topk"
-            exp["why"] = (
-                "relevance-ordered query page: block-max WAND top-k over "
-                "the compressed posting store"
-            )
-            return exp
-        trace.append("wand_topk: input shape not a pure relevance query page")
-        if self._wand_filtered_search_applies(input):
-            exp["route"] = "wand_filtered"
-            exp["why"] = (
-                "query + facet filters: filtered block-max WAND page, "
-                "buckets from one mask-only corpus pass (falls back to "
-                "the standard path if the request declines mid-flight)"
-            )
-            return exp
-        trace.append("wand_filtered: input shape not a filtered query page")
-        if self._facetblock_search_applies(input, trace):
-            exp["route"] = "facet_blocks"
-            exp["why"] = (
-                "filter-only search: per-value posting-block set algebra "
-                "predicted cheaper than the corpus scan"
-            )
-            return exp
-        exp["route"] = "standard_scan"
-        exp["why"] = "corpus-scan plan (every faster route declined — see trace)"
+        exp["route"] = self._select_route(input, trace)
+        exp["why"] = _ROUTE_WHY[exp["route"]]
         return exp
 
-    def _search_dispatch(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        import time
-
-        t0 = time.time()
-        per_page, page = _parse_paging(input)
-
+    def _select_route(
+        self, input: Dict[str, Any], trace: Optional[List[str]] = None
+    ) -> str:
+        """The physical route that serves ``input`` — the one owner of
+        the route decision (``_search_dispatch`` and ``explain_search``
+        both ask here). ``trace`` collects the reason each faster route
+        declined."""
         if self.configuration.get("native_search_enabled") is False and (
             input.get("query") or input.get("filter")
         ):
             raise EngineError(
                 '"query" and "filter" options are not working once native search is disabled'
             )
-
         if self._wand_search_applies(input):
-            try:
-                return self._search_wand(input)
-            except _ExpansionTooLarge:
-                pass  # oversized prefix: the standard path spills distributed
+            return "wand_topk"
+        if trace is not None:
+            trace.append("wand_topk: input shape not a pure relevance query page")
         if self._wand_filtered_search_applies(input):
+            return "wand_filtered"
+        if trace is not None:
+            trace.append("wand_filtered: input shape not a filtered query page")
+        if self._facetblock_search_applies(input, trace):
+            return "facet_blocks"
+        return "standard_scan"
+
+    def _search_dispatch(self, input: Dict[str, Any]) -> Dict[str, Any]:
+        t0 = time.time()
+        per_page, page = _parse_paging(input)
+        fast = {
+            "wand_topk": self._search_wand,
+            "wand_filtered": self._search_wand_filtered,
+            "facet_blocks": self._search_facetblocks,
+        }.get(self._select_route(input))
+        if fast is not None:
+            # a fast route that declines mid-flight (an oversized prefix
+            # expansion, or filters that don't reduce to WAND groups)
+            # falls through to the scan, exactly: the fast routes' shapes
+            # exclude one another (wand_topk needs no ``filters``,
+            # wand_filtered needs ``filters``, facet_blocks needs no
+            # ``query``), so no other fast route could have applied
             try:
-                resp = self._search_wand_filtered(input)
+                resp = fast(input)
                 if resp is not None:
                     return resp
             except _ExpansionTooLarge:
                 pass  # oversized prefix: the standard path spills distributed
-        if self._facetblock_search_applies(input):
-            return self._search_facetblocks(input)
+        with self._request_caches(release_expansions=True) as persisted:
+            return self._search_standard(input, per_page, page, t0, persisted)
 
-        # request-scoped caches must not outlive the request, even when a
-        # bad sort spec, a callback-filter failure, or a collect error
-        # escapes mid-flight (same contract as _search_facetblocks)
+    @contextlib.contextmanager
+    def _request_caches(
+        self, release_expansions: bool = False
+    ) -> Iterator[List[DataFrame]]:
+        """Owner of a request's caches: the request appends every
+        DataFrame it persists to the yielded list, and each is
+        unpersisted when the block exits — also when a bad sort spec, a
+        callback-filter failure or a collect error escapes mid-flight.
+        ``release_expansions`` also drops the distributed
+        prefix-expansion caches (the routes that expand a query)."""
         persisted: List[DataFrame] = []
         try:
-            return self._search_standard_impl(
-                input, per_page, page, t0, persisted
-            )
+            yield persisted
         finally:
             for df in persisted:
                 df.unpersist()
-            self.release_expansion_caches()
+            if release_expansions:
+                self.release_expansion_caches()
 
-    def _search_standard_impl(
+    def _search_standard(
         self,
         input: Dict[str, Any],
         per_page: int,
@@ -4767,7 +4754,7 @@ class SearchEngine:
         t0: float,
         persisted: List[DataFrame],
     ) -> Dict[str, Any]:
-        import time
+        from concurrent.futures import ThreadPoolExecutor
 
         t_search = time.time()
         hits, _ = self._candidates(input)
@@ -4785,20 +4772,7 @@ class SearchEngine:
         flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
         search_time = time.time() - t_search
 
-        # facets pass and page collect are independent given the cached
-        # hits — submit them from two driver threads so Spark overlaps
-        # the jobs (both pure JVM; on a cluster this hides the smaller
-        # job entirely, in local mode the tasks interleave)
-        from concurrent.futures import ThreadPoolExecutor
-
         t_par = time.time()
-
-        def run_facets():
-            # one corpus pass: all facet buckets + the result total
-            return self._get_buckets_impl(
-                input, compiled, base, hits is not None, with_total=True
-            )
-
         sa = input.get("search_after")
         if sa is not None:
             # keyset ("cursor") pagination — the scale-native alternative
@@ -4843,24 +4817,23 @@ class SearchEngine:
             page_df.columns, input, (IN_QUERY, QRANK, SCORE)
         )
 
-        page_secs = [0.0]
-
-        def run_page():
-            t0 = time.time()
-            out = [
-                _row_to_item(r)
-                for r in page_df.select(*keep)
-                .withColumnRenamed(DOCID, "_id")
-                .collect()
-            ]
-            page_secs[0] = time.time() - t0
-            return out
-
+        # facets pass and page collect are independent given the cached
+        # hits — submit them from two driver threads so Spark overlaps
+        # the jobs (both pure JVM; on a cluster this hides the smaller
+        # job entirely, in local mode the tasks interleave). The facets
+        # pass is one corpus pass: all facet buckets + the result total.
         with ThreadPoolExecutor(max_workers=2) as ex:
-            f_facets = ex.submit(run_facets)
-            f_page = ex.submit(run_page)
+            f_facets = ex.submit(
+                self._get_buckets_impl,
+                input,
+                compiled,
+                base,
+                hits is not None,
+                with_total=True,
+            )
+            f_page = ex.submit(_timed, _collect_items, page_df, keep)
             aggregations, total = f_facets.result()
-            items = f_page.result()
+            items, page_s = f_page.result()
         facets_time = time.time() - t_par
         if total is None:  # no facet fields configured → plain count
             total = flt.count()
@@ -4870,32 +4843,20 @@ class SearchEngine:
             input.get("sort") is None and hits is not None
         ):
             self._guard_all_filtered_collect(total)
-            all_df = ordered.select(*keep).withColumnRenamed(DOCID, "_id")
-            all_filtered_items = [_row_to_item(r) for r in all_df.collect()]
-        sorting_time = page_secs[0] + (time.time() - t_s)
-
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": int(facets_time * 1000),
-                "search": int(search_time * 1000),
-                "sorting": int(sorting_time * 1000),
-            },
-            "data": {
-                "items": items,
-                "allFilteredItems": all_filtered_items,
-                "aggregations": aggregations,
-            },
-        }
+            all_filtered_items = _collect_items(ordered, keep)
+        sorting_time = page_s + (time.time() - t_s)
+        return _response(
+            per_page, page, total, t0, search_time, facets_time,
+            sorting_time, items, all_filtered_items, aggregations,
+        )
 
     # ------------------------------------------------------------------
     # WAND-accelerated search (block-backed, facetless configs)
     # ------------------------------------------------------------------
-    def _wand_search_applies(self, input: Dict[str, Any]) -> bool:
-        """Relevance-ordered search with nothing to cross — the page is
-        exactly the WAND top-k over the block store, and the total is a
-        membership count (no per-doc score materialization anywhere)."""
+    def _wand_eligible(self, input: Dict[str, Any]) -> bool:
+        """The input shape both block-max WAND routes serve: a
+        relevance-ordered query page over the posting blocks with no
+        constraint WAND's range walk cannot see."""
         return bool(
             input.get("query")
             # quoted segments add phrase constraints WAND can't see
@@ -4903,19 +4864,17 @@ class SearchEngine:
             # fuzzy rewrite / keyset cursors live in the standard path
             and not input.get("fuzzy")
             and input.get("search_after") is None
-            # driver-set tombstones keep the WAND route: fulltext_topk
-            # over-fetches k+|deleted| (bounded) and the membership
-            # count is live-filtered; bulk DataFrame tombstones have no
-            # driver-known bound — standard path
+            # driver-set tombstones keep the WAND routes: the page
+            # over-fetches k+|deleted| (bounded, see fulltext_topk) and
+            # the total / buckets are live-filtered; bulk DataFrame
+            # tombstones have no driver-known bound — standard path
             and self._tombstone_df is None
             and len(self._tombstone_docids) <= 10_000
             and self.index.posting_blocks is not None
-            and not self.index.facet_fields
             and not input.get("sort")
             and not callable(input.get("filter"))
             and input.get("_ids") is None
             and input.get("ids") is None
-            and not input.get("filters")
             and not input.get("not_filters")
             and not input.get("filters_query")
             and not input.get("range_filters")
@@ -4925,9 +4884,35 @@ class SearchEngine:
             and not input.get("is_all_filtered_items")
         )
 
-    def _search_wand(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        import time
+    def _wand_search_applies(self, input: Dict[str, Any]) -> bool:
+        """Relevance-ordered search with nothing to cross — the page is
+        exactly the WAND top-k over the block store, and the total is a
+        membership count (no per-doc score materialization anywhere)."""
+        return (
+            self._wand_eligible(input)
+            and not self.index.facet_fields
+            and not input.get("filters")
+        )
 
+    def _ranked_page(
+        self, topk: DataFrame, page: int, per_page: int, input: Dict[str, Any]
+    ) -> List[Dict[str, Any]]:
+        """Collect the items of page ``page`` from a (_docid, __score)
+        top-k in relevance order: offset/limit over the ranked top-k,
+        one broadcast join to the docs, re-ordered for the page."""
+        by_rank = (F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
+        ranked = (
+            topk.orderBy(*by_rank)
+            .offset((page - 1) * per_page)
+            .limit(per_page)
+        )
+        page_docs = self.index.docs.join(
+            F.broadcast(ranked.select(DOCID, SCORE)), DOCID
+        ).orderBy(*by_rank)
+        keep = self._page_keep(page_docs.columns, input, (SCORE,))
+        return _collect_items(page_docs, keep)
+
+    def _search_wand(self, input: Dict[str, Any]) -> Dict[str, Any]:
         t0 = time.time()
         per_page, page = _parse_paging(input)
         query = input["query"]
@@ -4938,16 +4923,7 @@ class SearchEngine:
         )
         search_time = time.time() - t_s
         if analyzed is None:
-            return {
-                "pagination": {"per_page": per_page, "page": page, "total": 0},
-                "timings": {
-                    "total": int((time.time() - t0) * 1000),
-                    "facets": 0,
-                    "search": int(search_time * 1000),
-                    "sorting": 0,
-                },
-                "data": {"items": [], "allFilteredItems": None, "aggregations": {}},
-            }
+            return _response(per_page, page, 0, t0, search_time, 0, 0, [])
 
         # total = conjunctive membership count: mask-only aggregate over
         # the query terms' decoded blocks — no contribution collection
@@ -4955,33 +4931,11 @@ class SearchEngine:
         total = self._live(self._query_membership(analyzed)).count()
 
         t_p = time.time()
-        k = page * per_page
-        topk = self.fulltext_topk(query, k, _analyzed=analyzed)
-        ranked = topk.orderBy(
-            F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-        ).offset((page - 1) * per_page).limit(per_page)
-        page_docs = self.index.docs.join(
-            F.broadcast(ranked.select(DOCID, SCORE)), DOCID
-        ).orderBy(F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
-        keep = self._page_keep(page_docs.columns, input, (SCORE,))
-        items = [
-            _row_to_item(r)
-            for r in page_docs.select(*keep)
-            .withColumnRenamed(DOCID, "_id")
-            .collect()
-        ]
-        sorting_time = time.time() - t_p
-
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": 0,
-                "search": int(search_time * 1000),
-                "sorting": int(sorting_time * 1000),
-            },
-            "data": {"items": items, "allFilteredItems": None, "aggregations": {}},
-        }
+        topk = self.fulltext_topk(query, page * per_page, _analyzed=analyzed)
+        items = self._ranked_page(topk, page, per_page, input)
+        return _response(
+            per_page, page, total, t0, search_time, 0, time.time() - t_p, items
+        )
 
     def _query_membership(self, analyzed) -> DataFrame:
         """Docids matching the analyzed query conjunctively — a mask-only
@@ -5081,56 +5035,23 @@ class SearchEngine:
         tests/search.spec.ts:105-170). Bucket counts and the total still
         need query membership, but only as a mask aggregate — never the
         per-doc contribution lists."""
-        idx = self.index
         filters = input.get("filters") or {}
         if not (
-            input.get("query")
-            # quoted segments add phrase constraints WAND can't see
-            and '"' not in str(input.get("query"))
-            # fuzzy rewrite / keyset cursors live in the standard path
-            and not input.get("fuzzy")
-            and input.get("search_after") is None
-            # driver-set tombstones keep this route too: the buckets /
-            # total pass flows through the live-filtered docs choke and
-            # the page over-fetches k+|deleted| (see fulltext_topk);
-            # bulk DataFrame tombstones have no driver-known bound
-            and self._tombstone_df is None
-            and len(self._tombstone_docids) <= 10_000
+            self._wand_eligible(input)
             and filters
-            and idx.posting_blocks is not None
-            and idx.facet_posting_blocks is not None
+            and self.index.facet_posting_blocks is not None
         ):
             return False
-        if (
-            input.get("sort")
-            or callable(input.get("filter"))
-            or input.get("_ids") is not None
-            or input.get("ids") is not None
-            or input.get("not_filters")
-            or input.get("filters_query")
-            or input.get("range_filters")
-            or input.get("contains")
-            or input.get("is_all_filtered_items")
-        ):
-            return False
-        fieldset = set(idx.facet_fields)
+        fieldset = set(self.index.facet_fields)
         if any(fld not in fieldset for fld in filters):
             return False
         if self._facet_dim_cache() is None:
             return False
-        # cost estimate from the cached global counts, exactly as
-        # _facetblock_search_applies: the WAND filter decodes every
-        # filter value's posting blocks, so its row work is their sum
-        glob = self._facet_global or {}
-        est = 0
-        n = 0
-        for fld, vals in filters.items():
-            for v in vals or []:
-                n += 1
-                est += glob.get(fld, {}).get(js_key(v) or "", 0)
-        if n == 0:
+        # the WAND filter decodes every filter value's posting blocks
+        per_field = self._filter_value_counts(filters)
+        if not per_field:
             return False
-        return self._route_block_cost(est, len(filters))
+        return self._route_block_cost(sum(per_field), len(filters))
 
     def _search_wand_filtered(
         self, input: Dict[str, Any]
@@ -5142,7 +5063,6 @@ class SearchEngine:
         corpus pass over a mask-only query-membership set. The response
         is bit-identical to the standard path (battery-proven). Returns
         None to decline (caller falls through to the standard path)."""
-        import time
         from concurrent.futures import ThreadPoolExecutor
 
         t0 = time.time()
@@ -5157,8 +5077,18 @@ class SearchEngine:
         if groups is None:
             return None
 
-        persisted: List[DataFrame] = []
-        try:
+        def run_page():
+            if per_page == 0 or analyzed is None:
+                return []
+            topk = self.fulltext_topk_filtered(
+                query,
+                page * per_page,
+                filter_groups=groups,
+                _analyzed=analyzed,
+            )
+            return self._ranked_page(topk, page, per_page, input)
+
+        with self._request_caches(release_expansions=True) as persisted:
             if analyzed is None:
                 membership = local_relation(self.spark, [], f"{DOCID} long")
             else:
@@ -5171,78 +5101,30 @@ class SearchEngine:
             persisted.append(base)
             search_time = time.time() - t_s
 
+            # one corpus pass for all facet buckets + the result total,
+            # next to the page
             t_par = time.time()
-
-            def run_facets():
-                # one corpus pass: all facet buckets + the result total
-                return self._get_buckets_impl(
-                    input, compiled, base, True, with_total=True
-                )
-
-            page_secs = [0.0]
-
-            def run_page():
-                t_p = time.time()
-                if per_page == 0 or analyzed is None:
-                    page_secs[0] = time.time() - t_p
-                    return []
-                topk = self.fulltext_topk_filtered(
-                    query,
-                    page * per_page,
-                    filter_groups=groups,
-                    _analyzed=analyzed,
-                )
-                ranked = (
-                    topk.orderBy(
-                        F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                    )
-                    .offset((page - 1) * per_page)
-                    .limit(per_page)
-                )
-                page_docs = self.index.docs.join(
-                    F.broadcast(ranked.select(DOCID, SCORE)), DOCID
-                ).orderBy(F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
-                keep = self._page_keep(page_docs.columns, input, (SCORE,))
-                out = [
-                    _row_to_item(r)
-                    for r in page_docs.select(*keep)
-                    .withColumnRenamed(DOCID, "_id")
-                    .collect()
-                ]
-                page_secs[0] = time.time() - t_p
-                return out
-
             with ThreadPoolExecutor(max_workers=2) as ex:
-                f_facets = ex.submit(run_facets)
-                f_page = ex.submit(run_page)
+                f_facets = ex.submit(
+                    self._get_buckets_impl,
+                    input,
+                    compiled,
+                    base,
+                    True,
+                    with_total=True,
+                )
+                f_page = ex.submit(_timed, run_page)
                 aggregations, total = f_facets.result()
-                items = f_page.result()
+                items, page_s = f_page.result()
             facets_time = time.time() - t_par
             if total is None:  # defensive: this path requires facet fields
                 total = base.filter(
                     ir_to_column(compiled.final_pred, True)
                 ).count()
-
-            return {
-                "pagination": {
-                    "per_page": per_page, "page": page, "total": total,
-                },
-                "timings": {
-                    "total": int((time.time() - t0) * 1000),
-                    "facets": int(facets_time * 1000),
-                    "search": int(search_time * 1000),
-                    "sorting": int(page_secs[0] * 1000),
-                },
-                "data": {
-                    "items": items,
-                    "allFilteredItems": None,
-                    "aggregations": aggregations,
-                },
-            }
-        finally:
-            for df in persisted:
-                df.unpersist()
-            self.release_expansion_caches()
+            return _response(
+                per_page, page, total, t0, search_time, facets_time,
+                page_s, items, None, aggregations,
+            )
 
     # ------------------------------------------------------------------
     # facet-block search (index-side set algebra, block-backed configs)
@@ -5298,23 +5180,24 @@ class SearchEngine:
         # its row work is the SUM of the values' doc counts; the scan
         # path's is the corpus. Negative/DNF-only inputs have
         # corpus-sized candidates — scan wins there outright.
-        glob = self._facet_global or {}
-        est = None
-        n_filtered = 0
-        for fld, vals in (input.get("filters") or {}).items():
-            if not vals:
-                continue
-            n_filtered += 1
-            tot = sum(
-                glob.get(fld, {}).get(js_key(v) or "", 0) for v in vals
-            )
-            est = tot if est is None else est + tot
-        if est is None:
+        per_field = self._filter_value_counts(input.get("filters") or {})
+        if not per_field:
             return no("negative/DNF-only input: candidates are corpus-sized")
-        chose = self._route_block_cost(est, n_filtered, trace)
+        chose = self._route_block_cost(sum(per_field), len(per_field), trace)
         if not chose and trace is not None and self.ROUTER_FORCE is None:
             trace.append("cost model picked the scan")
         return chose
+
+    def _filter_value_counts(self, filters: Dict[str, Any]) -> List[int]:
+        """Per filtered field (an empty value list skips the field), the
+        summed cached global doc counts of its values: the posting rows
+        a block route decodes for that field."""
+        glob = self._facet_global or {}
+        return [
+            sum(glob.get(fld, {}).get(js_key(v) or "", 0) for v in vals)
+            for fld, vals in filters.items()
+            if vals
+        ]
 
     def _route_block_cost(
         self, est: int, n_filtered: int, trace: Optional[List[str]] = None
@@ -5340,22 +5223,9 @@ class SearchEngine:
         return t_block < t_scan
 
     def _search_facetblocks(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        # the docid-set caches must not outlive the request, even when a
-        # bad sort spec / collect error escapes mid-flight
-        persisted: List[DataFrame] = []
-        try:
-            return self._search_facetblocks_impl(input, persisted)
-        finally:
-            for df in persisted:
-                df.unpersist()
-
-    def _search_facetblocks_impl(
-        self, input: Dict[str, Any], persisted: List[DataFrame]
-    ) -> Dict[str, Any]:
-        import time
         from concurrent.futures import ThreadPoolExecutor
 
-        from .facetblocks import BlockSetAlgebra, _freeze
+        from .facetblocks import BlockSetAlgebra
 
         t0 = time.time()
         per_page, page = _parse_paging(input)
@@ -5363,17 +5233,72 @@ class SearchEngine:
         alg = BlockSetAlgebra(
             self.index, self.index.facet_posting_blocks, self._facet_global
         )
+        with self._request_caches() as persisted:
+            # the final-set job below materializes the bucket sets'
+            # caches as it reads through them (result_pred is built from
+            # the same conjuncts), so the count jobs reuse them
+            counts, count_jobs = self._facetblock_count_plan(
+                alg, compiled, persisted, [compiled.final_pred]
+            )
+            t_s = time.time()
+            final = alg.docids(compiled.final_pred)
+            total = self._block_set_size(final)
+            search_time = time.time() - t_s
 
-        # group fields by bucket-predicate shape (they differ only by
-        # disjunctive self-exclusion) and evaluate each shape ONCE:
-        #   TRUE  → the dimension's cached global counts, zero jobs;
-        #   FALSE → all-zero counts, zero jobs;
-        #   a set → one forward-index pass over docs semi-joined with the
-        #           (small) docid set, stacked for all fields of the
-        #           shape — work scales with the FILTER SET, never the
-        #           per-field posting lists (at 10^12 docs a selective
-        #           filter search touches its own posting blocks plus
-        #           |result| rows of the forward index, period).
+            t_f = time.time()
+            flt = (
+                self.index.docs
+                if final is True
+                else self.index.docs.join(alg.as_df(final), DOCID, "left_semi")
+            )
+            ordered = self._order(flt, input, None)
+            page_df = ordered.offset((page - 1) * per_page).limit(per_page)
+            keep = self._page_keep(page_df.columns, input)
+            with ThreadPoolExecutor(max_workers=len(count_jobs) + 1) as ex:
+                f_page = ex.submit(_timed, _collect_items, page_df, keep)
+                futures = [ex.submit(job) for job in count_jobs]
+                for f in futures:
+                    counts.update(f.result())
+                items, page_s = f_page.result()
+            aggregations = self._assemble_buckets(
+                input, counts, self._facet_dim_cache()
+            )
+            facets_time = time.time() - t_f
+
+            all_filtered_items = None
+            if input.get("is_all_filtered_items"):
+                self._guard_all_filtered_collect(total)
+                all_filtered_items = _collect_items(ordered, keep)
+            return _response(
+                per_page, page, total, t0, search_time, facets_time,
+                page_s, items, all_filtered_items, aggregations,
+            )
+
+    def _facetblock_count_plan(
+        self,
+        alg,
+        compiled,
+        persisted: List[DataFrame],
+        also: Sequence[tuple] = (),
+    ) -> Tuple[Dict[str, Dict[str, int]], List[Callable[[], Dict]]]:
+        """Bucket counts from the facet-block set algebra, planned. Fields
+        are grouped by bucket-predicate shape (they differ only by
+        disjunctive self-exclusion) and each shape is evaluated ONCE:
+          TRUE  → the dimension's cached global counts, zero jobs;
+          FALSE → all-zero counts, zero jobs;
+          a set → one forward-index pass over docs semi-joined with the
+                  (small) docid set, stacked for all fields of the
+                  shape — work scales with the FILTER SET, never the
+                  per-field posting lists (at 10^12 docs a selective
+                  filter search touches its own posting blocks plus
+                  |result| rows of the forward index, period).
+        The bucket sets (and the sets of ``also``) are persisted into
+        ``persisted``, inner sets first, BEFORE any action, so the first
+        job through a set fills its cache. Returns the zero-job counts
+        and one callable per set-shaped group that runs its count job
+        and returns that group's counts."""
+        from .facetblocks import _freeze
+
         groups: Dict[tuple, List[str]] = {}
         gset: Dict[tuple, Any] = {}
         for fld in self.index.facet_fields:
@@ -5382,101 +5307,32 @@ class SearchEngine:
                 groups[key] = []
                 gset[key] = alg.docids(compiled.bucket_pred[fld])
             groups[key].append(fld)
-
-        # the bucket sets are marked persisted BEFORE the first action, so
-        # the final-set job below materializes their caches as it reads
-        # through them (result_pred is built from the same conjuncts) and
-        # the count jobs reuse instead of re-deriving
-        t_s = time.time()
-        final = alg.docids(compiled.final_pred)
         persisted.extend(
             alg.persist(
                 [compiled.bucket_pred[f] for f in self.index.facet_fields]
-                + [compiled.final_pred]
+                + list(also)
             )
         )
-        if final is True:
-            total = self.index.docs.count()
-        elif final is False:
-            total = 0
-        else:
-            total = final.count()
-        search_time = time.time() - t_s
-
-        t_f = time.time()
+        glob = self._facet_global or {}
         counts: Dict[str, Dict[str, int]] = {}
-        count_jobs: List[Tuple[List[str], DataFrame]] = []
+        jobs: List[Callable[[], Dict]] = []
         for key, flds in groups.items():
             s = gset[key]
             if s is False:
-                for f in flds:
-                    counts[f] = {}
+                counts.update({f: {} for f in flds})
             elif s is True:
-                for f in flds:
-                    counts[f] = dict((self._facet_global or {}).get(f, {}))
+                counts.update({f: dict(glob.get(f, {})) for f in flds})
             else:
-                count_jobs.append((flds, s))
+                jobs.append(
+                    functools.partial(self._stacked_field_counts, s, flds)
+                )
+        return counts, jobs
 
-        def group_counts(flds, s):
-            base = self.index.docs.join(s, DOCID, "left_semi")
-            rows = self._stacked_field_counts(base, flds).collect()
-            out: Dict[str, Dict[str, int]] = {f: {} for f in flds}
-            for r in rows:
-                out[r["field"]][r["key"]] = r["doc_count"]
-            return out
-
-        flt = (
-            self.index.docs
-            if final is True
-            else self.index.docs.join(alg.as_df(final), DOCID, "left_semi")
-        )
-        ordered = self._order(flt, input, None)
-        page_df = ordered.offset((page - 1) * per_page).limit(per_page)
-        keep = self._page_keep(page_df.columns, input)
-        page_secs = [0.0]
-
-        def run_page():
-            t_p = time.time()
-            out = [
-                _row_to_item(r)
-                for r in page_df.select(*keep)
-                .withColumnRenamed(DOCID, "_id")
-                .collect()
-            ]
-            page_secs[0] = time.time() - t_p
-            return out
-
-        with ThreadPoolExecutor(max_workers=len(count_jobs) + 1) as ex:
-            f_page = ex.submit(run_page)
-            futures = [ex.submit(group_counts, flds, s) for flds, s in count_jobs]
-            for f in futures:
-                counts.update(f.result())
-            items = f_page.result()
-        aggregations = self._assemble_buckets(
-            input, counts, self._facet_dim_cache()
-        )
-        facets_time = time.time() - t_f
-
-        all_filtered_items = None
-        if input.get("is_all_filtered_items"):
-            self._guard_all_filtered_collect(total)
-            all_df = ordered.select(*keep).withColumnRenamed(DOCID, "_id")
-            all_filtered_items = [_row_to_item(r) for r in all_df.collect()]
-
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": int(facets_time * 1000),
-                "search": int(search_time * 1000),
-                "sorting": int(page_secs[0] * 1000),
-            },
-            "data": {
-                "items": items,
-                "allFilteredItems": all_filtered_items,
-                "aggregations": aggregations,
-            },
-        }
+    def _block_set_size(self, s) -> int:
+        """Doc count of a facet-block docid set (True: every doc)."""
+        if s is True:
+            return self.index.docs.count()
+        return 0 if s is False else s.count()
 
     # ------------------------------------------------------------------
     # buckets (helpers.ts:388-520)
@@ -5585,21 +5441,13 @@ class SearchEngine:
         non-zero groups only — a search() costs ONE corpus pass for all
         of its counting."""
         struct_t = "array<struct<field:string,key:string>>"
-
-        def tag_with(fieldname):
-            # NB: a 2-arg lambda would make F.transform pass (elem, index)
-            return lambda k: F.struct(
-                F.lit(fieldname).alias("field"), k.alias("key")
-            )
-
         arrays = []
         for fld in self.index.facet_fields:
             pred = ir_to_column(compiled.bucket_pred[fld], has_query)
-            mapped = F.transform(
-                F.array_distinct(F.col(FK_PREFIX + fld)), tag_with(fld)
-            )
             arrays.append(
-                F.when(pred, mapped).otherwise(F.lit(None).cast(struct_t))
+                F.when(pred, _tagged_keys(fld)).otherwise(
+                    F.lit(None).cast(struct_t)
+                )
             )
         if with_total:
             total_pred = ir_to_column(compiled.final_pred, has_query)
@@ -5625,83 +5473,47 @@ class SearchEngine:
         """Bucket counts (+ optional result total) from the facet-block
         set algebra — the counting core of ``_search_facetblocks`` for
         callers that need no item page (get_buckets / aggregation)."""
-        from .facetblocks import BlockSetAlgebra, _freeze
+        from .facetblocks import BlockSetAlgebra
 
         compiled = self.compile(input, has_query=False)
         alg = BlockSetAlgebra(
             self.index, self.index.facet_posting_blocks, self._facet_global
         )
-        persisted: List[DataFrame] = []
-        try:
-            groups: Dict[tuple, List[str]] = {}
-            gset: Dict[tuple, Any] = {}
-            for fld in self.index.facet_fields:
-                key = _freeze(compiled.bucket_pred[fld])
-                if key not in groups:
-                    groups[key] = []
-                    gset[key] = alg.docids(compiled.bucket_pred[fld])
-                groups[key].append(fld)
-            persisted.extend(
-                alg.persist(
-                    [compiled.bucket_pred[f] for f in self.index.facet_fields]
-                )
+        with self._request_caches() as persisted:
+            counts, count_jobs = self._facetblock_count_plan(
+                alg, compiled, persisted
             )
-            counts: Dict[str, Dict[str, int]] = {}
-            for key, flds in groups.items():
-                s = gset[key]
-                if s is False:
-                    for f in flds:
-                        counts[f] = {}
-                elif s is True:
-                    for f in flds:
-                        counts[f] = dict((self._facet_global or {}).get(f, {}))
-                else:
-                    base = self.index.docs.join(s, DOCID, "left_semi")
-                    rows = self._stacked_field_counts(base, flds).collect()
-                    for f in flds:
-                        counts[f] = {}
-                    for r in rows:
-                        counts[r["field"]][r["key"]] = r["doc_count"]
+            for job in count_jobs:
+                counts.update(job())
             total = None
             if with_total:
-                final = alg.docids(compiled.final_pred)
-                if final is True:
-                    total = self.index.docs.count()
-                elif final is False:
-                    total = 0
-                else:
-                    total = final.count()
+                total = self._block_set_size(alg.docids(compiled.final_pred))
             return (
                 self._assemble_buckets(input, counts, self._facet_dim_cache()),
                 total,
             )
-        finally:
-            for df in persisted:
-                df.unpersist()
 
     def _stacked_field_counts(
-        self, base: DataFrame, fields: Sequence[str]
-    ) -> DataFrame:
-        """(field, key, doc_count) over ``base`` for ``fields`` with no
-        predicate gating — the forward-index count pass used when the
-        crossing is already applied as a docid semi-join (facet-block
-        search). One explode + one shuffle for the whole field group."""
-        def tag_with(fieldname):
-            # NB: a 2-arg lambda would make F.transform pass (elem, index)
-            return lambda k: F.struct(
-                F.lit(fieldname).alias("field"), k.alias("key")
-            )
-
-        arrays = [
-            F.transform(F.array_distinct(F.col(FK_PREFIX + f)), tag_with(f))
-            for f in fields
-        ]
-        stacked = base.select(
-            F.explode(F.flatten(F.array(*arrays))).alias("fk")
-        ).select("fk.field", "fk.key")
-        return stacked.groupBy("field", "key").agg(
-            F.count("*").alias("doc_count")
+        self, docids: DataFrame, fields: Sequence[str]
+    ) -> Dict[str, Dict[str, int]]:
+        """Per-field bucket counts of ``fields`` over the docs in
+        ``docids``, with no predicate gating — the forward-index count
+        pass used when the crossing is already applied as a docid
+        semi-join (facet-block search). One explode + one shuffle + one
+        collect for the whole field group."""
+        base = self.index.docs.join(docids, DOCID, "left_semi")
+        arrays = [_tagged_keys(f) for f in fields]
+        rows = (
+            base.select(F.explode(F.flatten(F.array(*arrays))).alias("fk"))
+            .select("fk.field", "fk.key")
+            .groupBy("field", "key")
+            .agg(F.count("*").alias("doc_count"))
+            .collect()
         )
+        out: Dict[str, Dict[str, int]] = {f: {} for f in fields}
+        for r in rows:
+            out[r["field"]][r["key"]] = r["doc_count"]
+        return out
 
     def get_buckets(
         self,

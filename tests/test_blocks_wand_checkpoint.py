@@ -131,16 +131,22 @@ def test_checkpointed_build_resume(spark, tx_engine, tmp_path):
 
 
 def test_wide_sum_route_bit_equals_struct_fold(spark, tx_engine):
-    """The rank-pivot score aggregation (WIDE_SUM_MAX_TERMS path) must be
-    bit-identical to the sorted-struct-array fold it replaced — same
-    sorted-term reduction order, +0.0 padding for absent ranks. Forcing
-    the cap to 0 routes everything through the struct fold."""
+    """The plain-sum score aggregation (WIDE_SUM_MAX_TERMS path) must be
+    bit-identical to the sorted-struct-array fold — at most two
+    non-negative addends per doc, whose sum is order-free. Forcing the
+    cap to 0 routes everything through the struct fold; the wildcard
+    patterns cover the term-set union scorer (1, 2 and 3 terms)."""
     queries = ["spark", "shuffle partition", "s", "the", "broadcast join"]
+    patterns = ["spar*", "sc*", "st*"]
     wide_single = {
         q: {r[DOCID]: r["__score"] for r in tx_engine.fulltext_hits(q).collect()}
         for q in queries
     }
     wide_batch = sorted(map(tuple, tx_engine.fulltext_hits_batch(queries).collect()))
+    wide_wild = {
+        p: {r[DOCID]: r["__score"] for r in tx_engine.wildcard_hits(p).collect()}
+        for p in patterns
+    }
     old_cap = tx_engine.WIDE_SUM_MAX_TERMS
     tx_engine.WIDE_SUM_MAX_TERMS = 0
     try:
@@ -154,6 +160,12 @@ def test_wide_sum_route_bit_equals_struct_fold(spark, tx_engine):
             map(tuple, tx_engine.fulltext_hits_batch(queries).collect())
         )
         assert struct_batch == wide_batch and wide_batch
+        for p in patterns:
+            struct_wild = {
+                r[DOCID]: r["__score"]
+                for r in tx_engine.wildcard_hits(p).collect()
+            }
+            assert struct_wild == wide_wild[p] and struct_wild, p
     finally:
         tx_engine.WIDE_SUM_MAX_TERMS = old_cap
 

@@ -71,6 +71,23 @@ def test_surviving_scores_are_stale_identical(eng):
         assert s == before[d]  # idf untouched until purge
 
 
+def test_batch_and_dis_max_hits_exclude_deleted(eng):
+    queries = ["spark", "shuffle partition"]
+    hits = {
+        q: {r["_docid"] for r in eng.fulltext_hits(q).collect()}
+        for q in queries
+    }
+    victim = min(hits["spark"])
+    assert eng.delete_docids([victim]) == 1
+    for qid, q in enumerate(queries):
+        live = hits[q] - {victim}
+        assert {r["_docid"] for r in eng.fulltext_hits(q).collect()} == live
+        batch = eng.fulltext_hits_batch(queries).filter(F.col("qid") == qid)
+        assert {r["_docid"] for r in batch.collect()} == live, q
+    dm = eng.dis_max_hits(["spark"], k=len(hits["spark"]) + 5).collect()
+    assert {r["_id"] for r in dm} == hits["spark"] - {victim}
+
+
 def test_delete_by_external_id_and_idempotence(eng):
     row = eng.index.docs.select("_docid", "id").orderBy("_docid").first()
     assert eng.delete([row["id"]]) == 1

@@ -7,6 +7,10 @@ from __future__ import annotations
 
 import io
 import contextlib
+import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -354,3 +358,52 @@ def test_point_lookup_pushdown_on_id_ordered_docs(spark, tmp_path):
     assert [i["id"] for i in got2["data"]["items"]] == [
         i["id"] for i in got["data"]["items"]
     ]
+
+
+def test_reopened_block_store_decodes_in_a_fresh_process(spark, tmp_path):
+    """A block store reopened by a process launched outside the repo,
+    with no build before it, ships the package itself: its first block
+    decode imports itemsjs_spark on the Python workers. The child finds
+    the repo through its own sys.path only — PYTHONPATH would reach the
+    workers too and hide a missing ship."""
+    tdf = transcripts_df(spark, n_turns=300, n_convs=30, seed=3)
+    mem = itemsjs_spark(
+        spark, tdf, {"searchableFields": ["text"]},
+        order_by=["conv_id", "turn_idx"],
+    )
+    path = str(tmp_path / "artifacts")
+    mem.index.write_blocks(path, n_buckets=2, range_size=256, block_size=64)
+    want = mem.search({"query": "spark"})["pagination"]["total"]
+    assert want > 0
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from itemsjs_spark.engine import Index, SearchEngine
+
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+        eng = SearchEngine(Index.read(spark, {path!r}))
+        assert eng.explain_search({{"query": "spark"}})["route"] == "wand_topk"
+        print(eng.search({{"query": "spark"}})["pagination"]["total"])
+        spark.stop()
+        """
+    )
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=cwd,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.split()[-1]) == want

@@ -5,7 +5,8 @@ the block-store request path must not start Python workers it does not
 need: driver-side relations are JVM ``LocalTableScan``s (never
 ``spark.createDataFrame(<python list>)``, a Python-RDD scan), and a
 selective block decode runs in as many tasks as its posting-count
-estimate asks for, not one per file split."""
+estimate asks for, not one per file split. The route a request takes
+is the one ``explain_search`` reports for it."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 from itemsjs_spark.data.transcripts import transcripts_df
 from itemsjs_spark.engine import Index, SearchEngine, blocks, itemsjs_spark
 from itemsjs_spark.engine.facetblocks import SEP, BlockSetAlgebra
+from itemsjs_spark.engine.query import EngineError
 from itemsjs_spark.engine.relations import local_relation
 
 CFG = {
@@ -103,6 +105,71 @@ def test_wand_topk_route_builds_no_python_list_relation(facetless, list_relation
         b = disk.search(dict(input))
         assert list_relations == [], input
         _same_response(mem.search(dict(input)), b)
+
+
+ROUTE_METHODS = {
+    "_search_wand": "wand_topk",
+    "_search_wand_filtered": "wand_filtered",
+    "_search_facetblocks": "facet_blocks",
+    "_search_standard": "standard_scan",
+}
+
+NATIVE_OFF = {"native_search_enabled": False}
+
+AGREEMENT = [
+    *[("disk", "blocks", {}, input) for _route, input in ROUTED],
+    ("disk", "blocks", {}, {"filters": {"role": ["assistant"]}}),
+    (
+        "disk",
+        "blocks",
+        {},
+        {"query": "spark", "filters": {"role": ["assistant"]}},
+    ),
+    # quoted phrase: both WAND routes decline
+    (
+        "disk",
+        "blocks",
+        {},
+        {"query": '"spark shuffle"', "filters": {"role": ["assistant"]}},
+    ),
+    # unforced router: the tiny corpus declines blocks on cost
+    ("disk", None, {}, {"filters": {"role": ["assistant"]}}),
+    ("mem", None, {}, {"query": "spark"}),
+    ("facetless", "blocks", {}, {"query": "spark", "per_page": 7}),
+    # refused before any route: explain must refuse it too
+    ("disk", "blocks", NATIVE_OFF, {"query": "spark"}),
+]
+
+
+@pytest.mark.parametrize("which,force,cfg,input", AGREEMENT)
+def test_search_takes_the_route_explain_reports(
+    engines, facetless, monkeypatch, which, force, cfg, input
+):
+    eng = {"mem": engines[0], "disk": engines[1], "facetless": facetless[1]}[
+        which
+    ]
+    monkeypatch.setattr(eng, "ROUTER_FORCE", force)
+    for key, value in cfg.items():
+        monkeypatch.setitem(eng.configuration, key, value)
+    ran = []
+    for name, route in ROUTE_METHODS.items():
+        orig = getattr(eng, name)
+
+        def spy(*args, _orig=orig, _route=route):
+            ran.append(_route)
+            return _orig(*args)
+
+        monkeypatch.setattr(eng, name, spy)
+    try:
+        want = [eng.explain_search(dict(input))["route"]]
+    except EngineError:
+        want = []
+        with pytest.raises(EngineError):
+            eng.search(dict(input))
+    else:
+        eng.search(dict(input))
+    assert ran == want, input
+    assert cfg != NATIVE_OFF or want == []
 
 
 def test_local_relation_is_a_jvm_local_scan(spark):
