@@ -376,7 +376,7 @@ def _q_merge_shards(spark, sf_dir):
 def _q_merge_blocks_wand(spark, sf_dir):
     """No-decode DISK segment merge: two checkpointed block stores
     (doc_id halves, range_size 256) merge by shifting shard B's blocks
-    — one rewritten varint per block, O(blocks) not O(postings) — then
+    — one array transform per block, O(blocks) not O(postings) — then
     block-max WAND runs over the union. B's docids shift by
     ceil(250/256)*256 = 256, so the oracle maps _id = doc_id + 256 for
     the second shard; scores are full-corpus lunr (df sums, idf over
@@ -972,8 +972,8 @@ def _q_sort_paginate(spark, sf_dir):
 
 
 def _q_wand_topk(spark, sf_dir):
-    """Scale-path retrieval: block-max WAND over delta+varint posting
-    blocks. Shares the exact scorer's oracle — the compressed/pruned
+    """Scale-path retrieval: block-max WAND over array-typed posting
+    blocks. Shares the exact scorer's oracle — the block/pruned
     path must be rank- and score-identical."""
     from itemsjs_spark.engine.blocks import build_posting_blocks
 

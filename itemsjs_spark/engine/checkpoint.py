@@ -4,11 +4,11 @@ North-rule requirement: "index builds are resumable from per-partition
 checkpoints with lineage and build metrics recorded per partition".
 
 Unit of resumption = a *term-hash bucket*: postings are split by
-``pmod(xxhash64(term), n_buckets)`` and each bucket's compressed posting
-blocks are written as an independent parquet directory plus a manifest
-JSON. A re-run (after a crash, a lost executor batch, or a deliberate
-kill) skips every bucket whose manifest validates and recomputes only
-the missing ones. Hot terms don't defeat the bucketing because blocks.py
+``pmod(xxhash64(term), n_buckets)`` and each bucket's posting blocks
+(blocks.py array layout) are written as an independent parquet
+directory plus a manifest JSON. A re-run (after a crash, a lost
+executor batch, or a deliberate kill) skips every bucket whose manifest
+validates and recomputes only the missing ones. Hot terms don't defeat the bucketing because blocks.py
 already splits a term by docid range *inside* the bucket.
 
 Manifest per bucket (the lineage/metrics record):
@@ -39,7 +39,12 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import DEFAULT_BLOCK_SIZE, build_posting_blocks
+from .blocks import (
+    DEFAULT_BLOCK_SIZE,
+    build_posting_blocks,
+    check_block_layout,
+    postings_from_blocks,
+)
 
 # underscore prefix: invisible to Spark's file index (like _SUCCESS),
 # so the manifest can live next to the data it describes
@@ -189,7 +194,7 @@ def build_blocks_checkpointed(
     range_size: int = 1 << 20,
     block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> Dict[str, object]:
-    """Build the compressed posting-block table under ``out_path``,
+    """Build the posting-block table under ``out_path``,
     bucket by bucket, skipping buckets whose checkpoint already exists.
 
     Returns a build report {resumed: [...], built: [...], manifests}.
@@ -362,8 +367,6 @@ def compact_blocks(
     store is never silently partial. Snapshot sidecar manifests are
     superseded by a fresh base manifest whose fingerprint matches the
     merged contents."""
-    from .blocks import build_posting_blocks, postings_from_blocks
-
     fs = _HadoopFS(spark, out_path)
     staging_root = posixpath.join(out_path, "_compacting")
     # writer-side recovery: restore liveness, then DISCARD any prior
@@ -391,7 +394,9 @@ def compact_blocks(
                 snap = name[len("_manifest."):-len(".json")]
                 if snap:
                     folded.add(snap.removesuffix(".tmp"))
-        postings = postings_from_blocks(spark.read.parquet(bdir)).persist()
+        postings = postings_from_blocks(
+            check_block_layout(spark.read.parquet(bdir), bdir)
+        ).persist()
         fp = input_fingerprint(postings)
         blocks = build_posting_blocks(
             postings, range_size=range_size, block_size=block_size
@@ -556,7 +561,7 @@ def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
             staged = _staged_bucket_ids(fs, out_path)
         df = spark.read.option("basePath", out_path).parquet(glob)
         if not staged:
-            return df
+            return check_block_layout(df, out_path)
         seen = set()
         for f in df.inputFiles():
             m = re.search(r"/bucket=(\d+)/", f)
@@ -568,7 +573,7 @@ def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
         # pass's recovery walk (or by the writer itself, whichever wins)
         last_missing = staged - seen
         if not last_missing:
-            return df
+            return check_block_layout(df, out_path)
     raise RuntimeError(
         f"read_blocks: store at {out_path} kept a torn compaction swap "
         f"across retries (buckets {sorted(last_missing)} live but unbound)"

@@ -4,10 +4,12 @@ The scan path (``__fk_*`` array predicates over the corpus) re-reads
 every document per query; at 10^12 turns a selective filter should touch
 only ITS OWN posting lists, the way the reference intersects per-value
 bitmaps (src/helpers.ts bitset algebra). This module stores each facet
-value's docid set in the SAME delta+varint block store as the fulltext
-postings — the synthetic term is ``field ␟ key`` — so facet filters get
-term-pruned compressed scans, per-range co-location, snapshot appends
-and compaction without any new codec or storage code.
+value's docid set in the SAME block store (blocks.py array layout) as
+the fulltext postings — the synthetic term is ``field ␟ key`` — so
+facet filters get term-pruned block scans, per-range co-location,
+snapshot appends and compaction without any storage code of their own.
+A value's docid set is its blocks exploded (``postings_from_blocks``),
+so the set algebra below is Spark joins end to end: no Python task.
 
 Operations provided (each a bounded relational plan, never a corpus
 scan):
@@ -97,7 +99,7 @@ def _subset(
     fblocks: DataFrame, terms: Sequence[str], est: Optional[int] = None
 ) -> DataFrame:
     """Decode only the requested values' blocks (term predicate lands on
-    the compressed scan); ``est`` sizes the decode (postings_from_blocks)."""
+    the block scan); ``est`` sizes the decode (postings_from_blocks)."""
     return postings_from_blocks(
         fblocks.filter(F.col("term").isin(list(terms))), est=est
     )
@@ -138,7 +140,7 @@ class BlockSetAlgebra:
     ``docids(pred)`` returns ``True`` (every document), ``False`` (no
     document), or a DataFrame of one ``_docid`` column. Leaves decode
     only their own value's blocks (term predicate pushed into the
-    compressed scan); AND chains left-semi joins, OR unions distinct,
+    block scan); AND chains left-semi joins, OR unions distinct,
     and a NOT child inside an AND becomes a left-anti join — so a
     negative filter never materializes a complement. A bare NOT (only
     reachable through OR-of-NOT inputs) anti-joins against the docs

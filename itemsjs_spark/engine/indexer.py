@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 
 from ..analysis.lunr_analysis import build_pipeline, tokenize
 from ..core import scoring
-from .blocks import DEFAULT_BLOCK_SIZE
+from .blocks import DEFAULT_BLOCK_SIZE, check_block_layout
 from .relations import local_relation
 
 FK_PREFIX = "__fk_"
@@ -325,7 +325,7 @@ class Index:
     facet_fields: List[str]
     text_fields: List[Tuple[str, float]]
     configuration: Dict[str, Any] = dc_field(default_factory=dict)
-    # compressed delta+varint block store (blocks.py layout); when set it
+    # posting-block store (blocks.py array layout); when set it
     # is the postings source of record — `postings` may be None and the
     # exact scorer decodes only the query terms' blocks
     posting_blocks: Optional[DataFrame] = None
@@ -375,8 +375,8 @@ class Index:
     ) -> DataFrame:
         """Row-level postings restricted to ``terms`` — THE read API for
         scorers. On a block-backed index the term predicate lands on the
-        compressed parquet scan (PushedFilters + row-group pruning on
-        the term-sorted layout) and only matching blocks are decoded,
+        block parquet scan (PushedFilters + row-group pruning on the
+        term-sorted layout) and only matching blocks are decoded,
         the decode sized by ``est`` (the terms' summed df, see
         blocks.postings_from_blocks); on a row-level index it narrows
         the postings scan the same way."""
@@ -500,10 +500,10 @@ class Index:
         range_size: int = 1 << 20,
         block_size: int = DEFAULT_BLOCK_SIZE,
     ) -> Dict[str, Any]:
-        """Persist with postings as the CHECKPOINTED compressed block
-        store (delta+varint, per-bucket manifests with lineage/metrics —
+        """Persist with postings as the CHECKPOINTED posting-block
+        store (array layout, per-bucket manifests with lineage/metrics —
         checkpoint.py) instead of row-level parquet. The production
-        layout: resumable build, term-pruned compressed scans, and the
+        layout: resumable build, term-pruned block scans, and the
         same files serve both the exact scorer and block-max WAND.
         Returns the checkpoint build report."""
         from .checkpoint import build_blocks_checkpointed
@@ -567,8 +567,10 @@ class Index:
         from .checkpoint import _HadoopFS, read_blocks
         from .packaging import ensure_shipped
 
-        # block decodes run Python closures that import this package on
-        # executors: a store reopened in a fresh process must ship it too
+        # block reads are JVM plans, but phrase verification, snippets
+        # and callback filters run Python closures that import this
+        # package on executors: a store reopened in a fresh process must
+        # ship it too
         ensure_shipped(spark)
         fs = _HadoopFS(spark, path)
         meta = json.loads(fs.read_text(os.path.join(path, "meta.json")))
@@ -580,7 +582,8 @@ class Index:
         elif fs.exists(os.path.join(path, "posting_blocks")):
             blocks = read_blocks(spark, os.path.join(path, "posting_blocks"))
         if fs.exists(os.path.join(path, "facet_blocks")):
-            fblocks = spark.read.parquet(os.path.join(path, "facet_blocks"))
+            fbdir = os.path.join(path, "facet_blocks")
+            fblocks = check_block_layout(spark.read.parquet(fbdir), fbdir)
         positional = None
         if fs.exists(os.path.join(path, "positional")):
             positional = spark.read.parquet(os.path.join(path, "positional"))
@@ -1337,7 +1340,7 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
 
     # disk-store merge: when BOTH sides are block-backed (no row-level
     # postings), the merge never decodes a posting list — B's blocks
-    # shift by a range-aligned offset (shift_blocks rewrites one varint
+    # shift by a range-aligned offset (shift_blocks transforms one array
     # per block), so the cost is O(number of blocks), not O(postings)
     block_backed = (
         a.terms is not None
@@ -1412,11 +1415,10 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
     postings = terms = posting_blocks = facet_posting_blocks = None
     if a.terms is not None:
         if block_backed:
-            from .blocks import BLOCK_SCHEMA, shift_blocks
+            from .blocks import BLOCK_COLUMNS as cols, shift_blocks
 
             # checkpointed stores carry a `bucket` partition column —
-            # a storage detail; normalize to the canonical block schema
-            cols = [s.split()[0] for s in BLOCK_SCHEMA.split(", ")]
+            # a storage detail; normalize to the canonical block columns
             posting_blocks = a.posting_blocks.select(*cols).unionByName(
                 shift_blocks(b.posting_blocks.select(*cols), off, rs)
             )

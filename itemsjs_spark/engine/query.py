@@ -1091,12 +1091,10 @@ class SearchEngine:
         batch_ranges: int = 64,
         _analyzed=None,
     ) -> DataFrame:
-        """Block-max WAND top-k over a compressed posting-block table
+        """Block-max WAND top-k over a posting-block table
         (blocks.py layout; defaults to the index's own block store).
         Scale path: prunes docid ranges by metadata upper bounds; scores
         are bit-identical to ``fulltext_hits``."""
-        from .wand import wand_topk
-
         if blocks is None:
             blocks = self.index.posting_blocks
         if blocks is None:
@@ -1112,26 +1110,44 @@ class SearchEngine:
                 "driver-side query vector — use fulltext_hits, whose "
                 "distributed-expansion path handles this query"
             )
-        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
+        return self._wand(analyzed, k, blocks, batch_ranges)
+
+    def _wand(
+        self,
+        analyzed,
+        k: int,
+        blocks: DataFrame,
+        batch_ranges: int,
+        **filter_args: Any,
+    ) -> DataFrame:
+        """``wand.wand_topk`` for an analyzed query (None: no hits), each
+        admitted range batch scored by ``fulltext_hits``' own plan
+        (``_scored_per_doc`` + conjunctive admission); ``filter_args``
+        are wand_topk's filter parameters."""
+        from .wand import wand_topk
+
         if analyzed is None:
-            return empty
+            return local_relation(
+                self.spark, [], f"{DOCID} long, {SCORE} double"
+            )
         qv, idf_map = analyzed
-        term_weights = {t: qv.weights[t] * idf_map[t] for t in qv.weights}
-        term_masks = {
-            t: sum(1 << i for i in qv.term_tokens[t]) for t in qv.weights
-        }
-        full_mask = (1 << qv.n_tokens) - 1
+        keep = self._admission_pred((1 << qv.n_tokens) - 1, qv.n_tokens, None)
+
+        def score(postings: DataFrame) -> DataFrame:
+            per_doc, sc = self._scored_per_doc(qv, idf_map, postings)
+            return per_doc.filter(keep).select(DOCID, sc.alias(SCORE))
+
         k_eff = self._wand_k_with_tombstones(k)
         out = wand_topk(
             self.spark,
             blocks,
-            term_weights,
-            term_masks,
-            full_mask,
+            {t: qv.weights[t] * idf_map[t] for t in qv.weights},
             qv.magnitude,
             k_eff,
+            score,
             batch_ranges=batch_ranges,
-        ).withColumnRenamed("_docid", DOCID).withColumnRenamed("__score", SCORE)
+            **filter_args,
+        )
         if k_eff != k:
             # removing tombstoned hits only promotes lower ranks, so the
             # live top-k is exactly the filtered over-fetched top-k_eff
@@ -1156,10 +1172,10 @@ class SearchEngine:
         _analyzed=None,
     ) -> DataFrame:
         """Filtered block-max WAND: top-k among docs matching the query
-        AND a facet selection — the filter intersection happens INSIDE
-        each range's scoring group (facet-posting blocks co-locate with
-        the query's posting blocks by docid range), so selective filters
-        never materialize an unfiltered candidate set.
+        AND a facet selection — each admitted range batch's hits are
+        semi-joined with the facet postings of the same ranges
+        (facet-posting blocks share the query blocks' docid ranges), so
+        selective filters never materialize an unfiltered candidate set.
 
         The filter is either ``filters`` (field → values; OR within a
         field, AND across fields) or ``filter_groups`` (CNF over
@@ -1169,8 +1185,6 @@ class SearchEngine:
         ``facet_blocks`` must be built with the same range_size as
         ``blocks`` (facetblocks.build_facet_blocks; defaults to the
         index's own store)."""
-        from .wand import wand_topk
-
         if blocks is None:
             blocks = self.index.posting_blocks
         if facet_blocks is None:
@@ -1185,43 +1199,21 @@ class SearchEngine:
             raise EngineError(
                 "prefix expansion exceeds driver capacity; use fulltext_hits"
             )
-        empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
-        if analyzed is None:
-            return empty
-        qv, idf_map = analyzed
-        term_weights = {t: qv.weights[t] * idf_map[t] for t in qv.weights}
-        term_masks = {
-            t: sum(1 << i for i in qv.term_tokens[t]) for t in qv.weights
-        }
         filter_fields = None
         if filter_groups is None:
             filter_fields = {
                 fld: [x for x in (js_key(v) for v in vals or []) if x is not None]
                 for fld, vals in (filters or {}).items()
             }
-        k_eff = self._wand_k_with_tombstones(k)
-        out = wand_topk(
-            self.spark,
+        return self._wand(
+            analyzed,
+            k,
             blocks,
-            term_weights,
-            term_masks,
-            (1 << qv.n_tokens) - 1,
-            qv.magnitude,
-            k_eff,
-            batch_ranges=batch_ranges,
+            batch_ranges,
             filter_blocks=facet_blocks,
             filter_fields=filter_fields,
             filter_groups=filter_groups,
-        ).withColumnRenamed("_docid", DOCID).withColumnRenamed("__score", SCORE)
-        if k_eff != k:
-            out = (
-                self._live(out)
-                .orderBy(
-                    F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                )
-                .limit(k)
-            )
-        return out
+        )
 
     def fulltext_hits_batch(self, queries: Sequence[str]) -> DataFrame:
         """Score MANY queries in ONE Spark job: (qid, _docid, __score).
@@ -1412,15 +1404,19 @@ class SearchEngine:
         )
 
     def _scored_per_doc(
-        self, qv: "scoring.QueryVector", idf_map: Dict[str, float]
+        self,
+        qv: "scoring.QueryVector",
+        idf_map: Dict[str, float],
+        subset: Optional[DataFrame] = None,
     ) -> Tuple[DataFrame, Column]:
         """The shared lunr scoring plan: per-doc aggregated token mask +
         the deterministic score column, BEFORE any admission predicate —
         ``fulltext_hits`` applies conjunctive/popcount admission,
-        ``query_string_hits`` a per-class (+must/should) mask predicate.
-        One co-partitioned aggregate either way; see ``fulltext_hits``
-        for the plan rationale."""
-        idx = self.index
+        ``query_string_hits`` a per-class (+must/should) mask predicate,
+        WAND conjunctive admission over the ``subset`` postings of its
+        admitted ranges (default: the index's postings of the query
+        terms). One co-partitioned aggregate either way; see
+        ``fulltext_hits`` for the plan rationale."""
         rows = [
             (term, float(qv.weights[term] * idf_map[term]),
              sum(1 << i for i in qv.term_tokens[term]))
@@ -1430,11 +1426,12 @@ class SearchEngine:
         # term subset BEFORE weighting: against a persisted term-sorted
         # postings table this pushes an In(term, ...) filter into the
         # parquet scan (row-group min/max pruning); on a block-backed
-        # index only the matching compressed blocks are decoded; on the
+        # index only the matching blocks are exploded; on the
         # cached path it just narrows the join input
-        subset = idx.postings_subset(
-            list(qv.weights), est=self._postings_estimate(qv.weights)
-        )
+        if subset is None:
+            subset = self.index.postings_subset(
+                list(qv.weights), est=self._postings_estimate(qv.weights)
+            )
         if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
             # small expansions (the common case): weights/masks as MAP
             # literals — a pure projection, no BroadcastExchange job per

@@ -8,7 +8,7 @@ immutable snapshot:
 * ``docs/epoch=N``          — the delta's documents (+ ``_docid`` +
                               ``__fk_*``), docids continuing after the
                               previous snapshot (append contract);
-* ``posting_blocks/…``      — the delta's compressed blocks merged
+* ``posting_blocks/…``      — the delta's posting blocks merged
                               per-bucket via
                               :func:`checkpoint.append_blocks_checkpointed`
                               (snapshot id = ``e<N>``, resumable);

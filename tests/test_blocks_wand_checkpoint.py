@@ -1,21 +1,23 @@
-"""Scale-path artifacts: varint posting blocks, block-max WAND top-k
-(rank- and score-identical to the exact scorer), resumable checkpointed
-builds with per-partition lineage manifests."""
+"""Scale-path artifacts: array-typed posting blocks, block-max WAND
+top-k (rank- and score-identical to the exact scorer), resumable
+checkpointed builds with per-partition lineage manifests."""
 
 from __future__ import annotations
 
+import copy
+import math
 import os
+from collections import Counter
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from itemsjs_spark.data.transcripts import transcripts_df
-from itemsjs_spark.engine import itemsjs_spark
+from itemsjs_spark.engine import Index, itemsjs_spark
 from itemsjs_spark.engine.blocks import (
     build_posting_blocks,
-    decode_varint_deltas,
-    encode_varint_deltas,
+    postings_from_blocks,
+    shift_blocks,
 )
 from itemsjs_spark.engine.checkpoint import (
     MANIFEST,
@@ -23,21 +25,31 @@ from itemsjs_spark.engine.checkpoint import (
     read_blocks,
 )
 from itemsjs_spark.engine.indexer import DOCID
+from itemsjs_spark.engine.relations import local_relation
+
+POSTING_SCHEMA = f"term string, {DOCID} long, tf double"
 
 
-def test_varint_roundtrip():
-    for arr in [
-        np.array([0], dtype=np.int64),
-        np.array([1, 2, 3], dtype=np.int64),
-        np.array([5, 5 + 127, 5 + 128, 10**12, 10**12 + (1 << 40)], dtype=np.int64),
-        np.arange(0, 5000, 7, dtype=np.int64),
-    ]:
-        blob = encode_varint_deltas(arr)
-        out = decode_varint_deltas(blob, len(arr))
-        assert np.array_equal(out, arr)
-    # compression sanity: dense ascending ids ≈ 1 byte/posting
-    dense = np.arange(10**6, 10**6 + 4096, dtype=np.int64)
-    assert len(encode_varint_deltas(dense)) < 4096 * 1.1
+def _postings(df):
+    return Counter(map(tuple, df.select("term", DOCID, "tf").collect()))
+
+
+def _check_block_invariants(rows, block_size):
+    """Every block: ascending docids, metadata equal to the arrays'
+    first/last/max values, at most ``block_size`` postings."""
+    assert rows
+    for r in rows:
+        ids, tfs = r["docids"], r["tfs"]
+        assert r["n"] == len(ids) == len(tfs) <= block_size
+        assert all(a < b for a, b in zip(ids, ids[1:]))
+        assert (r["docid_min"], r["docid_max"]) == (ids[0], ids[-1])
+        assert r["max_tf"] == max(tfs)
+
+
+def test_blocks_explode_to_their_postings(tx_engine, blocks_df):
+    """Decoding the blocks gives back the input postings as a multiset."""
+    postings = tx_engine.index.postings
+    assert _postings(postings_from_blocks(blocks_df)) == _postings(postings)
 
 
 @pytest.fixture(scope="module")
@@ -77,9 +89,8 @@ def test_wand_topk_matches_exact_scorer(spark, tx_engine, blocks_df, query, k):
         .orderBy(F.col("__score").desc(), F.col(DOCID).cast("string").asc())
         .collect()
     )
-    assert [r[DOCID] for r in wand] == [r[DOCID] for r in exact]
-    for w, e in zip(wand, exact):
-        assert w["__score"] == pytest.approx(e["__score"], abs=1e-12)
+    # WAND scores each admitted batch with the exact scorer's own plan
+    assert [tuple(r) for r in wand] == [tuple(r) for r in exact]
 
 
 def test_wand_prunes_by_metadata(spark, tx_engine, blocks_df):
@@ -94,16 +105,40 @@ def test_wand_prunes_by_metadata(spark, tx_engine, blocks_df):
     assert a == b
 
 
-def test_block_metadata_consistency(blocks_df):
-    rows = blocks_df.collect()
-    assert rows
-    for r in rows:
-        ids = decode_varint_deltas(bytes(r["docids"]), r["n"])
-        assert ids[0] == r["docid_min"] and ids[-1] == r["docid_max"]
-        assert np.all(np.diff(ids) > 0)
-        tfs = np.frombuffer(bytes(r["tfs"]), dtype=np.float64)
-        assert len(tfs) == r["n"]
-        assert float(tfs.max()) == pytest.approx(r["max_tf"])
+def test_block_metadata_consistency(tx_engine, blocks_df):
+    _check_block_invariants(blocks_df.collect(), 256)
+    # a term's postings in one range split into ceil(df / block_size)
+    # blocks (block_size 32: the corpus' common terms fill several)
+    postings = tx_engine.index.postings
+    small = build_posting_blocks(postings, range_size=512, block_size=32)
+    rows = small.collect()
+    _check_block_invariants(rows, 32)
+    per_range = Counter(
+        (r["term"], r[DOCID] // 512)
+        for r in postings.select("term", DOCID).collect()
+    )
+    blocks = Counter((r["term"], r["range_id"]) for r in rows)
+    assert blocks == {key: math.ceil(df / 32) for key, df in per_range.items()}
+    assert max(blocks.values()) > 1  # non-vacuous: some term splits
+
+
+def test_shift_blocks_moves_docids_only(blocks_df):
+    """shift_blocks adds ``offset`` to every docid, its range and its
+    block bounds; tfs and block numbering stay as they are."""
+    key = ["term", "range_id", "block_id"]
+    before = {tuple(r[c] for c in key): r for r in blocks_df.collect()}
+    shifted = shift_blocks(blocks_df, 3 * 512, 512).collect()
+    assert len(shifted) == len(before)
+    for r in shifted:
+        b = before[(r["term"], r["range_id"] - 3, r["block_id"])]
+        assert r["docids"] == [d + 3 * 512 for d in b["docids"]]
+        assert (r["docid_min"], r["docid_max"]) == (
+            b["docid_min"] + 3 * 512,
+            b["docid_max"] + 3 * 512,
+        )
+        assert (r["n"], r["max_tf"], r["tfs"]) == (b["n"], b["max_tf"], b["tfs"])
+    with pytest.raises(ValueError):
+        shift_blocks(blocks_df, 100, 512)
 
 
 def test_checkpointed_build_resume(spark, tx_engine, tmp_path):
@@ -243,24 +278,59 @@ def test_distributed_expansion_matches_driver_path(spark, tx_engine):
         del eng.MAX_DRIVER_EXPANSION
 
 
-def test_varint_roundtrip_property():
-    """Property: encode∘decode is identity for any ascending docid list
-    (hypothesis-driven; covers 1-byte through multi-byte varint spans)."""
+def test_block_layout_roundtrip_property(spark):
+    """Property: for any posting set, block size and range size the
+    blocks keep the layout invariants and explode back to the postings
+    (hypothesis-driven; covers ranges and blocks split mid-list)."""
     from hypothesis import given, settings, strategies as st
 
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(
-            st.integers(min_value=0, max_value=2**40), min_size=1, max_size=200
-        )
+    # docids past 32 bits; range_id = docid // range_size must fit an int
+    posting = st.tuples(
+        st.sampled_from(["a", "b", "c"]),
+        st.integers(0, 200) | st.integers(2**32, 2**32 + 200),
+        st.floats(min_value=0.0, max_value=1.0),
     )
-    def check(deltas):
-        ids = np.cumsum(np.array(sorted(deltas), dtype=np.int64))
-        ids = np.unique(ids)
-        out = decode_varint_deltas(encode_varint_deltas(ids), len(ids))
-        assert np.array_equal(out, ids)
+
+    @settings(max_examples=12, deadline=None)
+    @given(
+        st.lists(posting, min_size=1, max_size=60, unique_by=lambda p: p[:2]),
+        st.integers(min_value=1, max_value=8),
+        st.sampled_from([16, 2**12, 2**34]),
+    )
+    def check(rows, block_size, range_size):
+        postings = local_relation(spark, rows, POSTING_SCHEMA)
+        blocks = build_posting_blocks(
+            postings, range_size=range_size, block_size=block_size
+        ).persist()
+        try:
+            _check_block_invariants(blocks.collect(), block_size)
+            assert _postings(postings_from_blocks(blocks)) == Counter(rows)
+        finally:
+            blocks.unpersist()
 
     check()
+
+
+def test_varint_store_is_rejected_at_open(spark, tx_engine, tmp_path):
+    """A store written with the varint layout (docids binary) fails at
+    open time with the rebuild instruction, on every reader."""
+    old = spark.createDataFrame(
+        [("spark", 0, 0, 1, 3, 3, 1.0, bytearray(b"\x03"), bytearray(8))],
+        "term string, range_id int, block_id int, n int, docid_min long, "
+        "docid_max long, max_tf double, docids binary, tfs binary",
+    )
+    path = str(tmp_path / "store")
+    copy.copy(tx_engine.index).write_blocks(path, n_buckets=2, range_size=512)
+    Index.read(spark, path)  # the array layout opens
+    old.write.mode("overwrite").parquet(os.path.join(path, "facet_blocks"))
+    with pytest.raises(ValueError, match="rebuild it with Index.write_blocks"):
+        Index.read(spark, path)
+    for b in range(2):
+        old.write.mode("overwrite").parquet(
+            os.path.join(path, "posting_blocks", f"bucket={b}")
+        )
+    with pytest.raises(ValueError, match="rebuild it with Index.write_blocks"):
+        read_blocks(spark, os.path.join(path, "posting_blocks"))
 
 
 def test_term_dictionary_cap_falls_back_to_scan_job(spark, tx_engine):

@@ -1,15 +1,15 @@
 """Python-task budget of block-store requests.
 
 Every PySpark task pays a fixed start-up cost whatever rows it gets, so
-the block-store request path must not start Python workers it does not
-need: driver-side relations are JVM ``LocalTableScan``s (never
-``spark.createDataFrame(<python list>)``, a Python-RDD scan), and a
-selective block decode runs in as many tasks as its posting-count
-estimate asks for, not one per file split. The route a request takes
-is the one ``explain_search`` reports for it."""
+the block-store path starts none: block encode, decode and WAND
+scoring plan no ``mapInPandas``/``applyInPandas``, and driver-side
+relations are JVM ``LocalTableScan``s (never
+``spark.createDataFrame(<python list>)``, a Python-RDD scan). The
+route a request takes is the one ``explain_search`` reports for it."""
 
 from __future__ import annotations
 
+import copy
 import math
 
 import pytest
@@ -68,6 +68,26 @@ def list_relations(monkeypatch):
     return calls
 
 
+@pytest.fixture
+def python_plans(spark, monkeypatch):
+    """Records every mapInPandas / applyInPandas call: each plans a
+    Python task per partition it runs on."""
+    calls = []
+    df = spark.range(0)
+    for cls, name in (
+        (type(df), "mapInPandas"),
+        (type(df.groupBy()), "applyInPandas"),
+    ):
+        orig = getattr(cls, name)
+
+        def spy(self, *args, _orig=orig, _name=name, **kwargs):
+            calls.append(_name)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, spy)
+    return calls
+
+
 def _same_response(a, b):
     assert a["pagination"] == b["pagination"]
     assert [i["_id"] for i in a["data"]["items"]] == [
@@ -105,6 +125,32 @@ def test_wand_topk_route_builds_no_python_list_relation(facetless, list_relation
         b = disk.search(dict(input))
         assert list_relations == [], input
         _same_response(mem.search(dict(input)), b)
+
+
+@pytest.mark.parametrize("route,input", ROUTED)
+def test_block_routes_plan_no_python_udf(engines, python_plans, route, input):
+    """Block decode, facet-set algebra and WAND scoring are JVM plans."""
+    _mem, disk = engines
+    assert disk.explain_search(dict(input))["route"] == route
+    disk.search(dict(input))
+    assert python_plans == [], route
+
+
+def test_wand_topk_route_plans_no_python_udf(facetless, python_plans):
+    _mem, disk = facetless
+    input = {"query": "spark", "per_page": 7}
+    assert disk.explain_search(dict(input))["route"] == "wand_topk"
+    assert disk.search(dict(input))["data"]["items"]
+    assert python_plans == []
+
+
+def test_write_blocks_plans_no_python_udf(engines, python_plans, tmp_path):
+    """The block encode (postings and facet values) is a Spark plan."""
+    mem, _disk = engines
+    copy.copy(mem.index).write_blocks(
+        str(tmp_path / "store"), n_buckets=2, range_size=512, block_size=64
+    )
+    assert python_plans == []
 
 
 ROUTE_METHODS = {
