@@ -14,7 +14,19 @@ chain from the public lunr 1.0.0 algorithm description:
 * stemmer: Porter (see porter.py).
 
 Pipeline toggles mirror fulltext.ts: ``isExactSearch`` removes
-stemmer+stopwords; ``removeStopWordFilter`` removes stopwords only.
+stemmer+stopwords; ``removeStopWordFilter`` removes stopwords only
+(``pipeline_flags`` maps a configuration to them).
+
+The chain after the tokenizer is written once (``_memoized_chain``: the
+per-token transform and its memo) and exposed in two forms:
+``build_pipeline`` (tokens → analyzed tokens, the index build's and the
+query analyzer's form) and ``build_token_transform`` (token → analyzed
+token or None, for callers that keep raw-token indices via
+``analyze_with_raw_indices``). Every
+consumer — the Arrow tokenizer driver behind the three postings
+artifacts (``engine/indexer.py``), the driver-side query analysis, the
+phrase verifiers, snippets and highlighting — builds on these, so they
+agree on what a token is.
 
 All pure functions — reusable inside Arrow-batched pandas UDFs (index
 build over the cluster) and on the driver (query analysis).
@@ -23,7 +35,7 @@ build over the cluster) and on the driver (query analysis).
 from __future__ import annotations
 
 import re
-from typing import Any, Callable, List
+from typing import Any, Callable, Dict, List, Mapping, Tuple
 
 from .porter import stem
 
@@ -84,22 +96,33 @@ def stop_word_filter(token: str) -> str | None:
     return None if token in STOP_WORDS else token
 
 
-def build_token_transform(
-    is_exact_search: bool = False, remove_stop_word_filter: bool = False
-) -> Callable[[str], str | None]:
-    """Memoized per-token chain (trim → stopword → stem), the unit the
-    pipeline maps over tokens. Exposed separately so positional
-    consumers (snippets/highlighting) can keep raw-token indices while
-    applying the exact same analysis as the index build."""
+def pipeline_flags(configuration: Mapping[str, Any]) -> Dict[str, bool]:
+    """The ``build_pipeline``/``build_token_transform`` keyword flags for
+    an itemsjs configuration (``isExactSearch``, ``removeStopWordFilter``)."""
+    return dict(
+        is_exact_search=bool(configuration.get("isExactSearch")),
+        remove_stop_word_filter=bool(configuration.get("removeStopWordFilter")),
+    )
+
+
+def _memoized_chain(
+    is_exact_search: bool, remove_stop_word_filter: bool
+) -> Tuple[Callable[[str], str | None], Callable[[List[str]], List[str]]]:
+    """The one analysis chain (trim → stopword → stem), memoized, as a
+    (per-token, list) pair sharing one memo.
+
+    Token vocabularies are Zipfian: memoize the WHOLE per-token chain
+    (trim regexes + stopword set + stem) so repeated tokens cost one
+    dict hit. The memo lives in the closure — one per partition in the
+    Arrow tokenizer, one per engine on the driver — and is bounded so a
+    pathological vocabulary can't exhaust executor memory (beyond the
+    cap lookups still hit, new tokens just aren't inserted). The list
+    form inlines the memo lookup
+    instead of calling the per-token form: it is the index build's
+    hottest loop (every corpus token flows through it), where an extra
+    function call per token is measurable."""
     use_stopwords = not (is_exact_search or remove_stop_word_filter)
     use_stemmer = not is_exact_search
-
-    # Token vocabularies are Zipfian: memoize the WHOLE per-token chain
-    # (trim regexes + stopword set + stem) so repeated tokens cost one
-    # dict hit. The memo lives in the closure — one per partition in the
-    # Arrow tokenizer, one per engine on the driver — and is bounded so a
-    # pathological vocabulary can't exhaust executor memory (beyond the
-    # cap lookups still hit, new tokens just aren't inserted).
     memo: dict = {}
     memo_max = 1 << 20
     miss = object()
@@ -118,31 +141,6 @@ def build_token_transform(
                 memo[t] = v
         return v
 
-    return cached
-
-
-def build_pipeline(
-    is_exact_search: bool = False, remove_stop_word_filter: bool = False
-) -> Callable[[List[str]], List[str]]:
-    """Return tokens->tokens fn mirroring lunr.Pipeline.run with the
-    itemsjs toggles applied (fulltext.ts:38-49).
-
-    Same memoized per-token chain as ``build_token_transform``, but with
-    the memo lookup inlined in the loop — this is the index build's
-    hottest path (every corpus token flows through it), so the extra
-    function call per token is worth avoiding here."""
-    use_stopwords = not (is_exact_search or remove_stop_word_filter)
-    use_stemmer = not is_exact_search
-    memo: dict = {}
-    memo_max = 1 << 20
-    miss = object()
-
-    def transform(t: str) -> str | None:
-        t2 = trimmer(t)
-        if use_stopwords and t2 in STOP_WORDS:
-            return None
-        return stem(t2) if use_stemmer else t2
-
     def run(tokens: List[str]) -> List[str]:
         out: List[str] = []
         get = memo.get
@@ -156,8 +154,46 @@ def build_pipeline(
                 out.append(v)
         return out
 
-    return run
+    return cached, run
 
 
-def analyze(value: Any, pipeline: Callable[[List[str]], List[str]]) -> List[str]:
-    return pipeline(tokenize(value))
+def build_token_transform(
+    is_exact_search: bool = False, remove_stop_word_filter: bool = False
+) -> Callable[[str], str | None]:
+    """Per-token form of the chain: token → analyzed token, or None when
+    the chain drops it. Positional consumers (snippets, highlighting)
+    use it to keep raw-token indices (``analyze_with_raw_indices``)."""
+    return _memoized_chain(is_exact_search, remove_stop_word_filter)[0]
+
+
+def build_pipeline(
+    is_exact_search: bool = False, remove_stop_word_filter: bool = False
+) -> Callable[[List[str]], List[str]]:
+    """List form of the chain: tokens → analyzed tokens, mirroring
+    lunr.Pipeline.run with the itemsjs toggles applied
+    (fulltext.ts:38-49)."""
+    return _memoized_chain(is_exact_search, remove_stop_word_filter)[1]
+
+
+def analyze_with_raw_indices(
+    raw: List[str], token_transform: Callable[[str], str | None]
+) -> Tuple[List[str], List[int]]:
+    """(analyzed tokens, index of each in ``raw``): the list form's
+    output together with where each surviving token sat in the raw
+    tokenizer output."""
+    toks: List[str] = []
+    rawidx: List[int] = []
+    for i, t in enumerate(raw):
+        w = token_transform(t)
+        if w is not None:
+            toks.append(w)
+            rawidx.append(i)
+    return toks, rawidx
+
+
+def term_positions(tokens: List[str]) -> Dict[str, List[int]]:
+    """token → its ascending 0-based positions in ``tokens``."""
+    posmap: Dict[str, List[int]] = {}
+    for i, t in enumerate(tokens):
+        posmap.setdefault(t, []).append(i)
+    return posmap

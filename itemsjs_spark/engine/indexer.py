@@ -35,15 +35,20 @@ from __future__ import annotations
 import json
 import math
 import os
+from collections import Counter
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import (
+    Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple,
+)
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..analysis.lunr_analysis import build_pipeline, tokenize
+from ..analysis.lunr_analysis import (
+    build_pipeline, pipeline_flags, term_positions, tokenize,
+)
 from ..core import scoring
 from .blocks import DEFAULT_BLOCK_SIZE, check_block_layout
 from .relations import local_relation
@@ -733,25 +738,85 @@ def _rank_facet_dim(fv: DataFrame, old_rank_col: Optional[str] = None) -> DataFr
     )
 
 
+def _analyzed_map(
+    docs: DataFrame,
+    fields: Sequence[str],
+    configuration: Dict[str, Any],
+    out_schema: T.StructType,
+    reduce_row: Callable[[int, List[List[str]], Tuple[List[Any], ...]], None],
+) -> DataFrame:
+    """The Arrow tokenizer driver behind the three postings artifacts:
+    ``mapInPandas`` over ``docs.select(_docid, *fields)`` that runs each
+    row's field values through the lunr chain (``tokenize`` +
+    ``build_pipeline`` with the configuration's flags). Per row,
+    ``reduce_row(docid, token_lists, cols)`` gets one analyzed token
+    list per field and appends the row's output to ``cols``, one list
+    per ``out_schema`` column. The full build, incremental append and
+    the term-vector lookups all tokenize through here, so snapshots and
+    artifacts agree on what a token is."""
+    flags = pipeline_flags(configuration)
+    names = out_schema.names
+
+    def analyze_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        pipeline = build_pipeline(**flags)
+        for pdf in batches:
+            cols = tuple([] for _ in names)
+            values = [pdf[f].tolist() for f in fields]
+            for did, *row in zip(pdf[DOCID].tolist(), *values):
+                token_lists = []
+                for v in row:
+                    # Arrow hands array cells over as ndarrays and null
+                    # doubles as NaN
+                    if isinstance(v, np.ndarray):
+                        v = v.tolist()
+                    elif isinstance(v, float) and math.isnan(v):
+                        v = None
+                    token_lists.append(pipeline(tokenize(v)))
+                reduce_row(int(did), token_lists, cols)
+            # a batch that emits nothing would type its columns float64,
+            # which Arrow cannot convert to array<int> positions
+            if cols[0]:
+                yield pd.DataFrame(dict(zip(names, cols)))
+
+    return docs.select(DOCID, *fields).mapInPandas(
+        analyze_partition, schema=out_schema
+    )
+
+
 def tokenize_postings(
     docs: DataFrame,
     text_fields: Sequence[Tuple[str, float]],
     configuration: Dict[str, Any],
 ) -> DataFrame:
     """Arrow-batched lunr tokenization of ``docs`` (must carry _docid) →
-    (term, _docid, tf). The per-partition closure is shared by the full
-    build and incremental append, so snapshots tokenize identically."""
-    pipeline_flags = dict(
-        is_exact_search=bool(configuration.get("isExactSearch")),
-        remove_stop_word_filter=bool(configuration.get("removeStopWordFilter")),
-    )
+    (term, _docid, tf), tf being the lunr ``scoring.doc_tf`` fold over
+    the searchable fields in registration order."""
     fields_spec = list(text_fields)
-    present = [f for f, _ in fields_spec if f in docs.columns]
     # fields_spec may register the same column twice (the reference
     # hardcodes `name` boost 10 AND counts it again if listed in
-    # searchableFields — SURVEY.md §2.4); select each physical column
+    # searchableFields — SURVEY.md §2.4); analyze each physical column
     # ONCE and fan the token list out to every registration.
-    unique_present = list(dict.fromkeys(present))
+    unique_present = list(
+        dict.fromkeys(f for f, _ in fields_spec if f in docs.columns)
+    )
+    slots = [
+        (unique_present.index(f) if f in unique_present else None, boost)
+        for f, boost in fields_spec
+    ]
+    empty_tokens: List[str] = []
+
+    def fold_tf(did, token_lists, cols):
+        terms, ids, tfs = cols
+        field_tokens = [
+            (empty_tokens if i is None else token_lists[i], boost)
+            for i, boost in slots
+        ]
+        for term, tf in scoring.doc_tf(field_tokens).items():
+            terms.append(term)
+            ids.append(did)
+            tfs.append(tf)
 
     out_schema = T.StructType(
         [
@@ -760,43 +825,7 @@ def tokenize_postings(
             T.StructField("tf", T.DoubleType()),
         ]
     )
-
-    def tokenize_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pipeline = build_pipeline(**pipeline_flags)
-        empty_tokens: List[str] = []
-        for pdf in batches:
-            out_terms: List[str] = []
-            out_ids: List[int] = []
-            out_tf: List[float] = []
-            ids = pdf[DOCID].tolist()
-            col_map = {f: pdf[f].tolist() for f in unique_present}
-            for i, did in enumerate(ids):
-                tokens_map = {}
-                for f in unique_present:
-                    v = col_map[f][i]
-                    if v is not None and not isinstance(v, (list, tuple)):
-                        if isinstance(v, np.ndarray):
-                            v = v.tolist()
-                        elif isinstance(v, float) and math.isnan(v):
-                            v = None
-                    tokens_map[f] = pipeline(tokenize(v))
-                field_tokens = [
-                    (tokens_map.get(f, empty_tokens), boost)
-                    for f, boost in fields_spec
-                ]
-                tfs = scoring.doc_tf(field_tokens)
-                did = int(did)
-                for term, tf in tfs.items():
-                    out_terms.append(term)
-                    out_ids.append(did)
-                    out_tf.append(tf)
-            yield pd.DataFrame({"term": out_terms, DOCID: out_ids, "tf": out_tf})
-
-    return docs.select(DOCID, *unique_present).mapInPandas(
-        tokenize_partition, schema=out_schema
-    )
+    return _analyzed_map(docs, unique_present, configuration, out_schema, fold_tf)
 
 
 def bm25_postings(
@@ -808,18 +837,24 @@ def bm25_postings(
     ``SearchEngine.enable_bm25``): (term, _docid, c, dl) where ``c`` is
     the term's occurrence count across all searchable fields treated as
     ONE unboosted stream and ``dl`` that stream's post-pipeline token
-    count. Same Arrow tokenization closure family as
-    ``tokenize_postings`` (identical pipeline flags), so BM25 and lunr
-    modes agree on what a token is. lunr's normalized tf cannot recover
-    these (tf = c/len folds the length away), hence the separate
+    count. Same tokenizer driver as ``tokenize_postings``, so BM25 and
+    lunr modes agree on what a token is. lunr's normalized tf cannot
+    recover these (tf = c/len folds the length away), hence the separate
     artifact — same opt-in pattern as positional/trigram postings."""
-    pipeline_flags = dict(
-        is_exact_search=bool(configuration.get("isExactSearch")),
-        remove_stop_word_filter=bool(configuration.get("removeStopWordFilter")),
-    )
     unique_present = list(
         dict.fromkeys(f for f, _ in text_fields if f in docs.columns)
     )
+
+    def count_terms(did, token_lists, cols):
+        terms, ids, cs, dls = cols
+        stream = [t for toks in token_lists for t in toks]
+        dl = len(stream)
+        for term, c in Counter(stream).items():
+            terms.append(term)
+            ids.append(did)
+            cs.append(c)
+            dls.append(dl)
+
     out_schema = T.StructType(
         [
             T.StructField("term", T.StringType()),
@@ -828,42 +863,8 @@ def bm25_postings(
             T.StructField("dl", T.LongType()),
         ]
     )
-
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        from collections import Counter
-
-        pipeline = build_pipeline(**pipeline_flags)
-        for pdf in batches:
-            terms: List[str] = []
-            ids: List[int] = []
-            cs: List[int] = []
-            dls: List[int] = []
-            idvals = pdf[DOCID].tolist()
-            col_map = {f: pdf[f].tolist() for f in unique_present}
-            for i, did in enumerate(idvals):
-                stream: List[str] = []
-                for f in unique_present:
-                    v = col_map[f][i]
-                    if v is not None and not isinstance(v, (list, tuple)):
-                        if isinstance(v, np.ndarray):
-                            v = v.tolist()
-                        elif isinstance(v, float) and math.isnan(v):
-                            v = None
-                    stream.extend(pipeline(tokenize(v)))
-                dl = len(stream)
-                did = int(did)
-                for term, c in Counter(stream).items():
-                    terms.append(term)
-                    ids.append(did)
-                    cs.append(int(c))
-                    dls.append(dl)
-            yield pd.DataFrame(
-                {"term": terms, DOCID: ids, "c": cs, "dl": dls}
-            )
-
-    return docs.select(DOCID, *unique_present).mapInPandas(
-        tok, schema=out_schema
+    return _analyzed_map(
+        docs, unique_present, configuration, out_schema, count_terms
     )
 
 
@@ -897,8 +898,9 @@ def tokenize_position_postings(
     """Positional postings for ONE text field: (term, _docid,
     positions array<int>) where ``positions`` are the ascending 0-based
     indices of ``term`` in the field's ANALYZED token stream (same
-    pipeline as ``tokenize_postings``, so stopword squeeze / stemming
-    line up with the bag-of-words index and the phrase verifier).
+    tokenizer driver as ``tokenize_postings``, so stopword squeeze /
+    stemming line up with the bag-of-words index and the phrase
+    verifier).
 
     Opt-in scale path for phrase-heavy workloads (see
     ``SearchEngine.enable_positions``): the standard phrase plan
@@ -906,10 +908,14 @@ def tokenize_position_postings(
     document length; this artifact makes phrase matching index-only —
     cost scales with the phrase terms' posting sizes instead. The
     positions blowup is paid only by builds that ask for it."""
-    pipeline_flags = dict(
-        is_exact_search=bool(configuration.get("isExactSearch")),
-        remove_stop_word_filter=bool(configuration.get("removeStopWordFilter")),
-    )
+
+    def positions(did, token_lists, cols):
+        terms, ids, pos = cols
+        for term, p in term_positions(token_lists[0]).items():
+            terms.append(term)
+            ids.append(did)
+            pos.append(p)
+
     out_schema = T.StructType(
         [
             T.StructField("term", T.StringType()),
@@ -917,36 +923,7 @@ def tokenize_position_postings(
             T.StructField("positions", T.ArrayType(T.IntegerType())),
         ]
     )
-
-    def tokenize_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pipeline = build_pipeline(**pipeline_flags)
-        for pdf in batches:
-            out_terms: List[str] = []
-            out_ids: List[int] = []
-            out_pos: List[List[int]] = []
-            for did, v in zip(pdf[DOCID].tolist(), pdf[field].tolist()):
-                if v is not None and not isinstance(v, (list, tuple)):
-                    if isinstance(v, np.ndarray):
-                        v = v.tolist()
-                    elif isinstance(v, float) and math.isnan(v):
-                        v = None
-                posmap: Dict[str, List[int]] = {}
-                for i, tok in enumerate(pipeline(tokenize(v))):
-                    posmap.setdefault(tok, []).append(i)
-                did = int(did)
-                for term, positions in posmap.items():
-                    out_terms.append(term)
-                    out_ids.append(did)
-                    out_pos.append(positions)
-            yield pd.DataFrame(
-                {"term": out_terms, DOCID: out_ids, "positions": out_pos}
-            )
-
-    return docs.select(DOCID, field).mapInPandas(
-        tokenize_partition, schema=out_schema
-    )
+    return _analyzed_map(docs, [field], configuration, out_schema, positions)
 
 
 def terms_from_postings(postings: DataFrame, n_docs: int) -> DataFrame:

@@ -24,6 +24,7 @@ import functools
 import math
 import re
 import time
+from bisect import bisect_right
 from typing import (
     Any,
     Callable,
@@ -31,6 +32,7 @@ from typing import (
     Iterable,
     Iterator,
     List,
+    Mapping,
     Optional,
     Sequence,
     Tuple,
@@ -41,7 +43,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..analysis.lunr_analysis import build_pipeline, tokenize
+from ..analysis.lunr_analysis import (
+    analyze_with_raw_indices,
+    build_pipeline,
+    build_token_transform,
+    pipeline_flags,
+    term_positions,
+    tokenize,
+)
 from ..core import facetir, scoring
 from ..jsutil import humanize, js_key
 from .indexer import DOCID, FK_PREFIX, RAW_PREFIX, Index
@@ -89,10 +98,8 @@ def _js_truthy(v: Any) -> bool:
 
 
 def _phrase_out_schema(with_positions: bool) -> T.StructType:
-    from .indexer import DOCID as _docid
-
     fields = [
-        T.StructField(_docid, T.LongType()),
+        T.StructField(DOCID, T.LongType()),
         T.StructField("n_occurrences", T.LongType()),
     ]
     if with_positions:
@@ -102,11 +109,55 @@ def _phrase_out_schema(with_positions: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-def _phrase_out_pdf(ids, occ, mp, with_positions: bool) -> pd.DataFrame:
-    from .indexer import DOCID as _docid
+def _phrase_spans(
+    posmap: Mapping[str, Sequence[int]], terms: Sequence[str], slop: int
+) -> List[Tuple[int, int]]:
+    """(start, end) token positions of every occurrence of the analyzed
+    phrase ``terms``, given each term's ascending positions in ``posmap``
+    — the one phrase semantics of the positional and text verifiers,
+    snippets and highlighting. Greedy nearest binding: from each
+    position of the first term, each next term binds to its smallest
+    position strictly after the previous binding, which must lie within
+    ``slop`` tokens of it; ``end`` is the last binding. An occurrence is
+    counted per start that completes, so overlapping occurrences each
+    count."""
+    lists = [posmap.get(t) for t in terms]
+    if any(lst is None for lst in lists):
+        return []
+    out: List[Tuple[int, int]] = []
+    for i in lists[0]:
+        pos = int(i)
+        for lst in lists[1:]:
+            k = bisect_right(lst, pos)
+            if k < len(lst) and lst[k] <= pos + 1 + slop:
+                pos = int(lst[k])
+            else:
+                break
+        else:
+            out.append((int(i), pos))
+    return out
 
+
+def _phrase_verify(
+    rows: Iterable[Tuple[Any, Mapping[str, Sequence[int]]]],
+    terms: Sequence[str],
+    slop: int,
+    with_positions: bool,
+) -> pd.DataFrame:
+    """One ``phrase_hits`` output batch from (docid, term → positions)
+    rows: the docs with at least one phrase occurrence, their count and
+    (``with_positions``) their start positions."""
+    ids: List[int] = []
+    occ: List[int] = []
+    mp: List[List[int]] = []
+    for did, posmap in rows:
+        starts = [s for s, _e in _phrase_spans(posmap, terms, slop)]
+        if starts:
+            ids.append(int(did))
+            occ.append(len(starts))
+            mp.append(starts)
     data = {
-        _docid: pd.Series(ids, dtype="int64"),
+        DOCID: pd.Series(ids, dtype="int64"),
         "n_occurrences": pd.Series(occ, dtype="int64"),
     }
     if with_positions:
@@ -386,10 +437,7 @@ class SearchEngine:
         self.aggregations: Dict[str, dict] = (
             self.configuration.get("aggregations") or {}
         )
-        self.pipeline = build_pipeline(
-            is_exact_search=bool(self.configuration.get("isExactSearch")),
-            remove_stop_word_filter=bool(self.configuration.get("removeStopWordFilter")),
-        )
+        self.pipeline = build_pipeline(**pipeline_flags(self.configuration))
         self._facet_dim: Optional[Dict[str, List[Tuple[str, int]]]] = None
         # field -> {key: global doc_count} (same collect as _facet_dim):
         # an UNCROSSED facet's bucket counts are exactly the dimension's
@@ -1833,9 +1881,9 @@ class SearchEngine:
         """Index-only phrase matching from positional postings: ONE
         aggregation over the selected terms' position rows does the
         conjunctive prune (all distinct terms present) AND gathers each
-        candidate's per-term position lists; a bisect-chain Arrow
-        kernel then replays the exact greedy semantics of the text
-        verifier. No corpus read, no second job — at 10^12 turns the
+        candidate's per-term position lists; an Arrow kernel then runs
+        ``_phrase_spans``, the matcher the text verifier runs too. No
+        corpus read, no second job — at 10^12 turns the
         cost is the phrase terms' posting sizes, full stop."""
         distinct = sorted(set(terms))
         sel = self._live(pos_df.filter(F.col("term").isin(list(distinct))))
@@ -1852,49 +1900,22 @@ class SearchEngine:
         phrase_terms = tuple(terms)
         win = int(slop)
         with_pos = bool(with_positions)
-        out_schema = _phrase_out_schema(with_pos)
 
         def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bisect import bisect_right
-
-            first = phrase_terms[0]
-            rest = phrase_terms[1:]
             for pdf in batches:
-                ids: List[int] = []
-                occ: List[int] = []
-                mp: List[List[int]] = []
-                for did, ts, ps in zip(pdf[DOCID], pdf["ts"], pdf["ps"]):
-                    posmap = {t: p for t, p in zip(ts, ps)}
-                    starts = posmap.get(first)
-                    if starts is None:
-                        continue
-                    matched: List[int] = []
-                    for i in starts:
-                        pos = int(i)
-                        complete = True
-                        for t in rest:
-                            lst = posmap.get(t)
-                            if lst is None:
-                                complete = False
-                                break
-                            # greedy nearest binding: smallest position
-                            # strictly after pos, within the slop window
-                            k = bisect_right(lst, pos)
-                            if k < len(lst) and int(lst[k]) <= pos + 1 + win:
-                                pos = int(lst[k])
-                            else:
-                                complete = False
-                                break
-                        if complete:
-                            matched.append(int(i))
-                    if matched:
-                        ids.append(int(did))
-                        occ.append(len(matched))
-                        if with_pos:
-                            mp.append(matched)
-                yield _phrase_out_pdf(ids, occ, mp, with_pos)
+                yield _phrase_verify(
+                    (
+                        (did, dict(zip(ts, ps)))
+                        for did, ts, ps in zip(pdf[DOCID], pdf["ts"], pdf["ps"])
+                    ),
+                    phrase_terms,
+                    win,
+                    with_pos,
+                )
 
-        return grouped.mapInPandas(verify, schema=out_schema)
+        return grouped.mapInPandas(
+            verify, schema=_phrase_out_schema(with_pos)
+        )
 
     def phrase_hits(
         self,
@@ -1974,66 +1995,28 @@ class SearchEngine:
         if joined is None:
             return empty
 
-        flags = dict(
-            is_exact_search=bool(self.configuration.get("isExactSearch")),
-            remove_stop_word_filter=bool(
-                self.configuration.get("removeStopWordFilter")
-            ),
-        )
+        flags = pipeline_flags(self.configuration)
         phrase_terms = tuple(terms)
         fld = field
         win = int(slop)
         with_pos = bool(with_positions)
-        out_schema = _phrase_out_schema(with_pos)
 
         def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pipeline = build_pipeline(**flags)
-            m = len(phrase_terms)
-            first = phrase_terms[0]
-            rest = phrase_terms[1:]
-
-            def occurrence_starts(toks: List[str]) -> List[int]:
-                starts: List[int] = []
-                if win == 0:
-                    for i in range(len(toks) - m + 1):
-                        if (
-                            toks[i] == first
-                            and tuple(toks[i : i + m]) == phrase_terms
-                        ):
-                            starts.append(i)
-                    return starts
-                L = len(toks)
-                for i in range(L - m + 1):
-                    if toks[i] != first:
-                        continue
-                    pos = i
-                    for t in rest:
-                        nxt = -1
-                        for k in range(pos + 1, min(pos + 2 + win, L)):
-                            if toks[k] == t:
-                                nxt = k
-                                break
-                        if nxt < 0:
-                            break
-                        pos = nxt
-                    else:
-                        starts.append(i)
-                return starts
-
             for pdf in batches:
-                ids: List[int] = []
-                occ: List[int] = []
-                mp: List[List[int]] = []
-                for did, v in zip(pdf[DOCID], pdf[fld]):
-                    starts = occurrence_starts(pipeline(tokenize(v)))
-                    if starts:
-                        ids.append(int(did))
-                        occ.append(len(starts))
-                        if with_pos:
-                            mp.append(starts)
-                yield _phrase_out_pdf(ids, occ, mp, with_pos)
+                yield _phrase_verify(
+                    (
+                        (did, term_positions(pipeline(tokenize(v))))
+                        for did, v in zip(pdf[DOCID], pdf[fld])
+                    ),
+                    phrase_terms,
+                    win,
+                    with_pos,
+                )
 
-        return joined.mapInPandas(verify, schema=out_schema)
+        return joined.mapInPandas(
+            verify, schema=_phrase_out_schema(with_pos)
+        )
 
     def _phrase_candidate_rows(
         self, terms: Sequence[str], field: str
@@ -2127,12 +2110,7 @@ class SearchEngine:
         if joined is None:
             return empty
 
-        flags = dict(
-            is_exact_search=bool(self.configuration.get("isExactSearch")),
-            remove_stop_word_filter=bool(
-                self.configuration.get("removeStopWordFilter")
-            ),
-        )
+        flags = pipeline_flags(self.configuration)
         phrase_terms = tuple(terms)
         fld = field
         win = int(slop)
@@ -2140,43 +2118,7 @@ class SearchEngine:
         n_after = max(int(after), 0)
 
         def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..analysis.lunr_analysis import build_token_transform
-
             tr = build_token_transform(**flags)
-            m = len(phrase_terms)
-            first = phrase_terms[0]
-            rest = phrase_terms[1:]
-
-            def occurrences(toks: List[str]) -> List[Tuple[int, int]]:
-                """(start, end) index pairs in analyzed-token space —
-                same greedy nearest-binding semantics as phrase_hits."""
-                out: List[Tuple[int, int]] = []
-                L = len(toks)
-                if win == 0:
-                    for i in range(L - m + 1):
-                        if (
-                            toks[i] == first
-                            and tuple(toks[i : i + m]) == phrase_terms
-                        ):
-                            out.append((i, i + m - 1))
-                    return out
-                for i in range(L - m + 1):
-                    if toks[i] != first:
-                        continue
-                    pos = i
-                    for t in rest:
-                        nxt = -1
-                        for k in range(pos + 1, min(pos + 2 + win, L)):
-                            if toks[k] == t:
-                                nxt = k
-                                break
-                        if nxt < 0:
-                            break
-                        pos = nxt
-                    else:
-                        out.append((i, pos))
-                return out
-
             for pdf in batches:
                 ids: List[int] = []
                 occ: List[int] = []
@@ -2185,14 +2127,10 @@ class SearchEngine:
                 snip: List[str] = []
                 for did, v in zip(pdf[DOCID], pdf[fld]):
                     raw = tokenize(v)
-                    toks: List[str] = []
-                    rawidx: List[int] = []
-                    for i, t in enumerate(raw):
-                        w = tr(t)
-                        if w is not None:
-                            toks.append(w)
-                            rawidx.append(i)
-                    found = occurrences(toks)
+                    toks, rawidx = analyze_with_raw_indices(raw, tr)
+                    found = _phrase_spans(
+                        term_positions(toks), phrase_terms, win
+                    )
                     if not found:
                         continue
                     s, e = found[0]
@@ -2651,6 +2589,33 @@ class SearchEngine:
             ).alias(SCORE),
         )
 
+    def _term_vectors(
+        self, docids: Sequence[Any]
+    ) -> Tuple[List[Any], Dict[str, float]]:
+        """The (term, _docid, tf) rows of ``docids`` and the idf of their
+        terms — the term vectors behind ``more_like_this`` and
+        ``prf_hits``. The rows re-tokenize only those docs with the index
+        build's Arrow tokenizer (docid point lookups, never a postings
+        scan by docid); idf is one ``isin``-pruned terms lookup over
+        their vocabulary."""
+        from .indexer import tokenize_postings
+
+        idx = self.index
+        self._ensure_fulltext_materialized()
+        rows = tokenize_postings(
+            self._live(idx.docs).filter(F.col(DOCID).isin(list(docids))),
+            idx.text_fields,
+            self.configuration,
+        ).collect()
+        if not rows:
+            return rows, {}
+        vocab = list(dict.fromkeys(r["term"] for r in rows))
+        idf = {
+            r["term"]: float(r["idf"])
+            for r in idx.terms.filter(F.col("term").isin(vocab)).collect()
+        }
+        return rows, idf
+
     def more_like_this(
         self, id: Any, k: int = 10, max_terms: int = 25
     ) -> DataFrame:
@@ -2669,25 +2634,12 @@ class SearchEngine:
         ≤max_terms terms (term-pruned scan / block decode) with weights
         as map literals, one groupBy(_docid) sum — the same shape as
         fulltext_hits, disjunctive instead of conjunctive."""
-        from .indexer import tokenize_postings
-
         idx = self.index
-        self._ensure_fulltext_materialized()
         empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
-        src_rows = tokenize_postings(
-            self._live(idx.docs).filter(F.col(DOCID) == id),
-            idx.text_fields,
-            self.configuration,
-        ).collect()
+        src_rows, idf = self._term_vectors([id])
         if not src_rows:
             return empty
         tfs = {r["term"]: float(r["tf"]) for r in src_rows}
-        idf = {
-            r["term"]: float(r["idf"])
-            for r in idx.terms.filter(
-                F.col("term").isin(list(tfs))
-            ).collect()
-        }
         ranked = sorted(
             ((tfs[t] * idf[t], t) for t in tfs if t in idf),
             key=lambda x: (-x[0], x[1]),
@@ -2750,8 +2702,6 @@ class SearchEngine:
         the boost is an MLT-shaped term-pruned postings_subset sum over
         ≤fb_terms terms joined onto the base hit set. Cost ∝ fb_docs ×
         doc length + fb_terms postings — never a corpus rescan."""
-        from .indexer import tokenize_postings
-
         idx = self.index
         self._ensure_fulltext_materialized()
         base = self.fulltext_hits(query)
@@ -2765,20 +2715,12 @@ class SearchEngine:
         if not top:
             return base.limit(0)
         fb_ids = [r[DOCID] for r in top]
-        fb_rows = tokenize_postings(
-            self._live(idx.docs).filter(F.col(DOCID).isin(fb_ids)),
-            idx.text_fields,
-            self.configuration,
-        ).collect()
+        fb_rows, idf_map = self._term_vectors(fb_ids)
         qtoks = set(self.pipeline(tokenize(query)))
         sums: Dict[str, float] = {}
         for r in sorted(fb_rows, key=lambda r: (r["term"], r[DOCID])):
             if r["term"] not in qtoks:
                 sums[r["term"]] = sums.get(r["term"], 0.0) + float(r["tf"])
-        idf_map = {
-            r["term"]: float(r["idf"])
-            for r in idx.terms.filter(F.col("term").isin(list(sums))).collect()
-        }
         ranked = sorted(
             (
                 (round(sums[t] * idf_map[t] / len(fb_ids), 6), t)
@@ -4587,8 +4529,6 @@ class SearchEngine:
         otherwise the first token any analyzed query token prefix-matches
         (mirroring lunr's prefix expansion). Cost is O(page · doc len) on
         the driver — the page is bounded and already collected."""
-        from ..analysis.lunr_analysis import build_token_transform
-
         opts = input.get("highlight")
         opts = opts if isinstance(opts, dict) else {}
         before = max(int(opts.get("before", 3)), 0)
@@ -4599,15 +4539,12 @@ class SearchEngine:
             or []
         )
         q = str(input.get("query") or "")
-        tr = build_token_transform(
-            is_exact_search=bool(self.configuration.get("isExactSearch")),
-            remove_stop_word_filter=bool(
-                self.configuration.get("removeStopWordFilter")
-            ),
-        )
-        phrases: List[Tuple[str, ...]] = []
+        tr = build_token_transform(**pipeline_flags(self.configuration))
+        # the phrase terms search() matched on (phrase_hits analyzes the
+        # same way), so a kept '' token stays part of the phrase
+        phrases: List[List[str]] = []
         for seg in _QUOTED_RE.findall(q):
-            terms = tuple(w for w in (tr(t) for t in tokenize(seg)) if w)
+            terms = self.pipeline(tokenize(seg))
             if terms:
                 phrases.append(terms)
         # quoted words still score in the bag (parse_quoted_query), so
@@ -4618,18 +4555,13 @@ class SearchEngine:
         )
 
         def span(raw: List[str]) -> Optional[Tuple[int, int]]:
-            toks: List[str] = []
-            rawidx: List[int] = []
-            for i, t in enumerate(raw):
-                w = tr(t)
-                if w is not None:
-                    toks.append(w)
-                    rawidx.append(i)
+            toks, rawidx = analyze_with_raw_indices(raw, tr)
+            posmap = term_positions(toks)
             for ph in phrases:
-                m = len(ph)
-                for i in range(len(toks) - m + 1):
-                    if tuple(toks[i : i + m]) == ph:
-                        return rawidx[i], rawidx[i + m - 1]
+                found = _phrase_spans(posmap, ph, 0)
+                if found:
+                    s, e = found[0]
+                    return rawidx[s], rawidx[e]
             for i, w in enumerate(toks):
                 if any(w.startswith(qt) for qt in qtoks):
                     return rawidx[i], rawidx[i]

@@ -2,9 +2,10 @@
 context snippets on the page items (driver-side post-pass, any route).
 
 Pins: prefix-expansion matching (lunr semantics), quoted-phrase
-preference over bag tokens, multi-field decoration with per-field
-absence, stopword raw-span behavior, window defaults/clamping, and that
-the decoration composes with filters and pagination."""
+preference over bag tokens (with the same span as ``snippet_hits``),
+multi-field decoration with per-field absence, stopword raw-span
+behavior, window defaults/clamping, and that the decoration composes
+with filters and pagination."""
 
 from __future__ import annotations
 
@@ -82,6 +83,38 @@ def test_highlight_quoted_phrase_preferred(eng):
     assert got[5]["_highlight"]["desc"] == {
         "hl_from": 0, "hl_to": 0, "snippet": "beta last"
     }
+    # the highlight span is snippet_hits' span for the same phrase
+    snip = {
+        r["_docid"]: (r["hl_from"], r["hl_to"])
+        for r in eng.snippet_hits("alpha the beta").collect()
+    }
+    assert snip == {
+        d: (got[d]["_highlight"]["name"]["hl_from"],
+            got[d]["_highlight"]["name"]["hl_to"])
+        for d in (1, 5)
+    }
+
+
+def test_highlight_phrase_keeps_punctuation_only_token(spark):
+    # without the stopword filter '...' analyzes to a kept '' token: the
+    # index, search's phrase constraint and snippet_hits all treat it as
+    # a phrase term, so the highlight must span the whole phrase too
+    # rather than fall back to the first bag token
+    e = itemsjs_spark(
+        spark,
+        [{"id": 1, "name": "foo ... bar"}, {"id": 2, "name": "foo bar"}],
+        {"searchableFields": ["name"], "isExactSearch": True,
+         "custom_id_field": "id"},
+    )
+    got = _items(e.search({"query": '"foo ... bar"', "highlight": True}))
+    assert set(got) == {1}
+    assert got[1]["_highlight"]["name"] == {
+        "hl_from": 0, "hl_to": 2, "snippet": "foo ... bar"
+    }
+    assert [
+        (r["_docid"], r["hl_from"], r["hl_to"])
+        for r in e.snippet_hits("foo ... bar").collect()
+    ] == [(1, 0, 2)]
 
 
 def test_highlight_window_and_fields_opts(eng):

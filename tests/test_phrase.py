@@ -404,8 +404,11 @@ def test_positional_survives_append(spark):
 
 
 def test_positional_random_differential(spark):
-    """Random token streams x random phrases: the positional kernel and
-    the text verifier implement one semantics."""
+    """Random token streams x random phrases x slop 0..2: the positional
+    kernel, the text verifier and snippet_hits implement one semantics —
+    same docs, same occurrence counts, and the snippet starts at the
+    first match position (no stopwords here, so raw == analyzed
+    indices)."""
     import random
 
     rng = random.Random(31)
@@ -427,9 +430,24 @@ def test_positional_random_differential(spark):
         for _ in range(8):
             m = rng.choice([1, 2, 3, 4])
             phrase = " ".join(rng.choice(vocab) for _ in range(m))
-            slop = rng.choice([0, 1, 2])
-            assert _got(e, phrase, slop=slop, use_positions=True) == _got(
-                e, phrase, slop=slop, use_positions=False
-            ), (phrase, slop)
+            for slop in (0, 1, 2):
+                pos, text = (
+                    {
+                        r["_docid"]: (r["n_occurrences"], list(r["match_positions"]))
+                        for r in e.phrase_hits(
+                            phrase, slop=slop, use_positions=use,
+                            with_positions=True,
+                        ).collect()
+                    }
+                    for use in (True, False)
+                )
+                assert pos == text, (phrase, slop)
+                snip = {
+                    r["_docid"]: (r["n_occurrences"], r["hl_from"])
+                    for r in e.snippet_hits(phrase, slop=slop).collect()
+                }
+                assert snip == {
+                    d: (n, starts[0]) for d, (n, starts) in text.items()
+                }, (phrase, slop)
     finally:
         e.release_positions()
