@@ -638,10 +638,14 @@ def _json_safe(obj):
 
 
 def _facet_dim_counts(
-    docs: DataFrame, facet_fields: Sequence[str]
+    docs: DataFrame, facet_fields: Sequence[str], per_doc: bool = False
 ) -> Optional[DataFrame]:
     """(field, key, doc_count, __first=(docid,pos)) per facet value —
     the unranked facet dimension; None when no facet fields.
+    ``per_doc=True`` stops before the aggregate: one row per document
+    and DISTINCT value (``array_distinct`` keeps the values' first-
+    position order within the row) with doc_count 1 — an append
+    delta's partials, summed by the merge's aggregate alone.
 
     All fields in ONE corpus pass: each __fk_ array is tagged with its
     field name via ``transform`` and the concatenated array exploded
@@ -657,8 +661,9 @@ def _facet_dim_counts(
 
     def _tag(fld: str):
         # closure factory: the HOF lambda must take exactly (x, i)
+        keys = F.coalesce(F.col(FK_PREFIX + fld), F.array())
         return F.transform(
-            F.coalesce(F.col(FK_PREFIX + fld), F.array()),
+            F.array_distinct(keys) if per_doc else keys,
             lambda x, i: F.struct(
                 F.lit(fld).alias("field"),
                 i.alias("__pos"),
@@ -671,6 +676,11 @@ def _facet_dim_counts(
     exploded = docs.select(
         F.col(DOCID), F.explode(stacked).alias("__e")
     ).select(DOCID, "__e.field", "__e.__pos", "__e.key")
+    if per_doc:
+        return exploded.select(
+            "field", "key", F.lit(1).cast("long").alias("doc_count"),
+            F.struct(DOCID, "__pos").alias("__first"),
+        )
     return (
         exploded.groupBy("field", "key")
         .agg(
@@ -681,10 +691,54 @@ def _facet_dim_counts(
     )
 
 
-def _rank_facet_dim(fv: DataFrame, old_rank_col: Optional[str] = None) -> DataFrame:
+def _facet_dimension(docs: DataFrame, facet_fields: Sequence[str]) -> DataFrame:
+    """The ranked facet dimension of ``docs`` (one corpus pass), pinned;
+    an empty dimension when there are no facet fields."""
+    fv = _facet_dim_counts(docs, facet_fields)
+    if fv is None:
+        return local_relation(
+            docs.sparkSession, [],
+            "field string, key string, doc_count long, enum_rank int",
+        )
+    return _rank_facet_dim(fv).persist()  # small dimension
+
+
+def _dim_partials(fv: DataFrame, seg: int) -> DataFrame:
+    """Part ``seg`` of a combine as unranked dimension rows whose
+    ``__first = (seg, order, pos)`` sorts every key of an earlier part
+    before the keys new in a later one. A prebuilt part orders by its
+    own enum_rank; an append delta (per-document ``_facet_dim_counts``
+    rows) by first occurrence (docid, pos)."""
+    if "enum_rank" in fv.columns:
+        order, pos = F.col("enum_rank").cast("long"), F.lit(0)
+    else:
+        order, pos = F.col("__first." + DOCID), F.col("__first.__pos")
+    return fv.select(
+        "field", "key", "doc_count",
+        F.struct(
+            F.lit(seg).alias("__seg"), order.alias("__ord"), pos.alias("__pos")
+        ).alias("__first"),
+    )
+
+
+def _merge_facet_dims(parts: Sequence[DataFrame]) -> DataFrame:
+    """THE facet-dimension merge (append, merge, streaming read): union
+    the parts' unranked (field, key, doc_count, __first) rows, sum the
+    counts, keep the least ``__first`` (any struct whose order is the
+    first-occurrence order) and rank once — a rebuild's enum order."""
+    merged = _union([p.select("field", "key", "doc_count", "__first") for p in parts])
+    return _rank_facet_dim(
+        merged.groupBy("field", "key").agg(
+            F.sum("doc_count").alias("doc_count"),
+            F.min("__first").alias("__first"),
+        )
+    ).persist()
+
+
+def _rank_facet_dim(fv: DataFrame) -> DataFrame:
     """enum_rank over an unranked dimension: canonical integer keys
-    ascending, then (optionally) the previous snapshot's rank, then
-    first-occurrence order — JS object key enumeration semantics.
+    ascending, then first-occurrence order (``__first``'s fields in
+    turn) — JS object key enumeration semantics.
 
     Distributed two-level rank (same scheme as assign_docids): a naive
     ``Window.partitionBy(field)`` puts one ENTIRE field's dimension in a
@@ -698,10 +752,9 @@ def _rank_facet_dim(fv: DataFrame, old_rank_col: Optional[str] = None) -> DataFr
     fv = fv.withColumn("__is_int", is_int).withColumn(
         "__int_val", F.when(is_int, F.col("key").cast("long"))
     )
-    order = [F.desc("__is_int"), F.asc_nulls_last("__int_val")]
-    if old_rank_col:
-        order.append(F.asc_nulls_last(old_rank_col))
-    order += [F.col("__first." + DOCID).asc(), F.col("__first.__pos").asc()]
+    order = [F.desc("__is_int"), F.asc_nulls_last("__int_val")] + [
+        F.col("__first." + f).asc() for f in fv.schema["__first"].dataType.names
+    ]
 
     spark = fv.sparkSession
     n_part = max(spark.sparkContext.defaultParallelism, 1)
@@ -926,12 +979,40 @@ def tokenize_position_postings(
     return _analyzed_map(docs, [field], configuration, out_schema, positions)
 
 
-def terms_from_postings(postings: DataFrame, n_docs: int) -> DataFrame:
-    terms = postings.groupBy("term").agg(F.count("*").alias("df"))
+def _with_idf(terms: DataFrame, n_docs: int) -> DataFrame:
+    """(term, df) rows + lunr idf ``1 + ln(N/df)`` for a corpus of
+    ``n_docs`` — the one idf expression."""
     return terms.withColumn(
         "idf",
         F.lit(1.0) + F.log(F.lit(float(n_docs)) / F.col("df").cast("double")),
     )
+
+
+def terms_from_postings(postings: DataFrame, n_docs: int) -> DataFrame:
+    return _with_idf(postings.groupBy("term").agg(F.count("*").alias("df")), n_docs)
+
+
+def _merge_terms(parts: Sequence[DataFrame], n_docs: int) -> DataFrame:
+    """THE df/idf merge: union the parts' (term, df) rows, sum df per
+    term, idf for the combined corpus size — a terms-table-sized job."""
+    merged = _union([p.select("term", "df") for p in parts])
+    return _with_idf(
+        merged.groupBy("term").agg(F.sum("df").alias("df")), n_docs
+    )
+
+
+def _union(frames: Sequence[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+def index_text_fields(configuration: Dict[str, Any]) -> List[Tuple[str, float]]:
+    """The indexed text fields with their lunr boosts: ``name`` (10)
+    then every ``searchableFields`` entry (1)."""
+    searchable = configuration.get("searchableFields") or []
+    return [("name", 10.0)] + [(f, 1.0) for f in searchable]
 
 
 def build_index(
@@ -993,14 +1074,7 @@ def build_index(
         docs.count()
         narrow.unpersist()
 
-    # facet dimension: one pass per field over (docid, key, pos)
-    fv = _facet_dim_counts(docs, facet_fields)
-    if fv is not None:
-        facet_values = _rank_facet_dim(fv).persist()  # small dimension
-    else:
-        facet_values = local_relation(
-            spark, [], "field string, key string, doc_count long, enum_rank int"
-        )
+    facet_values = _facet_dimension(docs, facet_fields)
 
     # fulltext postings
     postings = terms = None
@@ -1011,8 +1085,7 @@ def build_index(
     )
     text_fields: List[Tuple[str, float]] = []
     if want_ft:
-        searchable = configuration.get("searchableFields") or []
-        text_fields = [("name", 10.0)] + [(f, 1.0) for f in searchable]
+        text_fields = index_text_fields(configuration)
         postings = tokenize_postings(docs, text_fields, configuration)
         terms = terms_from_postings(postings, n_docs)
 
@@ -1118,35 +1191,32 @@ def append_index(
     order_by: Optional[Sequence[str]] = None,
 ) -> Index:
     """Iceberg-style snapshot append: incorporate ``new_df`` WITHOUT
-    re-tokenizing the existing corpus.
+    re-tokenizing the existing corpus. The delta becomes a segment
+    (its own docs cache, postings, (term, df) partials and unranked
+    facet counts) that the shared combine core merges exactly like
+    ``merge_indexes`` merges a prebuilt index:
 
     * new docids continue after the current snapshot (``order_by`` ranks
-      the delta internally, offset by ``n_docs``); with ``docid_col``
-      the caller owns uniqueness across snapshots;
+      the delta internally; the core offsets it past
+      ``index.next_docid_base``); with ``docid_col`` the caller owns
+      uniqueness across snapshots;
     * ONLY the delta passes through the Arrow tokenizer — merged
       postings = old postings (parquet scan / cache, no tokenizer in
       its plan) ∪ delta postings;
-    * terms merge incrementally (old df + delta df, idf recomputed for
-      the new corpus size — a terms-table-sized job, not a corpus scan);
-    * the facet dimension merges old ranks with the delta's first
-      occurrences (old keys keep relative enum order; new integer keys
-      interleave numerically, new string keys append — JS semantics).
+    * terms and the facet dimension merge as partials (summed df and
+      doc counts, idf and enum ranks computed once for the combined
+      corpus — see ``merge_indexes``).
 
     Query parity: identical to a full rebuild whenever the delta's
     order keys sort after the existing corpus (the snapshot-append
     contract); docids, tf, df and idf then all coincide.
     """
-    spark = index.spark
-    configuration = index.configuration
-
     interim: List[DataFrame] = []
-    base = index.next_docid_base
     if docid_col:
         new_docs = new_df.withColumn(DOCID, F.col(docid_col).cast("long"))
     elif order_by:
-        ranked = assign_docids(new_df, order_by)
-        interim = getattr(ranked, "_interim_caches", [])
-        new_docs = ranked.withColumn(DOCID, F.col(DOCID) + F.lit(base))
+        new_docs = assign_docids(new_df, order_by)
+        interim = getattr(new_docs, "_interim_caches", [])
     else:
         raise ValueError("need docid_col or order_by for stable _docid")
     # validate the delta's columns BEFORE deriving facet-key columns —
@@ -1170,98 +1240,36 @@ def append_index(
     n_new = new_docs.count()
     for c in interim:
         c.unpersist()
-    n_docs = index.n_docs + n_new
 
-    old_docs, new_docs = _align_appended_schema(index.docs, new_docs)
-    docs = old_docs.unionByName(new_docs.select(*old_docs.columns))
-
-    # dimension merge: old (key → doc_count, enum_rank) ⟗ delta counts
-    delta_fv = _facet_dim_counts(new_docs, index.facet_fields)
-    if delta_fv is not None:
-        old = index.facet_values.select(
-            "field", "key",
-            F.col("doc_count").alias("__old_count"),
-            F.col("enum_rank").alias("__old_rank"),
-        )
-        first_t = f"struct<{DOCID}:bigint,__pos:int>"
-        merged = (
-            old.join(delta_fv, ["field", "key"], "full_outer")
-            .withColumn(
-                "doc_count",
-                F.coalesce("__old_count", F.lit(0))
-                + F.coalesce("doc_count", F.lit(0)),
-            )
-            .withColumn("__first", F.col("__first").cast(first_t))
-        )
-        facet_values = _rank_facet_dim(
-            merged, old_rank_col="__old_rank"
-        ).persist()
-    else:
-        facet_values = index.facet_values
-
-    postings = index.postings
-    terms = index.terms
+    configuration = index.configuration
+    postings = terms = positional = trigram = None
     if index.terms is not None:
-        if index.postings is None:
-            raise ValueError(
-                "append over a block-backed index: decode or re-open the "
-                "row-level postings first (Index.postings required)"
-            )
-        delta_post = tokenize_postings(
-            new_docs, index.text_fields, configuration
-        )
-        postings = index.postings.unionByName(delta_post)
-        delta_terms = delta_post.groupBy("term").agg(
-            F.count("*").alias("__delta_df")
-        )
-        merged_terms = (
-            index.terms.select("term", "df")
-            .join(delta_terms, "term", "full_outer")
-            .withColumn(
-                "df",
-                F.coalesce("df", F.lit(0)) + F.coalesce("__delta_df", F.lit(0)),
-            )
-            .select("term", "df")
-        )
-        terms = merged_terms.withColumn(
-            "idf",
-            F.lit(1.0) + F.log(F.lit(float(n_docs)) / F.col("df").cast("double")),
-        )
-
-    # positional artifact appends the same way the bag index does:
-    # ONLY the delta is position-tokenized (positions are per-document
-    # token indices, so old rows are untouched by new snapshots)
-    positional = index.positional
-    if positional is not None and index.positional_fields:
-        deltas = [
+        postings = tokenize_postings(new_docs, index.text_fields, configuration)
+        terms = terms_from_postings(postings, n_new)
+    # positions and grams are per-document: only the delta is analyzed
+    if index.positional is not None:
+        positional = _union([
             tokenize_position_postings(new_docs, fld, configuration).select(
                 F.lit(fld).alias("field"), "term", DOCID, "positions"
             )
             for fld in index.positional_fields
-            if fld in new_docs.columns
-        ]
-        for d in deltas:
-            positional = positional.unionByName(d)
-
-    # trigram artifact: same delta-only rule — grams are per-document,
-    # old rows are untouched by new snapshots
-    trigram = index.trigram
-    if trigram is not None and index.trigram_fields:
-        for fld in index.trigram_fields:
-            if fld in new_docs.columns:
-                trigram = trigram.unionByName(
-                    trigram_postings(new_docs, fld).select(
-                        F.lit(fld).alias("field"), "gram", DOCID
-                    )
-                )
-
-    return Index(
-        spark=spark,
-        docs=docs,
-        facet_values=facet_values,
+        ])
+    if index.trigram is not None:
+        trigram = _union([
+            trigram_postings(new_docs, fld).select(
+                F.lit(fld).alias("field"), "gram", DOCID
+            )
+            for fld in index.trigram_fields
+        ])
+    delta = Index(
+        spark=index.spark,
+        docs=new_docs,
+        facet_values=_facet_dim_counts(
+            new_docs, index.facet_fields, per_doc=True
+        ),
         postings=postings,
         terms=terms,
-        n_docs=n_docs,
+        n_docs=n_new,
         facet_fields=index.facet_fields,
         text_fields=index.text_fields,
         configuration=configuration,
@@ -1269,13 +1277,8 @@ def append_index(
         positional_fields=list(index.positional_fields),
         trigram=trigram,
         trigram_fields=list(index.trigram_fields),
-        tombstones=index.tombstones,
-        # delta docids continued from the (possibly sparse) base space
-        docid_ceiling=(
-            base + n_new if (order_by and base != index.n_docs) else None
-        ),
-        block_meta=dict(index.block_meta),
     )
+    return _combine(index, delta, offset_b=not docid_col)[0]
 
 
 def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
@@ -1285,7 +1288,8 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
     as independent per-shard index builds (each a bounded job over its
     slice) followed by this merge — a postings union whose term->docID
     lists the block writer then re-sorts by (term, docid range); no
-    corpus text is ever read here.
+    corpus text is ever read here. ``append_index`` runs the same core
+    with a freshly tokenized delta segment as B.
 
     * both indexes must be built under the same facet/text fields (the
       artifacts bake them in);
@@ -1294,9 +1298,9 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
       (``docid_col`` builds over naturally disjoint key ranges);
     * terms merge as df_a + df_b with idf recomputed for the merged
       corpus size — a terms-table-sized job;
-    * facet dimension: A's enum ranks are preserved; B-only keys
-      interleave canonically (integer keys numerically, string keys by
-      B's first-occurrence order — JS object-key semantics), which IS a
+    * facet dimension: counts sum; A's enum ranks are preserved; B-only
+      keys interleave canonically (integer keys numerically, string
+      keys by B's own enum order — JS object-key semantics), which IS a
       full rebuild's order whenever A's rows precede B's;
     * parity: identical to one build over A's∪B's corpus whenever A's
       order keys sort before B's (the snapshot-append contract,
@@ -1306,6 +1310,15 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
 
     Reference reindex (src/index.ts:82-86) rebuilds from scratch;
     merging prebuilt shards is the scale extension."""
+    return _combine(a, b, offset_b)[0]
+
+
+def _combine(a: Index, b: Index, offset_b: bool) -> Tuple[Index, int]:
+    """The one index-combination core behind ``merge_indexes`` and
+    ``append_index``: B (a prebuilt index, or an append's delta segment
+    whose ``facet_values`` are per-document ``_facet_dim_counts`` rows)
+    joins A as a second part.
+    Returns the combined index and the docid offset B was shifted by."""
     if a.facet_fields != b.facet_fields or a.text_fields != b.text_fields:
         raise ValueError(
             "merge_indexes needs indexes built under the same "
@@ -1313,7 +1326,6 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
         )
     if (a.terms is None) != (b.terms is None):
         raise ValueError("merge needs BOTH indexes fulltext or NEITHER")
-    spark = a.spark
 
     # disk-store merge: when BOTH sides are block-backed (no row-level
     # postings), the merge never decodes a posting list — B's blocks
@@ -1355,39 +1367,11 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
     docs = old_docs.unionByName(b_docs.select(*old_docs.columns))
     n_docs = a.n_docs + b.n_docs
 
+    facet_values = a.facet_values
     if a.facet_fields:
-        olda = a.facet_values.select(
-            "field",
-            "key",
-            F.col("doc_count").alias("__old_count"),
-            F.col("enum_rank").alias("__old_rank"),
-        )
-        first_t = f"struct<{DOCID}:bigint,__pos:int>"
-        # B's enum_rank is the ordering proxy for B-only keys: it
-        # already encodes B's canonical-then-first-occurrence order
-        bdim = b.facet_values.select(
-            "field",
-            "key",
-            "doc_count",
-            F.struct(
-                F.col("enum_rank").cast("long").alias(DOCID),
-                F.lit(0).alias("__pos"),
-            ).alias("__first"),
-        )
-        merged = (
-            olda.join(bdim, ["field", "key"], "full_outer")
-            .withColumn(
-                "doc_count",
-                F.coalesce("__old_count", F.lit(0))
-                + F.coalesce("doc_count", F.lit(0)),
-            )
-            .withColumn("__first", F.col("__first").cast(first_t))
-        )
-        facet_values = _rank_facet_dim(
-            merged, old_rank_col="__old_rank"
-        ).persist()
-    else:
-        facet_values = a.facet_values
+        facet_values = _merge_facet_dims([
+            _dim_partials(a.facet_values, 0), _dim_partials(b.facet_values, 1)
+        ])
 
     postings = terms = posting_blocks = facet_posting_blocks = None
     if a.terms is not None:
@@ -1410,30 +1394,14 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
                 )
         elif a.postings is None or b.postings is None:
             raise ValueError(
-                "merge needs row-level postings on both sides, or "
-                "BOTH sides block-backed (posting_blocks without "
-                "postings) for the no-decode disk merge"
+                "combining indexes needs row-level postings "
+                "(Index.postings) on both sides, or BOTH sides "
+                "block-backed (posting_blocks without postings) for the "
+                "no-decode disk merge"
             )
         else:
             postings = a.postings.unionByName(shift(b.postings))
-        terms = (
-            a.terms.select("term", F.col("df").alias("__dfa"))
-            .join(
-                b.terms.select("term", F.col("df").alias("__dfb")),
-                "term",
-                "full_outer",
-            )
-            .withColumn(
-                "df",
-                F.coalesce("__dfa", F.lit(0)) + F.coalesce("__dfb", F.lit(0)),
-            )
-            .select("term", "df")
-            .withColumn(
-                "idf",
-                F.lit(1.0)
-                + F.log(F.lit(float(n_docs)) / F.col("df").cast("double")),
-            )
-        )
+        terms = _merge_terms([a.terms, b.terms], n_docs)
 
     positional = None
     positional_fields: List[str] = []
@@ -1455,23 +1423,21 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
         trigram = a.trigram.unionByName(shift(b.trigram))
         trigram_fields = list(a.trigram_fields)
 
-    tombstones = None
     parts = [t for t in (
         a.tombstones,
         shift(b.tombstones) if b.tombstones is not None else None,
     ) if t is not None]
+    tombstones = None
     if parts:
-        tombstones = parts[0]
-        for p in parts[1:]:
-            tombstones = tombstones.unionByName(p).distinct()
+        tombstones = parts[0] if len(parts) == 1 else _union(parts).distinct()
 
     ceiling: Optional[int] = None
     if offset_b:
         ceiling = off + b.next_docid_base
         if ceiling == n_docs:
             ceiling = None  # dense — keep the default contract
-    return Index(
-        spark=spark,
+    combined = Index(
+        spark=a.spark,
         docs=docs,
         facet_values=facet_values,
         postings=postings,
@@ -1488,5 +1454,6 @@ def merge_indexes(a: Index, b: Index, offset_b: bool = True) -> Index:
         trigram_fields=trigram_fields,
         tombstones=tombstones,
         docid_ceiling=ceiling,
-        block_meta=dict(a.block_meta) if block_backed else {},
+        block_meta=dict(a.block_meta),
     )
+    return combined, off

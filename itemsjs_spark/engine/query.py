@@ -556,8 +556,9 @@ class SearchEngine:
         self, new_df: DataFrame, docid_col=None, order_by=None
     ) -> "SearchEngine":
         """Snapshot append (scale extension beyond the reference's
-        full-rebuild reindex): only the delta is tokenized; see
-        indexer.append_index for the merge semantics."""
+        full-rebuild reindex): only the delta is tokenized, and the
+        delta segment is merged by the same core as ``merge_with``; see
+        indexer.append_index."""
         from .indexer import append_index
 
         eng = SearchEngine(
@@ -570,13 +571,14 @@ class SearchEngine:
     def merge_with(
         self, other: "SearchEngine", offset_other: bool = True
     ) -> "SearchEngine":
-        """Segment merge (see indexer.merge_indexes): one engine over
-        both corpora without re-tokenizing either — the shard-build plan
-        for huge corpora. Driver-set tombstones carry from both sides
-        (the other engine's shifted with its docids); bulk DataFrame
+        """Segment merge (see indexer.merge_indexes, whose combine core
+        append also runs): one engine over both corpora without
+        re-tokenizing either — the shard-build plan for huge corpora.
+        Driver-set tombstones carry from both sides (the other engine's
+        shifted by the offset the core gave its docids); bulk DataFrame
         tombstones must be made durable first (save_tombstones +
         reopen) so the merge can shift them at the Index level."""
-        from .indexer import merge_indexes
+        from .indexer import _combine
 
         for e, side in ((self, "self"), (other, "other")):
             if (
@@ -587,10 +589,8 @@ class SearchEngine:
                     f"merge_with: {side} engine holds in-memory bulk "
                     "tombstones — save_tombstones() and reopen first"
                 )
-        eng = SearchEngine(
-            merge_indexes(self.index, other.index, offset_b=offset_other)
-        )
-        off = self.index.n_docs if offset_other else 0
+        merged, off = _combine(self.index, other.index, offset_other)
+        eng = SearchEngine(merged)
         eng._tombstone_docids = set(self._tombstone_docids) | {
             d + off for d in other._tombstone_docids
         }
@@ -836,7 +836,7 @@ class SearchEngine:
         postings. Returns a new engine with no tombstones."""
         import dataclasses
 
-        from .indexer import _facet_dim_counts, _rank_facet_dim
+        from .indexer import _facet_dimension, terms_from_postings
 
         idx = self.index
         live = self._live(idx.docs)
@@ -851,23 +851,8 @@ class SearchEngine:
         new_postings = new_terms = None
         if postings is not None:
             new_postings = self._live(postings)
-            new_terms = (
-                new_postings.groupBy("term")
-                .agg(F.count("*").alias("df"))
-                .withColumn(
-                    "idf",
-                    F.lit(1.0)
-                    + F.log(
-                        F.lit(float(n_live)) / F.col("df").cast("double")
-                    ),
-                )
-            )
-
-        if idx.facet_fields:
-            fv = _facet_dim_counts(live, idx.facet_fields)
-            facet_values = _rank_facet_dim(fv).persist()
-        else:
-            facet_values = idx.facet_values
+            new_terms = terms_from_postings(new_postings, n_live)
+        facet_values = _facet_dimension(live, idx.facet_fields)
 
         positional = None
         if idx.positional is not None:

@@ -50,11 +50,14 @@ from ..engine.indexer import (
     FK_PREFIX,
     Index,
     _facet_dim_counts,
-    _rank_facet_dim,
+    _merge_facet_dims,
+    _merge_terms,
     assign_docids,
     facet_keys_col,
+    index_text_fields,
     tokenize_postings,
 )
+from ..engine.relations import local_relation
 
 META = "meta.json"
 
@@ -93,8 +96,7 @@ class StreamingIndexWriter:
         self.compact_every = compact_every
         aggs = self.configuration.get("aggregations") or {}
         self.facet_fields = list(aggs.keys())
-        searchable = self.configuration.get("searchableFields") or []
-        self.text_fields = [("name", 10.0)] + [(f, 1.0) for f in searchable]
+        self.text_fields = index_text_fields(self.configuration)
 
     # -- meta ------------------------------------------------------------
     def _read_meta(self, fs: _HadoopFS) -> Dict[str, Any]:
@@ -261,17 +263,16 @@ def read_stream_index(
 
     fdir = posixpath.join(out_path, "facet_counts")
     if facet_fields and fs.exists(fdir):
-        raw = spark.read.option("basePath", fdir).parquet(
-            posixpath.join(fdir, "epoch=*")
-        ).drop("epoch")
-        merged = raw.groupBy("field", "key").agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.min("__first").alias("__first"),
-        )
-        facet_values = _rank_facet_dim(merged).persist()
+        # epochs share one docid space: their (docid, pos) first
+        # occurrences already order globally
+        facet_values = _merge_facet_dims([
+            spark.read.option("basePath", fdir).parquet(
+                posixpath.join(fdir, "epoch=*")
+            )
+        ])
     else:
-        facet_values = spark.createDataFrame(
-            [], "field string, key string, doc_count long, enum_rank int"
+        facet_values = local_relation(
+            spark, [], "field string, key string, doc_count long, enum_rank int"
         )
 
     terms = blocks = None
@@ -280,15 +281,7 @@ def read_stream_index(
         tc = spark.read.option("basePath", tdir).parquet(
             posixpath.join(tdir, "epoch=*")
         )
-        terms = (
-            tc.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .withColumn(
-                "idf",
-                F.lit(1.0)
-                + F.log(F.lit(float(n_docs)) / F.col("df").cast("double")),
-            )
-        )
+        terms = _merge_terms([tc], n_docs)
         blocks = read_blocks(spark, posixpath.join(out_path, "posting_blocks"))
 
     # serve facet blocks only when they cover EVERY doc-contributing
@@ -304,8 +297,6 @@ def read_stream_index(
         read_blocks(spark, fbdir) if fb_covers and fs.exists(fbdir) else None
     )
 
-    searchable = configuration.get("searchableFields") or []
-    text_fields = [("name", 10.0)] + [(f, 1.0) for f in searchable]
     return Index(
         spark=spark,
         docs=docs,
@@ -314,7 +305,7 @@ def read_stream_index(
         terms=terms,
         n_docs=n_docs,
         facet_fields=facet_fields,
-        text_fields=text_fields,
+        text_fields=index_text_fields(configuration),
         configuration=dict(configuration),
         posting_blocks=blocks,
         facet_posting_blocks=fblocks,

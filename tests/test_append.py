@@ -120,6 +120,67 @@ def test_append_facet_dimension_merge(spark):
     assert rows["green"][0] == 1 and rows["green"][1] == 3
 
 
+def test_combined_dims_and_terms_equal_single_build(spark):
+    """Every index-combination path — append by order_by and by
+    docid_col, merge_with, purge_deleted — yields the facet dimension
+    (doc_count AND enum_rank) and the terms table (df, idf bit-equal)
+    of one build over the combined corpus. Keys cover canonical ints,
+    non-canonical int-like strings ("01", "007"), strings on both
+    sides or one side only, array-valued fields and nulls."""
+    cfg = {
+        "aggregations": {"tags": {}, "color": {}, "size": {}},
+        "searchableFields": ["text"],
+    }
+    schema = (
+        "id long, name string, text string, tags array<string>, "
+        "color string, size long"
+    )
+    base, delta, purged = (
+        spark.createDataFrame(rows, schema)
+        for rows in (
+            [
+                (1, "alpha", "spark shuffle", ["b", "7", "01"], "red", 3),
+                (2, "beta", "shuffle join", ["a", "007", "2"], None, None),
+                (3, "gamma", "join broadcast", None, "blue", 10),
+            ],
+            [
+                (4, "delta", "spark spark", ["z", "a", "10", "01"], "green", 3),
+                (5, "eps", "window join", ["b", "y", "007"], "red", None),
+            ],
+            [
+                (0, "zeta", "purged words", ["x", "a", "4"], "purple", 99),
+                (6, "eta", "shuffle", ["2", "q"], "red", 3),
+            ],
+        )
+    )
+
+    def build(df, **kw):
+        return itemsjs_spark(spark, df, cfg, **kw)
+
+    def parts(eng):
+        return (
+            sorted(map(tuple, eng.index.facet_values.select(
+                "field", "key", "doc_count", "enum_rank").collect())),
+            sorted(map(tuple, eng.index.terms.select(
+                "term", "df", "idf").collect())),
+        )
+
+    by_id = {"order_by": ["id"]}
+    want = parts(build(base.unionByName(delta), **by_id))
+    with_extra = build(base.unionByName(purged).unionByName(delta), **by_id)
+    with_extra.delete([0, 6])
+    got = {
+        "append order_by": build(base, **by_id).append(delta, **by_id),
+        "append docid_col": build(base, docid_col="id").append(
+            delta, docid_col="id"
+        ),
+        "merge_with": build(base, **by_id).merge_with(build(delta, **by_id)),
+        "purge_deleted": with_extra.purge_deleted(),
+    }
+    for name, eng in got.items():
+        assert parts(eng) == want, name
+
+
 def test_block_store_snapshot_append(spark, corpora, tmp_path):
     base, delta = corpora
     out = str(tmp_path / "blocks")

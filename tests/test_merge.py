@@ -128,23 +128,31 @@ def test_merge_no_tokenizer_in_plan(engines):
     assert "InMemoryTableScan" in plan or "MapInPandas" not in plan
 
 
-def test_block_store_merge_no_decode(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def block_stores(spark, corpus, tmp_path_factory):
+    """Shards A and B (A's order keys first) written as block stores
+    with range_size=128."""
+    cut = "c000050"
+    root = tmp_path_factory.mktemp("mergeblocks")
+    pa, pb = str(root / "a"), str(root / "b")
+    for path, df in (
+        (pa, corpus.filter(F.col("conv_id") < cut)),
+        (pb, corpus.filter(F.col("conv_id") >= cut)),
+    ):
+        itemsjs_spark(
+            spark, df, CFG, order_by=["conv_id", "turn_idx"]
+        ).index.write_blocks(path, n_buckets=2, range_size=128, block_size=64)
+    return pa, pb
+
+
+def test_block_store_merge_no_decode(spark, corpus, block_stores):
     """Disk-store segment merge: two write_blocks stores combine by
     shifting B's blocks one varint at a time — scores equal a full
     build (per external turn identity), WAND equals the exact scorer,
     and the sparse docid space is recorded for later appends."""
     from itemsjs_spark.engine import Index
 
-    cut = "c000050"
-    a_df = corpus.filter(F.col("conv_id") < cut)
-    b_df = corpus.filter(F.col("conv_id") >= cut)
-    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
-    itemsjs_spark(
-        spark, a_df, CFG, order_by=["conv_id", "turn_idx"]
-    ).index.write_blocks(pa, n_buckets=2, range_size=128, block_size=64)
-    itemsjs_spark(
-        spark, b_df, CFG, order_by=["conv_id", "turn_idx"]
-    ).index.write_blocks(pb, n_buckets=2, range_size=128, block_size=64)
+    pa, pb = block_stores
     ia, ib = Index.read(spark, pa), Index.read(spark, pb)
     assert ia.postings is None and ia.posting_blocks is not None
     assert ia.block_meta["range_size"] == 128
@@ -204,3 +212,24 @@ def test_block_store_merge_no_decode(spark, corpus, tmp_path):
         .first()[0]
     )
     assert new_min > merged.index.docid_ceiling
+
+
+def test_merge_with_shifts_tombstones_by_the_block_offset(spark, block_stores):
+    """merge_with shifts the other engine's driver-set tombstones by the
+    offset its docids actually moved — for block stores A's docid base
+    rounded up to a range boundary, not A's doc count."""
+    from itemsjs_spark.engine import Index
+
+    pa, pb = block_stores
+    a = SearchEngine(Index.read(spark, pa))
+    b = SearchEngine(Index.read(spark, pb))
+    first = b.index.docs.agg(F.min("_docid")).first()[0]
+    b.delete_docids([first])
+    off = ((a.index.n_docs + 127) // 128) * 128
+    assert off != a.index.n_docs  # the two offsets must differ here
+    m = a.merge_with(b)
+    assert m._tombstone_docids == {first + off}
+    assert (
+        m.search({})["pagination"]["total"]
+        == a.index.n_docs + b.index.n_docs - 1
+    )
