@@ -7870,9 +7870,9 @@ WITH c AS ({_TX_CORPUS_SQL}),
 t AS (SELECT conv_id, turn_idx,
              len(string_split(text, ' '))::BIGINT AS n_toks FROM c),
 s AS (SELECT conv_id, turn_idx, n_toks,
-      sum(n_toks) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        AS suffix_toks FROM t)
+      (sum(n_toks) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      )::BIGINT AS suffix_toks FROM t)
 SELECT * FROM s WHERE suffix_toks <= 200
 """
 

@@ -296,7 +296,6 @@ def assign_docids(
         )
         # map-only: the output keeps the INPUT's partitioning — callers
         # that cache it should re-balance coarse scans (build_index does)
-        out._docid_route = "dense-broadcast"
     else:
         wr = Window.partitionBy(*gkeys).orderBy(*[F.col(c) for c in keys])
         out = (
@@ -306,7 +305,6 @@ def assign_docids(
             )
             .drop("__off")
         )
-        out._docid_route = "window"
     # the pinned group table is conversation-count sized (potentially
     # 10^9 rows); callers that materialize the result should release it
     # (build_index does, right after docs.count()). Recompute after
@@ -361,14 +359,21 @@ class Index:
     # reopened engine adopts it, so deletes survive restarts without
     # rewriting any index artifact
     tombstones: Optional[DataFrame] = None
-    # exclusive upper bound of the assigned docid space when it is
-    # SPARSE (block-store segment merges round the shard offset up to a
-    # range boundary). None = dense (ceiling == n_docs). Appends/merges
-    # offset from this, so sparse spaces never collide
+    # largest assigned docid when it exceeds n_docs (caller-owned
+    # docid_col docids, block-store segment merges that round the shard
+    # offset up to a range boundary, purged deletes). None = n_docs is
+    # past every docid. Appends/merges offset from this, so sparse
+    # spaces never collide
     docid_ceiling: Optional[int] = None
     # block-store parameters (range_size/block_size/n_buckets) recorded
     # by write_blocks; merges and appends must match them
     block_meta: Dict[str, int] = dc_field(default_factory=dict)
+    # docs is cached hash-partitioned by _docid into defaultParallelism
+    # partitions (build_index), the layout SearchEngine.materialize gives
+    # the postings cache: a request then joins docs with its scored hits
+    # partition by partition. False for unions (append/merge) and
+    # reopened stores
+    docs_copartitioned: bool = False
 
     @property
     def next_docid_base(self) -> int:
@@ -1036,43 +1041,32 @@ def build_index(
     facet_fields = [f for f in aggregations.keys() if f in df.columns]
 
     interim: List[DataFrame] = []
-    docid_route = None
     if docid_col:
         docs = df.withColumn(DOCID, F.col(docid_col).cast("long"))
     elif order_by:
         docs = assign_docids(df, order_by)
         interim = getattr(docs, "_interim_caches", [])
-        docid_route = getattr(docs, "_docid_route", None)
     else:
         raise ValueError("need docid_col or order_by for stable _docid")
 
     for fld in facet_fields:
         docs = docs.withColumn(FK_PREFIX + fld, facet_keys_col(docs, fld))
 
-    # partitioning floor: AQE happily coalesces a small corpus to ONE
-    # partition, which would serialize the Arrow-batched tokenizer (and
-    # every downstream scan) onto a single core. Only pay the extra
-    # shuffle when the materialized cache is actually too narrow — at
-    # real scale the docid join/window already leaves the corpus wide,
-    # so this is a no-op there and a cheap fix-up on toy inputs.
-    #
-    # The map-only dense-broadcast docid route keeps the SCAN's
-    # partitioning, so coarse inputs (few fat single-row-group files —
-    # measured 2.4x slower tokenization from 6 real splits on 16 cores)
-    # need a higher floor: demand 2x the core count before trusting the
-    # input layout. A production Iceberg scan yields thousands of
-    # balanced splits and never triggers this.
+    # ONE cache pass, hash-partitioned by _docid into defaultParallelism
+    # partitions — the layout materialize() gives the postings cache, so
+    # a request joins docs with its scored hits partition by partition
+    # (no exchange, no broadcast, no per-request cache; see
+    # SearchEngine._docs_with_query_flag). The same shuffle is the
+    # partitioning floor: AQE would coalesce a small corpus to ONE
+    # partition and the map-only dense-broadcast docid route keeps the
+    # scan's (possibly few, fat) splits, either of which serializes the
+    # Arrow-batched tokenizer. The count job also records the largest
+    # docid: caller-owned docids (docid_col) may be sparse.
     n_part = max(spark.sparkContext.defaultParallelism, 1)
-    min_parts = 2 * n_part if docid_route == "dense-broadcast" else n_part
-    docs = docs.persist()
-    n_docs = docs.count()
+    docs = docs.repartition(n_part, F.col(DOCID)).persist()
+    n_docs, max_docid = docs.agg(F.count("*"), F.max(DOCID)).first()
     for c in interim:  # docid group table: baked into the docs cache now
         c.unpersist()
-    if docs.rdd.getNumPartitions() < min_parts:
-        narrow = docs
-        docs = narrow.repartition(n_part, F.col(DOCID)).persist()
-        docs.count()
-        narrow.unpersist()
 
     facet_values = _facet_dimension(docs, facet_fields)
 
@@ -1099,7 +1093,19 @@ def build_index(
         facet_fields=facet_fields,
         text_fields=text_fields,
         configuration=configuration,
+        docid_ceiling=_ceiling(max_docid, n_docs),
+        docs_copartitioned=True,
     )
+
+
+def _ceiling(max_docid: Optional[int], n_docs: int) -> Optional[int]:
+    """``docid_ceiling`` for a docid space whose largest docid is
+    ``max_docid``: None while ``n_docs`` is not below it (the dense
+    1..n_docs space, or caller-owned docids such as 0..n_docs-1), so
+    appends keep continuing from the doc count there."""
+    if max_docid is None or max_docid <= n_docs:
+        return None
+    return int(max_docid)
 
 
 def _align_appended_schema(
@@ -1237,7 +1243,7 @@ def append_index(
             FK_PREFIX + fld, facet_keys_col(new_docs, fld)
         )
     new_docs = new_docs.persist()
-    n_new = new_docs.count()
+    n_new, max_new = new_docs.agg(F.count("*"), F.max(DOCID)).first()
     for c in interim:
         c.unpersist()
 
@@ -1277,6 +1283,7 @@ def append_index(
         positional_fields=list(index.positional_fields),
         trigram=trigram,
         trigram_fields=list(index.trigram_fields),
+        docid_ceiling=_ceiling(max_new, n_new),
     )
     return _combine(index, delta, offset_b=not docid_col)[0]
 
@@ -1431,11 +1438,9 @@ def _combine(a: Index, b: Index, offset_b: bool) -> Tuple[Index, int]:
     if parts:
         tombstones = parts[0] if len(parts) == 1 else _union(parts).distinct()
 
-    ceiling: Optional[int] = None
-    if offset_b:
-        ceiling = off + b.next_docid_base
-        if ceiling == n_docs:
-            ceiling = None  # dense — keep the default contract
+    # B's docids end at off + its own ceiling; caller-owned (unshifted)
+    # docids may end below A's
+    ceiling = _ceiling(max(a.next_docid_base, off + b.next_docid_base), n_docs)
     combined = Index(
         spark=a.spark,
         docs=docs,

@@ -492,11 +492,13 @@ class SearchEngine:
         threads onto the same executors): the facet-dimension aggregate
         and the Arrow tokenizer scan overlap instead of serializing —
         on a wide cluster this is the difference between paying the
-        slowest stage and paying the sum of stages."""
+        slowest stage and paying the sum of stages. The docs cache is
+        not counted again: the step that cached it (build_index,
+        append_index, purge_deleted) counted it as it did."""
         from concurrent.futures import ThreadPoolExecutor
 
         idx = self.index
-        jobs = [idx.docs, idx.facet_values]
+        jobs = [idx.facet_values]
         if idx.postings is not None and not self._ft_materialized:
             n_part = max(self.spark.sparkContext.defaultParallelism, 1)
             idx.postings = idx.postings.repartition(
@@ -836,7 +838,7 @@ class SearchEngine:
         postings. Returns a new engine with no tombstones."""
         import dataclasses
 
-        from .indexer import _facet_dimension, terms_from_postings
+        from .indexer import _ceiling, _facet_dimension, terms_from_postings
 
         idx = self.index
         live = self._live(idx.docs)
@@ -869,8 +871,13 @@ class SearchEngine:
             facet_posting_blocks=None,
             positional=positional,
             tombstones=None,
-            # docids unchanged: a sparse space stays sparse
-            docid_ceiling=idx.docid_ceiling,
+            # docids unchanged: the space keeps its largest docid
+            docid_ceiling=_ceiling(idx.next_docid_base, n_live),
+            # a filter keeps the docs cache's partitioning; the bulk
+            # tombstones' anti-join exchanges it
+            docs_copartitioned=(
+                idx.docs_copartitioned and self._tombstone_df is None
+            ),
         )
         return SearchEngine(new_index)
 
@@ -879,11 +886,14 @@ class SearchEngine:
         if self._facet_dim_checked:
             return self._facet_dim
         self._facet_dim_checked = True
-        n = self.index.facet_values.limit(self.MAX_DRIVER_FACET_DIM + 1).count()
-        if n > self.MAX_DRIVER_FACET_DIM:
+        # ONE bounded job: collect cap+1 rows and decide over/under from
+        # the row count (as _term_dictionary does)
+        rows = self.index.facet_values.limit(
+            self.MAX_DRIVER_FACET_DIM + 1
+        ).collect()
+        if len(rows) > self.MAX_DRIVER_FACET_DIM:
             self._facet_dim = None
             return None
-        rows = self.index.facet_values.collect()
         dim: Dict[str, List[Tuple[str, int]]] = {
             f: [] for f in self.index.facet_fields
         }
@@ -4212,13 +4222,18 @@ class SearchEngine:
         self, input: Dict[str, Any]
     ) -> Tuple[Optional[DataFrame], bool]:
         """Returns (hits df with _docid, __score?, __qrank?, or None) and
-        whether relevance ordering applies."""
+        whether a request that reads the hits twice should cache them:
+        recomputing them would re-run a Python task (callback ``filter``,
+        phrase verification) or a block decode, or the docs ⟕ hits join
+        needs an exchange (docs not co-partitioned with the postings:
+        appended unions, reopened stores). Otherwise each job scores
+        inside its own plan over the postings cache."""
         idx = self.index
         if input.get("_ids") is not None:
             ids = list(input["_ids"])
             rows = [(int(v), i) for i, v in enumerate(ids)]
             hits = local_relation(self.spark, rows, f"{DOCID} long, {QRANK} long")
-            return hits, True
+            return hits, False
         if input.get("ids") is not None:
             id_field = self.configuration.get("custom_id_field", "id")
             wanted = [js_key(v) for v in input["ids"]]
@@ -4235,7 +4250,7 @@ class SearchEngine:
                 if k in found:
                     rows.append((int(found[k]), i))
             hits = local_relation(self.spark, rows, f"{DOCID} long, {QRANK} long")
-            return hits, True
+            return hits, False
         if self.configuration.get("native_search_enabled") is False and (
             input.get("query") or input.get("filter")
         ):
@@ -4245,6 +4260,7 @@ class SearchEngine:
         rf = input.get("range_filters") or None
         cn = input.get("contains") or None
         if input.get("query") or input.get("filter") or rf or cn:
+            cache = not idx.docs_copartitioned or callable(input.get("filter"))
             if input.get("query"):
                 qtext = str(input["query"])
                 phrases: List[str] = []
@@ -4255,12 +4271,14 @@ class SearchEngine:
                     fuzzy=bool(input.get("fuzzy")),
                     synonyms=input.get("synonyms") or None,
                 )
+                cache = cache or idx.postings is None  # block decode
                 for ph in phrases:
                     if not self.pipeline(tokenize(ph)):
                         continue  # stopword-only quote: vacuous
                     hits = hits.join(
                         self.phrase_hits(ph).select(DOCID), DOCID, "left_semi"
                     )
+                    cache = True  # phrase verification is a Python task
                 if rf:
                     # pure-JVM predicate, pushed into the docs scan
                     # (partition/row-group pruning on e.g. a ts column)
@@ -4292,7 +4310,7 @@ class SearchEngine:
                 flt = input["filter"]
                 passing = self._callback_filter_docids(flt)
                 hits = hits.join(passing, DOCID, "left_semi")
-            return hits, True
+            return hits, cache
         return None, False
 
     def _contains_docids(self, cn: Any) -> DataFrame:
@@ -4425,10 +4443,21 @@ class SearchEngine:
         return keep
 
     def _docs_with_query_flag(self, hits: Optional[DataFrame]) -> DataFrame:
+        """The live docs with ``__in_query`` and the hits' rank column
+        (``__score`` or ``__qrank``, NULL off the hit set) — the one join
+        with the hits: ordering and keyset paging read the rank from it.
+        On co-partitioned docs (``Index.docs_copartitioned``) the
+        shuffle-hash hint plans it partition by partition: hits scored
+        over the postings cache share the docs cache's
+        ``HashPartitioning(_docid, n)``, so neither side is exchanged or
+        broadcast."""
         docs = self._live(self.index.docs)
         if hits is None:
             return docs
-        marked = hits.select(DOCID).withColumn(IN_QUERY, F.lit(True))
+        rank = [c for c in (SCORE, QRANK) if c in hits.columns]
+        marked = hits.select(DOCID, *rank, F.lit(True).alias(IN_QUERY))
+        if self.index.docs_copartitioned:
+            marked = marked.hint("shuffle_hash")
         return docs.join(marked, DOCID, "left").withColumn(
             IN_QUERY, F.coalesce(F.col(IN_QUERY), F.lit(False))
         )
@@ -4442,12 +4471,12 @@ class SearchEngine:
         compiled = self.compile(input, has_query=hits is not None)
         base = self._docs_with_query_flag(hits)
         flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
-        ordered = self._order(flt, input, hits)
+        ordered = self._order(flt, input)
         drop = [
             c
             for c in ordered.columns
             if c.startswith(FK_PREFIX) or c.startswith(RAW_PREFIX)
-        ] + [c for c in (IN_QUERY,) if c in ordered.columns]
+        ] + [c for c in (IN_QUERY, QRANK, SCORE) if c in ordered.columns]
         out = ordered.drop(*drop).withColumnRenamed(DOCID, "_id")
         if input.get("fields") is not None:
             want = {str(f) for f in input["fields"]}
@@ -4456,9 +4485,10 @@ class SearchEngine:
             )
         return out
 
-    def _order(
-        self, df: DataFrame, input: Dict[str, Any], hits: Optional[DataFrame]
-    ) -> DataFrame:
+    def _order(self, df: DataFrame, input: Dict[str, Any]) -> DataFrame:
+        """``df`` in the request's order: the ``sort`` spec, else the
+        rank column ``_docs_with_query_flag`` carried (input order for
+        ``__qrank``, relevance for ``__score``), else docid order."""
         sort = input.get("sort")
         if sort:
             spec = sort
@@ -4481,15 +4511,12 @@ class SearchEngine:
                 cols.append(F.col(DOCID).asc())  # lodash orderBy stability
                 return df.orderBy(*cols)
             return df.orderBy(F.col(DOCID).asc())
-        if hits is not None:
-            if QRANK in hits.columns:
-                return df.join(hits.select(DOCID, QRANK), DOCID).orderBy(
-                    F.col(QRANK).asc()
-                ).drop(QRANK)
-            if SCORE in hits.columns:
-                return df.join(hits.select(DOCID, SCORE), DOCID).orderBy(
-                    F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                ).drop(SCORE)
+        if QRANK in df.columns:
+            return df.orderBy(F.col(QRANK).asc())
+        if SCORE in df.columns:
+            return df.orderBy(
+                F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
+            )
         return df.orderBy(F.col(DOCID).asc())
 
     def search(self, input: Optional[Dict[str, Any]] = None) -> Dict[str, Any]:
@@ -4671,16 +4698,18 @@ class SearchEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         t_search = time.time()
-        hits, _ = self._candidates(input)
-        if hits is not None:
-            # materialize the scored candidates ONCE; the facets and
-            # page jobs below both read this cache
+        hits, cache = self._candidates(input)
+        if cache:
+            # hits that are costly to recompute (see _candidates) are
+            # materialized ONCE; the facets and page jobs below both
+            # read the cache. Otherwise each of the two scores the
+            # query inside its own plan.
             hits = hits.persist()
             persisted.append(hits)
             hits.count()
         compiled = self.compile(input, has_query=hits is not None)
         base = self._docs_with_query_flag(hits)
-        if hits is not None:
+        if cache:
             base = base.persist()
             persisted.append(base)
         flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
@@ -4697,7 +4726,7 @@ class SearchEngine:
             # by (round(score, 6) DESC, str(_id) ASC) — the rounded score
             # IS the cursor key, so the (score, _id) pair each item
             # carries back in ``_score`` resumes exactly after itself.
-            if input.get("sort") or hits is None or SCORE not in hits.columns:
+            if input.get("sort") or SCORE not in base.columns:
                 raise EngineError(
                     "search_after requires a relevance-ordered query "
                     "(query present, no sort, no _ids/ids)"
@@ -4714,8 +4743,7 @@ class SearchEngine:
                 & (F.col(DOCID).cast("string") > F.lit(id_cur))
             )
             ordered = (
-                flt.join(hits.select(DOCID, SCORE), DOCID)
-                .filter(pred)
+                flt.filter(pred)
                 .withColumn("_score", sc)
                 .orderBy(
                     F.col("_score").desc(),
@@ -4725,17 +4753,17 @@ class SearchEngine:
             )
             page_df = ordered.limit(per_page)  # page number is moot
         else:
-            ordered = self._order(flt, input, hits)
+            ordered = self._order(flt, input)
             page_df = ordered.offset((page - 1) * per_page).limit(per_page)
         keep = self._page_keep(
             page_df.columns, input, (IN_QUERY, QRANK, SCORE)
         )
 
-        # facets pass and page collect are independent given the cached
-        # hits — submit them from two driver threads so Spark overlaps
-        # the jobs (both pure JVM; on a cluster this hides the smaller
-        # job entirely, in local mode the tasks interleave). The facets
-        # pass is one corpus pass: all facet buckets + the result total.
+        # facets pass and page collect are independent — submit them
+        # from two driver threads so Spark overlaps the jobs (both pure
+        # JVM; on a cluster this hides the smaller job entirely, in
+        # local mode the tasks interleave). The facets pass is one
+        # corpus pass: all facet buckets + the result total.
         with ThreadPoolExecutor(max_workers=2) as ex:
             f_facets = ex.submit(
                 self._get_buckets_impl,
@@ -5165,7 +5193,7 @@ class SearchEngine:
                 if final is True
                 else self.index.docs.join(alg.as_df(final), DOCID, "left_semi")
             )
-            ordered = self._order(flt, input, None)
+            ordered = self._order(flt, input)
             page_df = ordered.offset((page - 1) * per_page).limit(per_page)
             keep = self._page_keep(page_df.columns, input)
             with ThreadPoolExecutor(max_workers=len(count_jobs) + 1) as ex:

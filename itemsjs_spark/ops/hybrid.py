@@ -23,6 +23,7 @@ tiny multiset is order-insensitive here because every sum is rounded to
 
 from __future__ import annotations
 
+import warnings
 from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame, Window
@@ -53,11 +54,20 @@ def rrf_fuse(
     full scoring DataFrame instead of a candidate list. Rows beyond
     the cap would each contribute < 1/(c + max_list_size) ≈ 0, and
     every intended caller (WAND top-k, ANN shortlists) is far below it.
+    A list that the cap cuts raises a ``UserWarning`` (one bounded
+    count job per list decides it); the result is the same either way.
     """
     if not ranked:
         raise ValueError("rrf_fuse: need at least one ranked list")
     parts = []
-    for df, score_col in ranked:
+    for i, (df, score_col) in enumerate(ranked):
+        if df.limit(int(max_list_size) + 1).count() > max_list_size:
+            warnings.warn(
+                f"rrf_fuse: ranked list {i} has more than max_list_size="
+                f"{max_list_size} rows; only its top {max_list_size} are "
+                "fused",
+                stacklevel=2,
+            )
         order = [
             F.col(score_col).desc(), F.col(id_col).cast("string").asc()
         ]

@@ -474,3 +474,45 @@ def test_append_aligns_raw_sidecar_columns(spark):
     )
     assert by_name2["a"]["price"] == 1 and isinstance(by_name2["a"]["price"], int)
     assert by_name2["c"]["price"] == 3
+
+
+def _colors(spark, rows):
+    return spark.createDataFrame(rows, "id long, color string")
+
+
+def _assert_docids_unique(eng, above: int, n_new: int) -> None:
+    docids = [r["_docid"] for r in eng.index.docs.select("_docid").collect()]
+    assert len(docids) == len(set(docids))
+    assert sum(d > above for d in docids) == n_new
+
+
+def test_order_by_append_after_caller_docids_reuses_no_docid(spark):
+    """Caller-owned docids (docid_col, build or append) may be sparse
+    and exceed the doc count; a later order_by append continues past
+    the largest one instead of from the doc count."""
+    cfg = {"aggregations": {"color": {"size": 10}}, "native_search_enabled": False}
+    eng = itemsjs_spark(
+        spark, _colors(spark, [(10, "red"), (20, "blue"), (30, "red")]), cfg,
+        docid_col="id",
+    )
+    assert eng.index.next_docid_base == 30
+    eng = eng.append(_colors(spark, [(100, "red"), (200, "blue")]), docid_col="id")
+    assert eng.index.next_docid_base == 200
+    delta = _colors(spark, [(1000 + i, "green") for i in range(12)])
+    eng = eng.append(delta, order_by=["id"])
+    _assert_docids_unique(eng, 200, 12)
+
+
+def test_order_by_append_after_purge_reuses_no_docid(spark):
+    """purge_deleted keeps docids stable, so the purged space keeps its
+    largest docid: an append after it must not reuse a live docid."""
+    cfg = {"aggregations": {"color": {"size": 10}}, "native_search_enabled": False}
+    eng = itemsjs_spark(
+        spark, _colors(spark, [(i, "red") for i in range(1, 6)]), cfg,
+        order_by=["id"],
+    )
+    eng.delete_docids([2])
+    purged = eng.purge_deleted()
+    assert purged.index.next_docid_base == 5
+    eng = purged.append(_colors(spark, [(10, "blue"), (11, "blue")]), order_by=["id"])
+    _assert_docids_unique(eng, 5, 2)

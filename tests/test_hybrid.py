@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
 from itemsjs_spark.ops.hybrid import rrf_fuse
@@ -51,9 +53,22 @@ def test_rrf_list_cap_bounds_rank_window(spark):
     # ranks for surviving rows are unchanged, the window input is
     # bounded, and the fused top-k over high ranks is identical
     a = _df(spark, [(i, float(1000 - i)) for i in range(200)])
-    capped = rrf_fuse([(a, "score")], k=5, max_list_size=50).collect()
+    with pytest.warns(UserWarning, match="max_list_size=50"):
+        capped = rrf_fuse([(a, "score")], k=5, max_list_size=50).collect()
     full = rrf_fuse([(a, "score")], k=5, max_list_size=10_000).collect()
     assert [tuple(r) for r in capped] == [tuple(r) for r in full]
     # rows cut by the cap cannot appear even for large k
-    got = rrf_fuse([(a, "score")], k=100, max_list_size=50).collect()
+    with pytest.warns(UserWarning, match="ranked list 0"):
+        got = rrf_fuse([(a, "score")], k=100, max_list_size=50).collect()
     assert len(got) == 50 and max(r["_id"] for r in got) == 49
+
+
+def test_rrf_warns_only_when_the_cap_cuts(spark):
+    a = _df(spark, [(i, float(100 - i)) for i in range(50)])
+    b = _df(spark, [(i, float(i)) for i in range(51)])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)  # AT the cap: no cut
+        at_cap = rrf_fuse([(a, "score")], k=5, max_list_size=50).collect()
+    assert [r["_id"] for r in at_cap] == [0, 1, 2, 3, 4]
+    with pytest.warns(UserWarning, match="ranked list 1 has more than"):
+        rrf_fuse([(a, "score"), (b, "score")], k=5, max_list_size=50)

@@ -233,3 +233,26 @@ def test_merge_with_shifts_tombstones_by_the_block_offset(spark, block_stores):
         m.search({})["pagination"]["total"]
         == a.index.n_docs + b.index.n_docs - 1
     )
+
+
+def test_append_after_caller_docid_merge_reuses_no_docid(spark):
+    """merge_indexes(offset_b=False) trusts the caller's docids, which
+    may be sparse: the merged space ends at the larger side's largest
+    docid, and an order_by append continues past it."""
+    cfg = {"aggregations": {"color": {"size": 10}}, "native_search_enabled": False}
+
+    def build(rows):
+        df = spark.createDataFrame(rows, "id long, color string")
+        return itemsjs_spark(spark, df, cfg, docid_col="id")
+
+    a = build([(10, "red"), (20, "blue"), (30, "red")])
+    b = build([(40, "blue"), (50, "green")])
+    merged = SearchEngine(merge_indexes(a.index, b.index, offset_b=False))
+    assert merged.index.next_docid_base == 50
+    delta = spark.createDataFrame(
+        [(1000 + i, "green") for i in range(12)], "id long, color string"
+    )
+    eng = merged.append(delta, order_by=["id"])
+    docids = [r["_docid"] for r in eng.index.docs.select("_docid").collect()]
+    assert len(docids) == len(set(docids)) == 17
+    assert sorted(docids)[5:] == list(range(51, 63))
