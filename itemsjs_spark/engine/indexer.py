@@ -518,7 +518,12 @@ class Index:
         Returns the checkpoint build report."""
         from .checkpoint import build_blocks_checkpointed
 
-        self.docs.write.mode("overwrite").parquet(os.path.join(path, "docs"))
+        n_files = max(self.spark.sparkContext.defaultParallelism, 1)
+        # docid-ranged files: a conversation's turns stay together, and a
+        # page fetch (``_docid IN (...)``) skips files by their min/max
+        self.docs.repartitionByRange(n_files, DOCID).sortWithinPartitions(
+            DOCID
+        ).write.mode("overwrite").parquet(os.path.join(path, "docs"))
         self.facet_values.write.mode("overwrite").parquet(
             os.path.join(path, "facet_values")
         )
@@ -543,9 +548,9 @@ class Index:
         )
         if pinned_here:
             postings.unpersist()
-        self.terms.repartitionByRange(
-            max(self.spark.sparkContext.defaultParallelism, 1), "term"
-        ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+        self.terms.repartitionByRange(n_files, "term").sortWithinPartitions(
+            "term"
+        ).write.mode("overwrite").parquet(
             os.path.join(path, "terms")
         )
         if self.facet_fields:
@@ -553,9 +558,9 @@ class Index:
 
             build_facet_blocks(
                 self, range_size=range_size, block_size=block_size
-            ).repartitionByRange(
-                max(self.spark.sparkContext.defaultParallelism, 1), "term"
-            ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+            ).repartitionByRange(n_files, "term").sortWithinPartitions(
+                "term"
+            ).write.mode("overwrite").parquet(
                 os.path.join(path, "facet_blocks")
             )
         if self.tombstones is not None:

@@ -52,7 +52,7 @@ from ..analysis.lunr_analysis import (
     tokenize,
 )
 from ..core import facetir, scoring
-from ..jsutil import humanize, js_key
+from ..jsutil import humanize, js_key, js_parse_int
 from .indexer import DOCID, FK_PREFIX, RAW_PREFIX, Index
 from .relations import local_relation
 
@@ -270,8 +270,13 @@ def parse_query_string(
 def _parse_paging(input: Dict[str, Any]) -> Tuple[int, int]:
     per_page = input.get("per_page")
     page = input.get("page")
-    per_page = int(per_page if _js_truthy(per_page) else 12)
-    page = int(page if _js_truthy(page) else 1)
+    per_page = js_parse_int(per_page if _js_truthy(per_page) else 12)
+    page = js_parse_int(page if _js_truthy(page) else 1)
+    if math.isnan(per_page) or math.isnan(page):
+        raise EngineError(
+            "per_page and page must parse as integers (JS parseInt): "
+            f"{input.get('per_page')!r}, {input.get('page')!r}"
+        )
     return per_page, page
 
 
@@ -1132,7 +1137,6 @@ class SearchEngine:
         k: int,
         blocks: Optional[DataFrame] = None,
         batch_ranges: int = 64,
-        _analyzed=None,
     ) -> DataFrame:
         """Block-max WAND top-k over a posting-block table
         (blocks.py layout; defaults to the index's own block store).
@@ -1146,33 +1150,45 @@ class SearchEngine:
                 "open the index via Index.read over a write_blocks store"
             )
         try:
-            analyzed = _analyzed if _analyzed is not None else self._query_vector(query)
+            analyzed = self._query_vector(query)
         except _ExpansionTooLarge:
             raise EngineError(
                 "prefix expansion exceeds driver capacity; WAND needs the "
                 "driver-side query vector — use fulltext_hits, whose "
                 "distributed-expansion path handles this query"
             )
-        return self._wand(analyzed, k, blocks, batch_ranges)
+        return self._topk_relation(self._wand(analyzed, k, blocks, batch_ranges))
+
+    def _topk_relation(self, ranked: List[Tuple[int, float]]) -> DataFrame:
+        """A ``_wand`` list as the (_docid, __score) DataFrame the public
+        top-k methods return."""
+        return local_relation(
+            self.spark, ranked, f"{DOCID} long, {SCORE} double"
+        )
 
     def _wand(
         self,
         analyzed,
         k: int,
         blocks: DataFrame,
-        batch_ranges: int,
+        batch_ranges: int = 64,
         **filter_args: Any,
-    ) -> DataFrame:
-        """``wand.wand_topk`` for an analyzed query (None: no hits), each
-        admitted range batch scored by ``fulltext_hits``' own plan
+    ) -> List[Tuple[int, float]]:
+        """``wand.wand_topk`` for an analyzed query (None: no hits): the
+        live top-k as a best-first ``(_docid, __score)`` driver list,
+        each admitted range batch scored by ``fulltext_hits``' own plan
         (``_scored_per_doc`` + conjunctive admission); ``filter_args``
-        are wand_topk's filter parameters."""
+        are wand_topk's filter parameters.
+
+        On the index's own store ``next_docid_base`` bounds the docid
+        ranges, so when they all fit one batch wand_topk skips its bound
+        query. Driver-set tombstones are over-fetched (k + |deleted|) and
+        dropped here: removing tombstoned hits only promotes lower
+        ranks, so the live top-k is the filtered over-fetched list."""
         from .wand import wand_topk
 
-        if analyzed is None:
-            return local_relation(
-                self.spark, [], f"{DOCID} long, {SCORE} double"
-            )
+        if analyzed is None or k <= 0:
+            return []
         qv, idf_map = analyzed
         keep = self._admission_pred((1 << qv.n_tokens) - 1, qv.n_tokens, None)
 
@@ -1180,28 +1196,23 @@ class SearchEngine:
             per_doc, sc = self._scored_per_doc(qv, idf_map, postings)
             return per_doc.filter(keep).select(DOCID, sc.alias(SCORE))
 
-        k_eff = self._wand_k_with_tombstones(k)
-        out = wand_topk(
+        max_ranges = None
+        range_size = self.index.block_meta.get("range_size")
+        if blocks is self.index.posting_blocks and range_size:
+            max_ranges = self.index.next_docid_base // int(range_size) + 1
+        ranked = wand_topk(
             self.spark,
             blocks,
             {t: qv.weights[t] * idf_map[t] for t in qv.weights},
             qv.magnitude,
-            k_eff,
+            self._wand_k_with_tombstones(k),
             score,
             batch_ranges=batch_ranges,
+            max_ranges=max_ranges,
             **filter_args,
         )
-        if k_eff != k:
-            # removing tombstoned hits only promotes lower ranks, so the
-            # live top-k is exactly the filtered over-fetched top-k_eff
-            out = (
-                self._live(out)
-                .orderBy(
-                    F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                )
-                .limit(k)
-            )
-        return out
+        dead = self._tombstone_docids
+        return [p for p in ranked if p[0] not in dead][:k]
 
     def fulltext_topk_filtered(
         self,
@@ -1212,7 +1223,6 @@ class SearchEngine:
         facet_blocks: Optional[DataFrame] = None,
         batch_ranges: int = 64,
         filter_groups: Optional[List[List[str]]] = None,
-        _analyzed=None,
     ) -> DataFrame:
         """Filtered block-max WAND: top-k among docs matching the query
         AND a facet selection — each admitted range batch's hits are
@@ -1237,7 +1247,7 @@ class SearchEngine:
                 "fulltext_topk_filtered needs posting AND facet block tables"
             )
         try:
-            analyzed = _analyzed if _analyzed is not None else self._query_vector(query)
+            analyzed = self._query_vector(query)
         except _ExpansionTooLarge:
             raise EngineError(
                 "prefix expansion exceeds driver capacity; use fulltext_hits"
@@ -1248,14 +1258,16 @@ class SearchEngine:
                 fld: [x for x in (js_key(v) for v in vals or []) if x is not None]
                 for fld, vals in (filters or {}).items()
             }
-        return self._wand(
-            analyzed,
-            k,
-            blocks,
-            batch_ranges,
-            filter_blocks=facet_blocks,
-            filter_fields=filter_fields,
-            filter_groups=filter_groups,
+        return self._topk_relation(
+            self._wand(
+                analyzed,
+                k,
+                blocks,
+                batch_ranges,
+                filter_blocks=facet_blocks,
+                filter_fields=filter_fields,
+                filter_groups=filter_groups,
+            )
         )
 
     def fulltext_hits_batch(self, queries: Sequence[str]) -> DataFrame:
@@ -4837,22 +4849,26 @@ class SearchEngine:
         )
 
     def _ranked_page(
-        self, topk: DataFrame, page: int, per_page: int, input: Dict[str, Any]
+        self,
+        ranked: List[Tuple[int, float]],
+        page: int,
+        per_page: int,
+        input: Dict[str, Any],
     ) -> List[Dict[str, Any]]:
-        """Collect the items of page ``page`` from a (_docid, __score)
-        top-k in relevance order: offset/limit over the ranked top-k,
-        one broadcast join to the docs, re-ordered for the page."""
-        by_rank = (F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
-        ranked = (
-            topk.orderBy(*by_rank)
-            .offset((page - 1) * per_page)
-            .limit(per_page)
-        )
-        page_docs = self.index.docs.join(
-            F.broadcast(ranked.select(DOCID, SCORE)), DOCID
-        ).orderBy(*by_rank)
-        keep = self._page_keep(page_docs.columns, input, (SCORE,))
-        return _collect_items(page_docs, keep)
+        """The items of page ``page`` of a best-first ``(_docid,
+        __score)`` list (``_wand``'s, already in ``_order``'s relevance
+        order: score descending, then ``str(_docid)``): the page is
+        sliced on the driver and its docs fetched by one
+        ``_docid IN page`` scan, then put back in rank order."""
+        lo = (page - 1) * per_page
+        page_ids = [d for d, _ in ranked[lo : lo + per_page]]
+        if not page_ids:
+            return []
+        docs = self.index.docs
+        keep = self._page_keep(docs.columns, input)
+        items = _collect_items(docs.filter(F.col(DOCID).isin(page_ids)), keep)
+        rank = {d: i for i, d in enumerate(page_ids)}
+        return sorted(items, key=lambda it: rank[it["_id"]])
 
     def _search_wand(self, input: Dict[str, Any]) -> Dict[str, Any]:
         t0 = time.time()
@@ -4873,8 +4889,8 @@ class SearchEngine:
         total = self._live(self._query_membership(analyzed)).count()
 
         t_p = time.time()
-        topk = self.fulltext_topk(query, page * per_page, _analyzed=analyzed)
-        items = self._ranked_page(topk, page, per_page, input)
+        ranked = self._wand(analyzed, page * per_page, self.index.posting_blocks)
+        items = self._ranked_page(ranked, page, per_page, input)
         return _response(
             per_page, page, total, t0, search_time, 0, time.time() - t_p, items
         )
@@ -5020,27 +5036,24 @@ class SearchEngine:
             return None
 
         def run_page():
-            if per_page == 0 or analyzed is None:
-                return []
-            topk = self.fulltext_topk_filtered(
-                query,
+            ranked = self._wand(
+                analyzed,
                 page * per_page,
+                self.index.posting_blocks,
+                filter_blocks=self.index.facet_posting_blocks,
                 filter_groups=groups,
-                _analyzed=analyzed,
             )
-            return self._ranked_page(topk, page, per_page, input)
+            return self._ranked_page(ranked, page, per_page, input)
 
-        with self._request_caches(release_expansions=True) as persisted:
+        # membership and the docs joined with it are read once, by the
+        # facets pass: nothing is cached
+        with self._request_caches(release_expansions=True):
             if analyzed is None:
                 membership = local_relation(self.spark, [], f"{DOCID} long")
             else:
                 membership = self._query_membership(analyzed)
-            membership = membership.persist()
-            persisted.append(membership)
-            membership.count()
             compiled = self.compile(input, has_query=True)
-            base = self._docs_with_query_flag(membership).persist()
-            persisted.append(base)
+            base = self._docs_with_query_flag(membership)
             search_time = time.time() - t_s
 
             # one corpus pass for all facet buckets + the result total,
@@ -5527,7 +5540,7 @@ class SearchEngine:
         selected flags, lodash ordering, facet_stats) from per-field
         count maps — shared by the scan path and the facet-block path."""
         from ..core.ordering import bucket_sort_spec, order_by
-        from ..jsutil import js_is_nan_str, js_parse_int
+        from ..jsutil import js_is_nan_str
 
         out: Dict[str, Any] = {}
         position = 1
