@@ -36,6 +36,7 @@ import re
 import time
 from typing import Dict, List, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,9 +263,9 @@ def append_blocks_checkpointed(
     idempotently because the rename targets are deterministic.
 
     ``n_buckets``/``range_size``/``block_size`` must match the base
-    build. Readers need no changes: read_blocks globs every parquet file
-    per bucket, and both WAND and the exact scorer already merge
-    multiple blocks per (term, range)."""
+    build. Readers need no changes: read_blocks reads every parquet
+    file of each bucket directory, and both WAND and the exact scorer
+    already merge multiple blocks per (term, range)."""
     spark = delta_postings.sparkSession
     fs = _HadoopFS(spark, out_path)
     # appends are WRITERS: restore bucket liveness from any crashed
@@ -523,9 +524,31 @@ def _staged_bucket_ids(fs: _HadoopFS, out_path: str) -> set:
     return ids
 
 
+def _bind_buckets(
+    spark: SparkSession, fs: _HadoopFS, out_path: str
+) -> Optional[DataFrame]:
+    """The store's live ``bucket=N`` directories, listed through the
+    filesystem and bound under ``basePath``. (A ``bucket=*`` glob path
+    makes Spark probe the literal glob for a streaming-sink metadata
+    directory, logging a FileNotFoundException on every read.) None when
+    a listed bucket was set aside before the bind: a live swap window,
+    which the caller's next pass rebinds."""
+    paths = [
+        posixpath.join(out_path, n)
+        for n in fs.list_dirs(out_path)
+        if n.startswith("bucket=")
+    ]
+    try:
+        return spark.read.option("basePath", out_path).parquet(*paths)
+    except AnalysisException:
+        if all(fs.exists(p) for p in paths):
+            raise
+        return None
+
+
 def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
     # a store with an in-progress compaction swap has its bucket
-    # liveness restored BEFORE the glob below binds, so a crash mid-swap
+    # liveness restored BEFORE the listing below binds, so a crash mid-swap
     # can never serve the store minus a bucket's postings (one exists()
     # probe on the common path). Read-time recovery is PROMOTE-ONLY
     # (writer=False): it never deletes, so a reader racing a live
@@ -533,11 +556,11 @@ def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
     # promoting; staging leftovers are cleaned by the next writer.
     #
     # A LIVE writer can also set a bucket aside BETWEEN our recovery
-    # walk and the glob binding below (the swap is two renames, and the
+    # walk and the binding below (the swap is two renames, and the
     # reader cannot freeze the store). Every bucket a writer may touch
     # has a staging entry, so after binding we check the file index
     # actually caught every staged bucket (driver-side inputFiles — no
-    # job) and rebind if the glob hit the swap window. Bounded retry:
+    # job) and rebind if the listing hit the swap window. Bounded retry:
     # each pass either finds the store complete or re-promotes liveness.
     #
     # Read contract under a LIVE compaction (single-writer store, no
@@ -551,7 +574,6 @@ def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
     # Iceberg/Delta manifests provide) — out of scope for a
     # directory-swap store.
     fs = _HadoopFS(spark, out_path)
-    glob = posixpath.join(out_path, "bucket=*")
     staging_root = posixpath.join(out_path, "_compacting")
     last_missing: set = set()
     for _ in range(5):
@@ -559,7 +581,9 @@ def read_blocks(spark: SparkSession, out_path: str) -> DataFrame:
         if fs.exists(staging_root):
             _recover_compaction_fs(fs, out_path, writer=False)
             staged = _staged_bucket_ids(fs, out_path)
-        df = spark.read.option("basePath", out_path).parquet(glob)
+        df = _bind_buckets(spark, fs, out_path)
+        if df is None:
+            continue
         if not staged:
             return check_block_layout(df, out_path)
         seen = set()

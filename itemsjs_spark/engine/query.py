@@ -87,6 +87,15 @@ class _ExpansionTooLarge(Exception):
     """Internal: a prefix expansion exceeded MAX_DRIVER_EXPANSION."""
 
 
+def _prefix_pred(toks: Iterable[str]) -> Column:
+    """``term`` completes any of ``toks``: a StartsWith disjunction,
+    which Catalyst pushes into the term-sorted parquet scan or the
+    block store's term filter."""
+    return functools.reduce(
+        lambda a, b: a | b, (F.col("term").startswith(t) for t in toks)
+    )
+
+
 def _js_truthy(v: Any) -> bool:
     return not (
         v is None
@@ -364,7 +373,25 @@ def ir_to_column(pred: tuple, has_query_col: bool) -> Column:
 
 
 class SearchEngine:
-    """itemsjs API over a built Index (see indexer.build_index)."""
+    """itemsjs API over a built Index (see indexer.build_index).
+
+    Every scorer and operator goes through five query primitives, each
+    defined once:
+
+    * ``_expand_prefixes``: query tokens → expanded terms and idf
+      (driver dictionary, else one capped ``_prefix_pred`` scan);
+      ``_vector_of`` turns them into the lunr query vector.
+    * ``_bind_terms``: where a scorer binds its per-term numbers
+      (weights, masks, idf) to postings — map literals up to
+      MAX_MAP_LITERAL_TERMS terms, a broadcast join above.
+    * ``_dot_fold``: the one per-doc sum of per-term contributions, in
+      sorted-term order; a scorer supplies only its contribution column
+      (default ``w·tf``), never its own sum.
+    * ``_result_set``: hits, compiled predicates, flagged docs and the
+      filtered docs a search with a given input pages.
+    * ``_relevance_topk``: the first k by round(score, 6) desc, then
+      str(_docid) asc.
+    """
 
     # facet dimensions up to this many total values are cached driver-side,
     # which turns existence probes + zero-count bucket fill into lookups;
@@ -1021,29 +1048,41 @@ class SearchEngine:
                 est += int(dfs[i])
         return est
 
-    def _expand_tokens_driver(
+    def _expand_prefixes(
         self, distinct_tokens: Sequence[str]
-    ) -> Optional[Tuple[Dict[str, float], Dict[str, List[str]]]]:
-        """Prefix-expand via the cached dictionary: (idf_map, token →
-        sorted expanded terms). None when the dictionary is too big to
-        pin (caller falls back to the scan job); _ExpansionTooLarge
-        beyond MAX_DRIVER_EXPANSION distinct terms — identical overflow
-        semantics to the scan path."""
+    ) -> Tuple[Dict[str, float], Dict[str, List[str]]]:
+        """THE prefix expansion of sorted distinct query tokens:
+        (idf_map, token → its expanded terms in term order). The terms
+        come from the cached driver dictionary, or, when it is too big
+        to pin, from one ``_prefix_pred`` scan of the terms table capped
+        at MAX_DRIVER_EXPANSION + 1 rows. Either way
+        _ExpansionTooLarge past MAX_DRIVER_EXPANSION distinct terms."""
+        cap = self.MAX_DRIVER_EXPANSION
         d = self._term_dictionary()
         if d is None:
-            return None
+            rows = (
+                self.index.terms.filter(_prefix_pred(distinct_tokens))
+                .select("term", "idf")
+                .limit(cap + 1)
+                .collect()
+            )
+            if len(rows) > cap:
+                raise _ExpansionTooLarge(" ".join(distinct_tokens))
+            rows.sort(key=lambda r: r["term"])
+            terms = [r["term"] for r in rows]
+            idfs = [r["idf"] for r in rows]
+        else:
+            terms, idfs, _ = d
         import bisect
 
-        terms, idfs, _ = d
         idf_map: Dict[str, float] = {}
         by_token: Dict[str, List[str]] = {}
-        cap = self.MAX_DRIVER_EXPANSION
         for tok in distinct_tokens:
             lo = bisect.bisect_left(terms, tok)
             # exact prefix range: walk to the first non-prefix term (a
             # sentinel like tok+MAXCHAR can exclude terms that CONTAIN
-            # the max codepoint right after the prefix — scan-path
-            # startswith semantics must hold bit-for-bit). The walk is
+            # the max codepoint right after the prefix — the scan's
+            # StartsWith semantics must hold bit-for-bit). The walk is
             # bounded by the expansion cap, which also bounds its cost.
             hi = lo
             n = len(terms)
@@ -1089,31 +1128,20 @@ class SearchEngine:
             tokens = self._synonym_rewrite(tokens, synonyms)
             if not tokens:
                 return None
+        expansion = self._expand_prefixes(sorted(set(tokens)))
+        return self._vector_of(tokens, expansion, require_all_tokens)
 
-        distinct_tokens = sorted(set(tokens))
-        exp = self._expand_tokens_driver(distinct_tokens)
-        if exp is not None:
-            idf_map, by_token = exp
-        else:
-            cond = None
-            for tok in distinct_tokens:
-                c = F.col("term").startswith(tok)
-                cond = c if cond is None else (cond | c)
-            expanded = (
-                idx.terms.filter(cond)
-                .select("term", "idf")
-                .limit(self.MAX_DRIVER_EXPANSION + 1)
-                .collect()
-            )
-            if len(expanded) > self.MAX_DRIVER_EXPANSION:
-                raise _ExpansionTooLarge(query)
-            term_rows = sorted(expanded, key=lambda r: r["term"])
-            by_token = {
-                tok: [r["term"] for r in term_rows if r["term"].startswith(tok)]
-                for tok in distinct_tokens
-            }
-            idf_map = {r["term"]: r["idf"] for r in term_rows}
-
+    def _vector_of(
+        self,
+        tokens: Sequence[str],
+        expansion: Tuple[Dict[str, float], Dict[str, List[str]]],
+        require_all_tokens: bool = True,
+    ) -> Optional[Tuple[scoring.QueryVector, Dict[str, float]]]:
+        """The lunr query vector of analyzed ``tokens`` over an
+        ``_expand_prefixes`` result that covers them, with its idf map;
+        None when the query can't match (see ``_query_vector``)."""
+        idf_map, by_token = expansion
+        idx = self.index
         qv = scoring.build_query_vector(
             tokens,
             n_fields=len(idx.text_fields),
@@ -1299,50 +1327,20 @@ class SearchEngine:
         # ONE expansion for every query: the cached driver dictionary
         # when it fits (zero Spark jobs), else one dictionary-scan job
         try:
-            exp = self._expand_tokens_driver(sorted(all_tokens))
+            expansion = self._expand_prefixes(sorted(all_tokens))
         except _ExpansionTooLarge:
             raise EngineError(
                 "combined prefix expansion exceeds driver capacity; run the "
                 "oversized queries individually through fulltext_hits"
             )
-        if exp is not None:
-            idf_map, by_token = exp
-        else:
-            cond = None
-            for tok in sorted(all_tokens):
-                c = F.col("term").startswith(tok)
-                cond = c if cond is None else (cond | c)
-            rows_raw = (
-                idx.terms.filter(cond)
-                .select("term", "idf")
-                .limit(self.MAX_DRIVER_EXPANSION + 1)
-                .collect()
-            )
-            if len(rows_raw) > self.MAX_DRIVER_EXPANSION:
-                raise EngineError(
-                    "combined prefix expansion exceeds driver capacity; run "
-                    "the oversized queries individually through fulltext_hits"
-                )
-            term_rows = sorted(rows_raw, key=lambda r: r["term"])
-            idf_map = {r["term"]: r["idf"] for r in term_rows}
-            by_token = {
-                tok: [r["term"] for r in term_rows if r["term"].startswith(tok)]
-                for tok in all_tokens
-            }
+        idf_map = expansion[0]
 
         rows = []
         for qid, tokens in analyzed:
-            if not tokens:
+            vec = self._vector_of(tokens, expansion)
+            if vec is None:
                 continue
-            qv = scoring.build_query_vector(
-                tokens,
-                n_fields=len(idx.text_fields),
-                boosts_sum=sum(b for _, b in idx.text_fields),
-                expand=lambda tok: by_token[tok],
-                idf_of=lambda t: idf_map[t],
-            )
-            if not qv.has_some_token or not qv.all_tokens_expandable:
-                continue
+            qv = vec[0]
             fmask = (1 << qv.n_tokens) - 1
             for term, w in qv.weights.items():
                 rows.append(
@@ -1450,6 +1448,13 @@ class SearchEngine:
             )
         if analyzed is None:
             return empty
+        return self._vector_hits(analyzed, min_should_match)
+
+    def _vector_hits(
+        self, analyzed, min_should_match: Optional[int] = None
+    ) -> DataFrame:
+        """``fulltext_hits`` of an analyzed query (``_query_vector``):
+        the scoring plan, the admission predicate and the live filter."""
         qv, idf_map = analyzed
         per_doc, score = self._scored_per_doc(qv, idf_map)
         full_mask = (1 << qv.n_tokens) - 1
@@ -1487,28 +1492,39 @@ class SearchEngine:
             subset = self.index.postings_subset(
                 list(qv.weights), est=self._postings_estimate(qv.weights)
             )
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            # small expansions (the common case): weights/masks as MAP
-            # literals — a pure projection, no BroadcastExchange job per
-            # query (measured ~0.3 s/query at 1M postings in local mode)
-            wmap = F.create_map(
-                *[x for t, w, _m in rows for x in (F.lit(t), F.lit(w))]
-            )
-            mmap = F.create_map(
-                *[x for t, _w, m in rows for x in (F.lit(t), F.lit(m))]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")]).withColumn(
-                "mask", mmap[F.col("term")]
-            )
-        else:
-            expanded_df = local_relation(
-                self.spark, rows, "term string, w double, mask long"
-            )
-            joined = subset.join(F.broadcast(expanded_df), "term")
+        joined = self._bind_terms(
+            subset, rows, "term string, w double, mask long"
+        )
         per_doc, dot = self._dot_fold(
             joined, [DOCID], len(rows), F.bit_or("mask").alias("mask")
         )
         return per_doc, dot / F.lit(qv.magnitude)
+
+    def _bind_terms(
+        self, postings: DataFrame, rows: Sequence[tuple], schema: str
+    ) -> DataFrame:
+        """THE binding of a query's per-term numbers: ``postings`` (any
+        relation with a ``term`` column) with the columns of ``schema``
+        after its leading ``term string`` attached, ``rows`` holding one
+        ``(term, value, ...)`` tuple per query term. Up to
+        MAX_MAP_LITERAL_TERMS terms each column is a MAP literal keyed
+        by term — a pure projection, no BroadcastExchange job per query
+        (measured ~0.3 s/query at 1M postings in local mode); larger
+        term sets broadcast-join a local relation instead of a giant
+        literal. A postings row whose term is not in ``rows`` gets NULLs
+        from the literal and is dropped by the join, so callers pass
+        postings already restricted to the query's terms."""
+        if len(rows) > self.MAX_MAP_LITERAL_TERMS:
+            return postings.join(
+                F.broadcast(local_relation(self.spark, rows, schema)), "term"
+            )
+        names = [f.split()[0] for f in schema.split(",")][1:]
+        for i, name in enumerate(names, 1):
+            by_term = F.create_map(
+                *[x for r in rows for x in (F.lit(r[0]), F.lit(r[i]))]
+            )
+            postings = postings.withColumn(name, by_term[F.col("term")])
+        return postings
 
     def _dot_fold(
         self,
@@ -1516,18 +1532,21 @@ class SearchEngine:
         keys: Sequence[str],
         n_terms: int,
         *aggs: Column,
+        contrib: Optional[Column] = None,
     ) -> Tuple[DataFrame, Column]:
-        """Group weighted postings (``term``, ``w``, ``tf``, ...) by
-        ``keys`` next to ``aggs``; returns the grouped rows and the
-        column Σ w·tf over each group's ``n_terms`` (at most) query
-        terms. Scores must equal the oracle bit for bit, so the sum runs
-        in sorted-term order: the wide fold sorts each group's (term,
+        """THE score fold: group weighted postings (``term`` and the
+        columns ``contrib`` reads; default ``w``·``tf``) by ``keys``
+        next to ``aggs``; returns the grouped rows and the column
+        Σ contrib over each group's ``n_terms`` (at most) query terms.
+        Scores must equal the oracle bit for bit, so the sum runs in
+        sorted-term order: the wide fold sorts each group's (term,
         contribution) structs before adding them up. Up to
         ``WIDE_SUM_MAX_TERMS`` terms a plain SUM is the same value with
         no per-doc struct array in the shuffle: a group then has at most
-        two addends, each >= +0.0 (lunr idf >= 1), and IEEE-754 addition
-        of two values is commutative."""
-        c = F.col("w") * F.col("tf")
+        two addends, each >= +0.0, and IEEE-754 addition of two values
+        is commutative. Contributions must be >= +0.0 (lunr and BM25
+        weights are positive)."""
+        c = F.col("w") * F.col("tf") if contrib is None else contrib
         if n_terms <= self.WIDE_SUM_MAX_TERMS:
             per = joined.groupBy(*keys).agg(*aggs, F.sum(c).alias("_dot"))
             return per, F.col("_dot")
@@ -1560,10 +1579,7 @@ class SearchEngine:
         query path), then one distinct. Never driver-bounded — the
         excluded set may be huge and stays distributed."""
         idx = self.index
-        cond = None
-        for t in toks:
-            c = F.col("term").startswith(t)
-            cond = c if cond is None else (cond | c)
+        cond = _prefix_pred(toks)
         if idx.postings is not None:
             return idx.postings.filter(cond).select(DOCID).distinct()
         if idx.posting_blocks is None:
@@ -2207,12 +2223,8 @@ class SearchEngine:
         )
         empty = local_relation(self.spark, [], out_schema)
 
-        hits = self.fulltext_hits(query)
-        s = F.round(F.col(SCORE), 6)
-        top = (
-            hits.orderBy(s.desc(), F.col(DOCID).cast("string").asc())
-            .limit(int(k))
-            .select(F.col(DOCID), s.alias("hit_score"))
+        top = self._relevance_topk(self.fulltext_hits(query), k).select(
+            F.col(DOCID), F.round(F.col(SCORE), 6).alias("hit_score")
         )
         trows = top.collect()
         if not trows:
@@ -2437,12 +2449,7 @@ class SearchEngine:
         scalars per parent), and a TakeOrdered top-k — never a full
         sort, nothing corpus-sized past the aggregate."""
         input = child_input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        )
+        hits, _, _, flt = self._result_set(input)
         kids = flt.select(F.col(DOCID), F.col(parent_field).alias("parent"))
         if hits is not None:
             s = hits.select(
@@ -2492,12 +2499,7 @@ class SearchEngine:
         and no side is collected. Hot parents skew only the join, which
         AQE splits."""
         pin = parent_input or {}
-        phits, _ = self._candidates(pin)
-        pcompiled = self.compile(pin, has_query=phits is not None)
-        pbase = self._docs_with_query_flag(phits)
-        pflt = pbase.filter(
-            ir_to_column(pcompiled.final_pred, phits is not None)
-        )
+        phits, _, _, pflt = self._result_set(pin)
         pk = pflt.select(F.col(DOCID), F.col(parent_field).alias("parent"))
         if phits is not None:
             s = phits.select(
@@ -2508,12 +2510,7 @@ class SearchEngine:
             pk = pk.withColumn("__s6", F.lit(None).cast("double"))
         parents = pk.groupBy("parent").agg(F.max("__s6").alias("__ps"))
         cin = child_input or {}
-        chits, _ = self._candidates(cin)
-        ccompiled = self.compile(cin, has_query=chits is not None)
-        cbase = self._docs_with_query_flag(chits)
-        cflt = cbase.filter(
-            ir_to_column(ccompiled.final_pred, chits is not None)
-        )
+        cflt = self._result_set(cin)[3]
         kids = cflt.select(F.col(DOCID), F.col(parent_field).alias("parent"))
         return (
             kids.join(parents, "parent")
@@ -2577,13 +2574,9 @@ class SearchEngine:
         independently and left-joins onto the window-sized (driver-k)
         set — the expensive second query never rescans beyond its own
         hit set, and the join's left side is window_size rows."""
-        s6 = F.round(F.col(SCORE), 6)
-        base = (
-            self.fulltext_hits(query)
-            .orderBy(s6.desc(), F.col(DOCID).cast("string").asc())
-            .limit(int(window_size))
-            .select(F.col(DOCID), F.col(SCORE).alias("__base"))
-        )
+        base = self._relevance_topk(
+            self.fulltext_hits(query), window_size
+        ).select(F.col(DOCID), F.col(SCORE).alias("__base"))
         sec = self.fulltext_hits(rescore_query).select(
             F.col(DOCID), F.col(SCORE).alias("__sec")
         )
@@ -2639,8 +2632,8 @@ class SearchEngine:
         postings scan by docid); idf for that bounded vocabulary is one
         `isin`-pruned terms lookup; scoring is a postings_subset over
         ≤max_terms terms (term-pruned scan / block decode) with weights
-        as map literals, one groupBy(_docid) sum — the same shape as
-        fulltext_hits, disjunctive instead of conjunctive."""
+        bound by ``_bind_terms``, one ``_dot_fold`` aggregate — the same
+        shape as fulltext_hits, disjunctive instead of conjunctive."""
         idx = self.index
         empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         src_rows, idf = self._term_vectors([id])
@@ -2653,30 +2646,24 @@ class SearchEngine:
         )[: max(int(max_terms), 1)]
         if not ranked:
             return empty
-        wmap = F.create_map(
-            *[x for qw, t in ranked for x in (F.lit(t), F.lit(float(qw)))]
+        joined = self._bind_terms(
+            self._live(
+                idx.postings_subset([t for _qw, t in ranked]).filter(
+                    F.col(DOCID) != id
+                )
+            ),
+            [(t, float(qw), idf[t]) for qw, t in ranked],
+            "term string, qw double, idf double",
         )
-        imap = F.create_map(
-            *[x for _qw, t in ranked for x in (F.lit(t), F.lit(idf[t]))]
+        per_doc, dot = self._dot_fold(
+            joined,
+            [DOCID],
+            len(ranked),
+            contrib=F.col("qw") * F.col("idf") * F.col("tf"),
         )
-        sub = self._live(
-            idx.postings_subset([t for _qw, t in ranked]).filter(
-                F.col(DOCID) != id
-            )
-        )
-        scored = (
-            sub.withColumn(
-                "__c", wmap[F.col("term")] * imap[F.col("term")] * F.col("tf")
-            )
-            .groupBy(DOCID)
-            .agg(F.sum("__c").alias(SCORE))
-        )
-        s = F.round(F.col(SCORE), 6)
-        return (
-            scored.orderBy(s.desc(), F.col(DOCID).cast("string").asc())
-            .limit(int(k))
-            .select(F.col(DOCID), s.alias(SCORE))
-        )
+        return self._relevance_topk(
+            per_doc.select(DOCID, dot.alias(SCORE)), k
+        ).select(F.col(DOCID), F.round(F.col(SCORE), 6).alias(SCORE))
 
     def prf_hits(
         self,
@@ -2712,13 +2699,7 @@ class SearchEngine:
         idx = self.index
         self._ensure_fulltext_materialized()
         base = self.fulltext_hits(query)
-        s6 = F.round(F.col(SCORE), 6)
-        top = (
-            base.orderBy(s6.desc(), F.col(DOCID).cast("string").asc())
-            .limit(int(fb_docs))
-            .select(DOCID)
-            .collect()
-        )
+        top = self._relevance_topk(base, fb_docs).select(DOCID).collect()
         if not top:
             return base.limit(0)
         fb_ids = [r[DOCID] for r in top]
@@ -2736,27 +2717,23 @@ class SearchEngine:
             ),
             key=lambda x: (-x[0], x[1]),
         )[: max(int(fb_terms), 1)]
-        out_s = F.round(F.col(SCORE), 6)
         if not ranked:
             combined = base.select(
                 DOCID, (F.lit(float(alpha)) * F.col(SCORE)).alias(SCORE)
             )
         else:
-            wmap = F.create_map(
-                *[x for w, t in ranked for x in (F.lit(t), F.lit(float(w)))]
+            joined = self._bind_terms(
+                idx.postings_subset([t for _w, t in ranked]),
+                [(t, float(w), idf_map[t]) for w, t in ranked],
+                "term string, w double, idf double",
             )
-            imap = F.create_map(
-                *[x for _w, t in ranked for x in (F.lit(t), F.lit(idf_map[t]))]
+            per_doc, dot = self._dot_fold(
+                joined,
+                [DOCID],
+                len(ranked),
+                contrib=F.col("w") * F.col("idf") * F.col("tf"),
             )
-            boost = (
-                idx.postings_subset([t for _w, t in ranked])
-                .withColumn(
-                    "__c",
-                    wmap[F.col("term")] * imap[F.col("term")] * F.col("tf"),
-                )
-                .groupBy(DOCID)
-                .agg(F.sum("__c").alias("__fb"))
-            )
+            boost = per_doc.select(DOCID, dot.alias("__fb"))
             combined = base.join(boost, DOCID, "left").select(
                 F.col(DOCID),
                 (
@@ -2765,13 +2742,7 @@ class SearchEngine:
                     * F.coalesce(F.col("__fb"), F.lit(0.0))
                 ).alias(SCORE),
             )
-        return (
-            combined.orderBy(
-                out_s.desc(), F.col(DOCID).cast("string").asc()
-            )
-            .limit(int(k))
-            .select(DOCID, SCORE)
-        )
+        return self._relevance_topk(combined, k).select(DOCID, SCORE)
 
     def percolate(self, saved: Sequence[Dict[str, Any]]) -> DataFrame:
         """Reverse search (extension; Elasticsearch-percolator-style):
@@ -2904,12 +2875,7 @@ class SearchEngine:
         input = input or {}
         if field not in self.index.docs.columns:
             raise EngineError(f"unknown histogram field {field!r}")
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        )
+        flt = self._result_set(input)[3]
         col = F.col(field)
         dt = dict(self.index.docs.dtypes).get(field, "")
         is_time = dt.startswith("timestamp") or dt == "date"
@@ -2985,12 +2951,7 @@ class SearchEngine:
             raise EngineError(f"unknown range field {field!r}")
         if not ranges:
             raise EngineError("facet_ranges needs at least one range")
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        )
+        flt = self._result_set(input)[3]
         col = F.col(field)
         dt = dict(self.index.docs.dtypes).get(field, "")
         if dt.startswith("timestamp") or dt == "date":
@@ -3130,15 +3091,11 @@ class SearchEngine:
         empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
         if not rows:
             return empty
-        subset = self.index.postings_subset([t for t, _ in rows])
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            wmap = F.create_map(
-                *[x for t, w in rows for x in (F.lit(t), F.lit(w))]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")])
-        else:
-            wdf = local_relation(self.spark, rows, "term string, w double")
-            joined = subset.join(F.broadcast(wdf), "term")
+        joined = self._bind_terms(
+            self.index.postings_subset([t for t, _ in rows]),
+            rows,
+            "term string, w double",
+        )
         per_doc, dot = self._dot_fold(joined, [DOCID], len(rows))
         return self._live(per_doc.withColumn(SCORE, dot).select(DOCID, SCORE))
 
@@ -3164,27 +3121,17 @@ class SearchEngine:
         if analyzed is None:
             return empty
         qv, idf_map = analyzed
-        top = (
-            self.fulltext_hits(query)
-            .orderBy(
-                F.round(F.col(SCORE), 6).desc(),
-                F.col(DOCID).cast("string").asc(),
-            )
-            .limit(int(k_docs))
-            .select(DOCID)
+        top = self._relevance_topk(self._vector_hits(analyzed), k_docs).select(
+            DOCID
         )
         rows = sorted(
             (t, float(qv.weights[t] * idf_map[t])) for t in qv.weights
         )
-        subset = self.index.postings_subset([t for t, _ in rows])
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            wmap = F.create_map(
-                *[x for t, w in rows for x in (F.lit(t), F.lit(w))]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")])
-        else:
-            wdf = local_relation(self.spark, rows, "term string, w double")
-            joined = subset.join(F.broadcast(wdf), "term")
+        joined = self._bind_terms(
+            self.index.postings_subset([t for t, _ in rows]),
+            rows,
+            "term string, w double",
+        )
         contribution = F.round(
             F.col("w") * F.col("tf") / F.lit(qv.magnitude), 6
         )
@@ -3250,7 +3197,7 @@ class SearchEngine:
         BM25 engines match whole terms), OR-mode admission with
         ``min_should_match`` (Lucene's default 1). Duplicate query
         tokens collapse (qtf = 1). Plan: term-IN pruned scan of the
-        raw-count postings, map-literal weights, ONE aggregation with
+        raw-count postings, ``_bind_terms`` weights, ONE aggregation with
         the deterministic fixed-term-order fold. Returns
         (_docid, __score) like the lunr scorer."""
         empty = local_relation(self.spark, [], f"{DOCID} long, {SCORE} double")
@@ -3274,24 +3221,10 @@ class SearchEngine:
             )
             for t in present
         }
-        wmap = F.create_map(
-            *[x for t in present for x in (F.lit(t), F.lit(idf[t]))]
-        )
-        mmap = F.create_map(
-            *[
-                x
-                for i, t in enumerate(present)
-                for x in (F.lit(t), F.lit(1 << i))
-            ]
-        )
-        tidmap = F.create_map(
-            *[x for i, t in enumerate(present) for x in (F.lit(t), F.lit(i))]
-        )
-        subset = counts.filter(F.col("term").isin(present))
-        joined = (
-            subset.withColumn("w", wmap[F.col("term")])
-            .withColumn("mask", mmap[F.col("term")])
-            .withColumn("tid", tidmap[F.col("term")])
+        joined = self._bind_terms(
+            counts.filter(F.col("term").isin(present)),
+            [(t, idf[t], 1 << i) for i, t in enumerate(present)],
+            "term string, w double, mask long",
         )
         c = F.col("c").cast("double")
         denom = c + F.lit(k1) * (
@@ -3299,29 +3232,21 @@ class SearchEngine:
             + F.lit(b) * F.col("dl").cast("double") / F.lit(avgdl)
         )
         contrib = F.col("w") * (c * F.lit(k1 + 1.0)) / denom
-        per_doc = joined.groupBy(DOCID).agg(
+        per_doc, score = self._dot_fold(
+            joined,
+            [DOCID],
+            len(present),
             F.bit_or("mask").alias("mask"),
-            *[
-                F.sum(F.when(F.col("tid") == i, contrib)).alias(f"_c{i}")
-                for i in range(len(present))
-            ],
+            contrib=contrib,
         )
-        score = F.lit(0.0)
-        for i in range(len(present)):
-            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        out = (
+        return self._relevance_topk(
             self._live(
                 per_doc.filter(F.bit_count("mask") >= m)
                 .withColumn(SCORE, score)
                 .select(DOCID, SCORE)
-            )
-            .orderBy(
-                F.round(F.col(SCORE), 6).desc(),
-                F.col(DOCID).cast("string").asc(),
-            )
-            .limit(int(k))
+            ),
+            k,
         )
-        return out
 
     def composite_buckets(
         self,
@@ -3349,12 +3274,7 @@ class SearchEngine:
         if after is not None and len(after) != len(fields):
             raise EngineError("after key arity must match fields")
         input = input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        )
+        flt = self._result_set(input)[3]
         # chained explodes: a map-only generator pipeline (one bucket per
         # per-doc value combination), then ONE groupBy shuffle
         cross = flt.select(*[F.col(FK_PREFIX + f) for f in fields])
@@ -3396,12 +3316,7 @@ class SearchEngine:
                     "Panic. The key does not exist in facets lists."
                 )
         input = input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        )
+        flt = self._result_set(input)[3]
         cross = flt.select(*[F.col(FK_PREFIX + f) for f in fields])
         for f in fields:
             cross = cross.select("*", F.explode(FK_PREFIX + f).alias(f)).drop(
@@ -3730,12 +3645,7 @@ class SearchEngine:
                 "indexes would decode the full store; reopen with postings)"
             )
         input = dict(input or {})
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        fg_docs = base.filter(
-            ir_to_column(compiled.final_pred, hits is not None)
-        ).select(DOCID)
+        fg_docs = self._result_set(input)[3].select(DOCID)
         fg_total = fg_docs.count()
         if fg_total == 0:
             return local_relation(
@@ -3859,10 +3769,10 @@ class SearchEngine:
         a scale path would store per-block max-decay alongside max-score
         — deliberately out of scope, the standard scoring route is
         already hit-set-bounded."""
-        hits = self.fulltext_hits(query)
-        epoch = F.col(ts_field).cast("timestamp").cast("long")
         if ts_field not in self.index.docs.columns:
             raise EngineError(f"unknown timestamp field {ts_field!r}")
+        hits = self.fulltext_hits(query)
+        epoch = F.col(ts_field).cast("timestamp").cast("long")
         slim = self.index.docs.select(DOCID, epoch.alias("__ep"))
         if ref_epoch is None:
             # anchor the decay at the corpus max ("freshness from now"):
@@ -3920,16 +3830,11 @@ class SearchEngine:
         org = self.fulltext_hits(query).join(
             pinned_df.select(DOCID), DOCID, "left_anti"
         )
-        s6 = F.round(F.col(SCORE), 6)
-        orgk = (
-            org.orderBy(s6.desc(), F.col(DOCID).cast("string").asc())
-            .limit(int(k))
-            .select(
-                F.col(DOCID),
-                F.lit(None).cast("long").alias("__r"),
-                F.lit(False).alias("pinned"),
-                s6.alias("__s"),
-            )
+        orgk = self._relevance_topk(org, k).select(
+            F.col(DOCID),
+            F.lit(None).cast("long").alias("__r"),
+            F.lit(False).alias("pinned"),
+            F.round(F.col(SCORE), 6).alias("__s"),
         )
         u = pin.unionByName(orgk)
         w = Window.orderBy(
@@ -4202,7 +4107,7 @@ class SearchEngine:
             # tracked on the engine: released by release_expansion_caches
             # after the consumer materializes (search()'s finally)
             self._expansion_caches.append(termvec)
-            termvec.count()
+            n_terms = termvec.count()  # one row per expanded term
         finally:
             exp.unpersist()  # the expansion table is folded into termvec
 
@@ -4212,19 +4117,14 @@ class SearchEngine:
             from .blocks import postings_from_blocks
 
             postings = postings_from_blocks(idx.posting_blocks)
-        joined = postings.join(termvec, "term")
-        full_mask = (1 << len(tokens)) - 1
-        per_doc = joined.groupBy(DOCID).agg(
+        per_doc, dot = self._dot_fold(
+            postings.join(termvec, "term"),
+            [DOCID],
+            n_terms,
             F.bit_or("mask").alias("mask"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c"))
-                )
-            ).alias("contribs"),
         )
-        score = F.aggregate(
-            "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-        ) / F.lit(magnitude)
+        score = dot / F.lit(magnitude)
+        full_mask = (1 << len(tokens)) - 1
         keep = self._admission_pred(full_mask, len(tokens), min_should_match)
         return (
             per_doc.filter(keep).withColumn(SCORE, score).select(DOCID, SCORE)
@@ -4454,6 +4354,39 @@ class SearchEngine:
             ]
         return keep
 
+    def _result_set(
+        self,
+        input: Dict[str, Any],
+        persisted: Optional[List[DataFrame]] = None,
+        hits: Optional[DataFrame] = None,
+    ) -> Tuple[Optional[DataFrame], Any, DataFrame, DataFrame]:
+        """THE result set a search with ``input`` pages: ``(hits,
+        compiled, base, flt)`` — the query's hits (``_candidates``; None
+        without a query or filter), the compiled facet predicates, the
+        live docs flagged with the hits (``_docs_with_query_flag``) and
+        those docs under the final predicate. ``persisted`` (a request's
+        cache list, ``_request_caches``) materializes hits that
+        ``_candidates`` flags as costly to recompute ONCE, and the docs
+        joined with them, for the facets and page jobs that both read
+        them; otherwise each job scores the query inside its own plan.
+        ``hits`` replaces ``_candidates`` with a membership set the
+        caller derived itself (filtered WAND's mask-only set)."""
+        cache = False
+        if hits is None:
+            hits, cache = self._candidates(input)
+            cache = cache and persisted is not None
+        if cache:
+            hits = hits.persist()
+            persisted.append(hits)
+            hits.count()
+        compiled = self.compile(input, has_query=hits is not None)
+        base = self._docs_with_query_flag(hits)
+        if cache:
+            base = base.persist()
+            persisted.append(base)
+        flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
+        return hits, compiled, base, flt
+
     def _docs_with_query_flag(self, hits: Optional[DataFrame]) -> DataFrame:
         """The live docs with ``__in_query`` and the hits' rank column
         (``__score`` or ``__qrank``, NULL off the hit set) — the one join
@@ -4479,11 +4412,7 @@ class SearchEngine:
         ``_id`` included. This is the scale-path API; ``search`` collects a
         page of it."""
         input = input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
-        ordered = self._order(flt, input)
+        ordered = self._order(self._result_set(input)[3], input)
         drop = [
             c
             for c in ordered.columns
@@ -4496,6 +4425,16 @@ class SearchEngine:
                 "_id", *[c for c in out.columns if c in want and c != "_id"]
             )
         return out
+
+    @staticmethod
+    def _relevance_topk(hits: DataFrame, k: int) -> DataFrame:
+        """THE relevance top-k of scored ``hits``: the first ``k`` by
+        score rounded to 6 decimals descending, then ``str(_docid)``
+        ascending — the oracle's order, so rounding ties break the same
+        way in both engines (TakeOrderedAndProject in Spark)."""
+        return hits.orderBy(
+            F.round(F.col(SCORE), 6).desc(), F.col(DOCID).cast("string").asc()
+        ).limit(int(k))
 
     def _order(self, df: DataFrame, input: Dict[str, Any]) -> DataFrame:
         """``df`` in the request's order: the ``sort`` spec, else the
@@ -4710,21 +4649,7 @@ class SearchEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         t_search = time.time()
-        hits, cache = self._candidates(input)
-        if cache:
-            # hits that are costly to recompute (see _candidates) are
-            # materialized ONCE; the facets and page jobs below both
-            # read the cache. Otherwise each of the two scores the
-            # query inside its own plan.
-            hits = hits.persist()
-            persisted.append(hits)
-            hits.count()
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
-        if cache:
-            base = base.persist()
-            persisted.append(base)
-        flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
+        hits, compiled, base, flt = self._result_set(input, persisted)
         search_time = time.time() - t_search
 
         t_par = time.time()
@@ -4905,17 +4830,13 @@ class SearchEngine:
         mrows = [
             (t, sum(1 << i for i in qv.term_tokens[t])) for t in qv.weights
         ]
-        subset = self.index.postings_subset(
-            list(qv.weights), est=self._postings_estimate(qv.weights)
+        masked = self._bind_terms(
+            self.index.postings_subset(
+                list(qv.weights), est=self._postings_estimate(qv.weights)
+            ),
+            mrows,
+            "term string, mask long",
         )
-        if len(mrows) <= self.MAX_MAP_LITERAL_TERMS:
-            mmap = F.create_map(
-                *[x for t, m_ in mrows for x in (F.lit(t), F.lit(m_))]
-            )
-            masked = subset.withColumn("mask", mmap[F.col("term")])
-        else:  # big prefix expansion: broadcast join, not a giant literal
-            mdf = local_relation(self.spark, mrows, "term string, mask long")
-            masked = subset.join(F.broadcast(mdf), "term")
         return (
             masked.groupBy(DOCID)
             .agg(F.bit_or("mask").alias("mask"))
@@ -5052,8 +4973,9 @@ class SearchEngine:
                 membership = local_relation(self.spark, [], f"{DOCID} long")
             else:
                 membership = self._query_membership(analyzed)
-            compiled = self.compile(input, has_query=True)
-            base = self._docs_with_query_flag(membership)
+            _, compiled, base, flt = self._result_set(
+                input, hits=membership
+            )
             search_time = time.time() - t_s
 
             # one corpus pass for all facet buckets + the result total,
@@ -5073,9 +4995,7 @@ class SearchEngine:
                 items, page_s = f_page.result()
             facets_time = time.time() - t_par
             if total is None:  # defensive: this path requires facet fields
-                total = base.filter(
-                    ir_to_column(compiled.final_pred, True)
-                ).count()
+                total = flt.count()
             return _response(
                 per_page, page, total, t0, search_time, facets_time,
                 page_s, items, None, aggregations,
@@ -5300,9 +5220,7 @@ class SearchEngine:
         """(key, doc_count) for one facet under the request's crossing —
         zero-count keys preserved. Scale path for a single facet."""
         input = input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
+        hits, compiled, base, _ = self._result_set(input)
         return self._field_counts(base, field, compiled, hits is not None)
 
     def facet_rare_terms(
@@ -5342,9 +5260,7 @@ class SearchEngine:
         buckets are nonzero — callers needing exact reference parity on
         zero-padding use get_buckets)."""
         input = input or {}
-        hits, _ = self._candidates(input)
-        compiled = self.compile(input, has_query=hits is not None)
-        base = self._docs_with_query_flag(hits)
+        hits, compiled, base, _ = self._result_set(input)
         pred = ir_to_column(compiled.bucket_pred[field], hits is not None)
         counted = (
             base.filter(pred)
@@ -5502,10 +5418,8 @@ class SearchEngine:
         if compiled is None and self._facetblock_search_applies(input or {}):
             return self._facetblock_buckets(input or {}, with_total)
         if compiled is None:
-            hits, _ = self._candidates(input)
+            hits, compiled, base, _ = self._result_set(input)
             has_query = hits is not None
-            compiled = self.compile(input, has_query=has_query)
-            base = self._docs_with_query_flag(hits)
 
         if not self.index.facet_fields:
             return {}, None

@@ -17,6 +17,15 @@ Each kind is measured twice: with ``fresh`` parameters (the requests
 perfbench times) and ``repeated`` (the same requests again), which
 separates per-plan costs (compiles, analysis) from per-request ones.
 
+``--by-caller`` also prints, per kind and mode, each request's Spark
+jobs counted by Python call site: the name of each job's final stage,
+which Spark sets to the frame that called into PySpark (``collect at
+itemsjs_spark/engine/query.py:5523``), read through the status tracker
+once the listener bus has drained. Paths are relative to the checkout,
+so two checkouts can be diffed with line numbers stripped. In this mode
+every action carries a call site (``thread_call_sites``), which can add
+a few Py4J round trips to a request.
+
 Workloads, as perfbench's:
 
 * ``search``: an in-memory engine over the 10k-turn corpus, two warm
@@ -28,7 +37,7 @@ Workloads, as perfbench's:
 
 Run from the root of a checkout (one Spark JVM, ~1-2 minutes):
 
-    python3 scripts/request_costs.py --workload deploy --seed 7
+    python3 scripts/request_costs.py --workload deploy --seed 7 [--by-caller]
 """
 
 from __future__ import annotations
@@ -40,6 +49,9 @@ import shutil
 import statistics
 import sys
 import tempfile
+import threading
+import traceback
+from collections import Counter
 from typing import Any, Callable, Dict, List
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -71,6 +83,53 @@ class Py4jCounter:
                 return _orig(conn, command, *a, **kw)
 
             cls.send_command = send_command
+
+
+def thread_call_sites() -> None:
+    """Give every engine job a Python call site. PySpark counts its
+    call-site scopes in one process-wide depth, so a job the engine
+    submits from its second pool thread while the first is inside a
+    scope gets none; count per driver thread instead. ``count`` and
+    ``toPandas`` open no scope at all; open one naming the innermost
+    frame outside PySpark. Jobs without a scope are named after a JVM
+    frame (``count at NativeMethodAccessorImpl.java:0``)."""
+    import pyspark
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.traceback_utils import SCCallSiteSync
+
+    depth = threading.local()
+
+    def enter(self):
+        n = getattr(depth, "n", 0)
+        if n == 0:
+            self._context._jsc.setCallSite(self._call_site)
+        depth.n = n + 1
+
+    def exit_(self, *exc):
+        depth.n -= 1
+        if depth.n == 0:
+            self._context._jsc.setCallSite(None)
+
+    SCCallSiteSync.__enter__ = enter
+    SCCallSiteSync.__exit__ = exit_
+
+    pyspark_dir = os.path.dirname(pyspark.__file__)
+
+    def scoped(action):
+        def run(self, *a, **kw):
+            f = next(
+                f for f in reversed(traceback.extract_stack()[:-1])
+                if not f.filename.startswith(pyspark_dir)
+            )
+            site = SCCallSiteSync(self._sc)
+            site._call_site = f"{action.__name__} at {f.filename}:{f.lineno}"
+            with site:
+                return action(self, *a, **kw)
+
+        return run
+
+    for name in ("count", "toPandas"):
+        setattr(DataFrame, name, scoped(getattr(DataFrame, name)))
 
 
 def start_spark(cores: int, tmp: str):
@@ -119,14 +178,18 @@ def call(eng, kind: str, req: Dict[str, Any]) -> Any:
 
 
 class Meter:
-    """Reads the four counters around one request."""
+    """Reads the four counters around one request; with ``by_caller``
+    also the call site of each of its jobs (read after the counters)."""
 
-    def __init__(self, spark) -> None:
+    def __init__(self, spark, by_caller: bool = False) -> None:
         from pyspark import SparkContext
 
         self.clock = CpuClock(SparkContext._gateway.proc.pid)
         self.py4j = Py4jCounter()
+        self.by_caller = by_caller
         jvm = spark.sparkContext._jvm
+        self._tracker = spark.sparkContext.statusTracker()
+        self._bus = spark.sparkContext._jsc.sc().listenerBus()
         self._dag = spark.sparkContext._jsc.sc().dagScheduler()
         self._compile = (
             jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
@@ -139,12 +202,32 @@ class Meter:
         fn()
         cpu = self.clock.since(mark)
         p1 = self.py4j.n
-        return {
+        j1 = self._dag.nextJobId()
+        out: Dict[str, Any] = {
             "cpu_ms": cpu * 1000,
-            "jobs": self._dag.nextJobId() - j0,
+            "jobs": j1 - j0,
             "compiles": self._compile.getCount() - c0,
             "py4j": p1 - p0,
         }
+        if self.by_caller:
+            out["sites"] = self.call_sites(j0, j1)
+        return out
+
+    def call_sites(self, j0: int, j1: int) -> List[str]:
+        """The call site of each job in ``[j0, j1)``: its final stage's
+        name, with this checkout's path prefix dropped."""
+        self._bus.waitUntilEmpty()
+        sites = []
+        for j in range(j0, j1):
+            job = self._tracker.getJobInfo(j)
+            stage = (
+                self._tracker.getStageInfo(max(job.stageIds))
+                if job is not None and job.stageIds
+                else None
+            )
+            name = stage.name if stage is not None else "?"
+            sites.append(name.replace(ROOT + os.sep, ""))
+        return sites
 
 
 def serve(meter: Meter, eng, requests, out: Dict[str, Dict[str, List[Dict]]], mode: str):
@@ -184,6 +267,22 @@ def deploy_workload(spark, df, cols, seed: int, work: str):
     return disk, reqs
 
 
+def print_callers(out: Dict[str, Dict[str, List[Dict]]]) -> None:
+    """Per kind and mode: each distinct set of job call sites (the
+    facets and page jobs of one request interleave, so the order is
+    left out) and the number of requests that ran it."""
+    for kind in sorted(out):
+        for mode, samples in out[kind].items():
+            sets = Counter(
+                tuple(sorted(Counter(s["sites"]).items())) for s in samples
+            )
+            for sites, n in sets.most_common():
+                jobs = sum(k for _, k in sites)
+                print(f"{kind} {mode} x{n}: {jobs} jobs")
+                for site, k in sites:
+                    print(f"    {k} x {site}")
+
+
 def report(out: Dict[str, Dict[str, List[Dict]]]) -> Dict[str, Any]:
     table = {}
     for kind, modes in out.items():
@@ -201,15 +300,21 @@ def main(argv: List[str]) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=("deploy", "search"))
     p.add_argument("--seed", type=int, required=True)
+    p.add_argument(
+        "--by-caller", action="store_true",
+        help="also print each request's Spark jobs by Python call site",
+    )
     args = p.parse_args(argv)
 
+    if args.by_caller:
+        thread_call_sites()
     work = tempfile.mkdtemp(prefix="request_costs-")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
     os.environ["PYARROW_IGNORE_TIMEZONE"] = "1"
     spark = start_spark(len(os.sched_getaffinity(0)), tmp)
     try:
-        meter = Meter(spark)
+        meter = Meter(spark, by_caller=args.by_caller)
         cols = inputs.corpus(args.seed, CORPUS_TURNS)
         df = corpus_frame(spark, cols)
         if args.workload == "search":
@@ -223,6 +328,8 @@ def main(argv: List[str]) -> int:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
 
+    if args.by_caller:
+        print_callers(out)
     table = report(out)
     print(f"{'kind':<14} {'mode':<9} {'n':>3} " + " ".join(f"{c:>9}" for c in COUNTERS))
     for kind in sorted(table):

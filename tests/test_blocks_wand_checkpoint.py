@@ -8,12 +8,14 @@ import copy
 import math
 import os
 from collections import Counter
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
 from itemsjs_spark.data.transcripts import transcripts_df
-from itemsjs_spark.engine import Index, itemsjs_spark
+from itemsjs_spark.engine import Index, SearchEngine, itemsjs_spark
+from itemsjs_spark.engine import query as query_mod
 from itemsjs_spark.engine.blocks import (
     build_posting_blocks,
     postings_from_blocks,
@@ -356,3 +358,91 @@ def test_term_dictionary_cap_falls_back_to_scan_job(spark, tx_engine):
     assert b == sorted(
         map(tuple, eng.fulltext_hits_batch(["spark", "pa"]).collect())
     )
+
+
+@pytest.fixture(scope="module")
+def store_path(tx_engine, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("store") / "store")
+    copy.copy(tx_engine.index).write_blocks(path, n_buckets=2, range_size=512)
+    return path
+
+
+def test_reopened_store_binds_listed_buckets(
+    spark, tx_engine, store_path, monkeypatch
+):
+    """Index.read binds each bucket directory by name, never a glob path
+    (Spark probes a literal ``bucket=*`` path for a metadata directory
+    and logs a FileNotFoundException on every read), and reads back the
+    written postings."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    bound = []
+    orig = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        bound.extend(paths)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    idx = Index.read(spark, store_path)
+    monkeypatch.undo()
+    assert any("/posting_blocks/bucket=" in p for p in bound)
+    assert not any("*" in p for p in bound), bound
+    assert _postings(postings_from_blocks(idx.posting_blocks)) == _postings(
+        tx_engine.index.postings
+    )
+
+
+BINDING_CALLERS = {
+    "fulltext_hits": lambda e: e.fulltext_hits("pa"),
+    "wildcard_hits": lambda e: e.wildcard_hits("pa*"),
+    "explain_hits": lambda e: e.explain_hits("spark shuffle", k_docs=5),
+    "more_like_this": lambda e: e.more_like_this(3, k=5),
+    "prf_hits": lambda e: e.prf_hits("spark", k=10),
+    "bm25_topk": lambda e: e.bm25_topk("spark shuffle partition", k=10),
+}
+
+
+@pytest.mark.parametrize(
+    "caller", sorted(BINDING_CALLERS) + ["_query_membership"]
+)
+def test_broadcast_term_binding_equals_literals(
+    spark, tx_engine, store_path, caller
+):
+    """Above MAX_MAP_LITERAL_TERMS a query's per-term numbers bind by a
+    broadcast join instead of map literals; every scorer answers the
+    same either way. ``_query_membership`` is reached through search()
+    on a reopened store (the filtered-WAND route's total and facets)."""
+    if caller == "_query_membership":
+        index = Index.read(spark, store_path)
+        req = {"query": "pa", "filters": {"role": ["assistant"]}}
+
+        def run(e):
+            resp = e.search(dict(req))
+            return resp["data"], resp["pagination"]
+    else:
+        index = tx_engine.index
+
+        def run(e):
+            return sorted(map(tuple, BINDING_CALLERS[caller](e).collect()))
+
+    engines = [SearchEngine(index), SearchEngine(index)]
+    for e in engines:
+        e.ROUTER_FORCE = "blocks"
+    literal, wide = engines
+    wide.MAX_MAP_LITERAL_TERMS = 1
+    if caller == "_query_membership":
+        assert wide.explain_search(dict(req))["route"] == "wand_filtered"
+    want = run(literal)
+    with mock.patch.object(
+        query_mod, "local_relation", wraps=query_mod.local_relation
+    ) as spy:
+        got = run(wide)
+    assert want and got == want
+    bound = [
+        c.args[2] for c in spy.call_args_list
+        if c.args[2].startswith("term string, ") and len(c.args[1]) > 1
+    ]
+    assert bound, "no broadcast term binding ran"
+    for e in engines:
+        e.release_bm25()

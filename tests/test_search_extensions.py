@@ -9,7 +9,7 @@ import math
 
 import pytest
 
-from itemsjs_spark.engine import itemsjs_spark
+from itemsjs_spark.engine import SearchEngine, itemsjs_spark
 from itemsjs_spark.engine.query import EngineError
 
 
@@ -393,3 +393,38 @@ def test_pinned_promotes_in_list_order_and_fills_organically(eng):
     # k caps the union: pinned-only when k <= pinned count
     top1 = eng.pinned_hits([5, 3], "zebra", k=1).collect()
     assert [(r["pos"], r["_id"]) for r in top1] == [(1, 5)]
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_opt_in_caches_release(spark, eng):
+    """Each opt-in cache (trigrams, positions, BM25) unpersists through
+    its release method: the session's persistent RDDs return to their
+    count before the enable calls."""
+    e = SearchEngine(eng.index)
+    e._ensure_fulltext_materialized()
+    before = _persistent_rdds(spark)
+    e.enable_trigrams().count()
+    e.enable_positions().count()
+    e.enable_bm25()
+    assert _persistent_rdds(spark) > before
+    e.release_trigrams()
+    e.release_positions()
+    e.release_bm25()
+    assert _persistent_rdds(spark) == before
+
+
+def test_recency_boost_rejects_unknown_field_before_scoring(spark, eng):
+    """An unknown ``ts_field`` raises before the query is scored: on the
+    distributed-expansion path scoring would pin a term-vector cache
+    that only the next search() releases."""
+    e = SearchEngine(eng.index)
+    e.MAX_DRIVER_EXPANSION = 0  # every expansion takes the distributed path
+    e._ensure_fulltext_materialized()
+    before = _persistent_rdds(spark)
+    with pytest.raises(EngineError, match="unknown timestamp field"):
+        e.recency_boosted_topk("zebra", "no_such_field", tau_s=60.0)
+    assert e._expansion_caches == []
+    assert _persistent_rdds(spark) == before
